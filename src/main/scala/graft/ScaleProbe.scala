@@ -16,16 +16,15 @@ object ScaleProbe {
       val t0 = System.nanoTime(); f
       println(f"PROBE $name%-12s ${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
-    import graft.bank.BankRules._
+    import graft.bank.BankRules.all
+    import graft.rules.RuleSet
     import graft.validate.Validator
     t("scan") { feed.select(count(lit(1))).head() }
     t("scan_allcol") { feed.select(count(when(length(col("PayeeID")) > 0, 1))).head() }
-    for ((n, rs) <- Seq(
-      ("recordOp", recordOperation), ("orgCode", organizationCode),
-      ("payee", payee), ("organization", organization), ("payment", payment),
-      ("banking", banking), ("dates", dates), ("address", address),
-      ("contact", contact))) {
-      t(n) { Validator.validate(feed, rs)
+    // one probe per field: rule names are "<Field>.<check>"
+    val byField = all.rules.groupBy(_.name.takeWhile(_ != '.'))
+    for ((f, rules) <- byField.toSeq.sortBy(_._1)) {
+      t(f) { Validator.validate(feed, RuleSet(rules))
         .select(count(when(!col(Validator.ValidCol), 1))).head() }
     }
     t("ALL") { Validator.validate(feed, all)

@@ -30,8 +30,9 @@ object SparkEntry {
     * proving the JSON rule path (graft.rules.RuleSetConfig) end-to-end
     * against DuckDB, the reference's rules-live-in-data shape
     * (DM_bankfile_validate_pipeline.py:3113). Pred→Column compiles onto
-    * the same Checks combinators, so the plan is identical to the
-    * hand-written set this replaced (RuleConfigSpec pins parity). */
+    * the same Checks combinators a Scala-built rule uses, so loading
+    * from JSON leaves the plan unchanged (RuleConfigSpec pins the bank
+    * set's JSON round trip with Dataset.sameSemantics). */
   private val customerRulesJson = """
     {"rules": [
       {"name": "acctbal_nonneg", "message": "c_acctbal must be non-negative",

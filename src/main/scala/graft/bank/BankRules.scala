@@ -1,8 +1,7 @@
 package graft.bank
 
-import graft.rules.{Checks, Rule, RuleSet}
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import graft.rules.{Pred, RuleConfig, RuleSet, RuleSetConfig}
+import graft.rules.Pred._
 
 /** The full reference validation rule set, distilled from the ~80 test
   * scenarios in /root/reference/tests/ plus the observed error-CSV
@@ -10,22 +9,21 @@ import org.apache.spark.sql.functions._
   * all banking/address fields must be completely blank", "For
   * PaymentMode CHK ... must be blank", test_output/invalid_values_*).
   *
-  * Context shorthands: OC = OrganizationCode, PM = PaymentMode.
-  * Every rule is a pure Column expression — the whole set evaluates in
-  * one codegen'd projection.
+  * The rules are declared once, as data: [[config]] is the form a
+  * tester edits or ships as JSON without a recompile, mirroring how the
+  * reference drives its scenarios from dicts
+  * (DM_bankfile_validate_pipeline.py:3113). [[all]] compiles it through
+  * [[graft.rules.Pred.toColumn]] onto the [[graft.rules.Checks]]
+  * combinators — every rule is a pure Column expression, so the whole
+  * set evaluates in one codegen'd projection.
   */
 object BankRules {
-  import Checks._
 
-  private def c(name: String): Column = col(name)
-
-  private val oc = c("OrganizationCode")
-  private val pm = c("PaymentMode")
-  private val isMDP = oc.isInCollection(Seq("M", "D", "P"))
-  private val isDP = oc.isInCollection(Seq("D", "P"))
-  private val isR = oc === "R"
-  private val isEft = pm === "EFT"
-  private val isChk = pm === "CHK"
+  private val isMDP: Pred = InLit("OrganizationCode", Seq("M", "D", "P"))
+  private val isDP: Pred = InLit("OrganizationCode", Seq("D", "P"))
+  private val isR: Pred = Cmp("eq", "OrganizationCode", "R")
+  private val isEft: Pred = Cmp("eq", "PaymentMode", "EFT")
+  private val isChk: Pred = Cmp("eq", "PaymentMode", "CHK")
 
   /** Name/address-safe charset: letters, digits, space and -&.,'() —
     * reference rejects !@#$%^* in name fields
@@ -34,189 +32,204 @@ object BankRules {
     * regex escaping. */
   private val nameExtra = "-&.,'() "
 
-  val recordOperation: RuleSet = RuleSet(Seq(
-    Rule("RecordOperation.required", required(c("RecordOperation")),
-      "RecordOperation is required"),
-    Rule("RecordOperation.enum", inSet(c("RecordOperation"), Seq("A", "D")),
-      "RecordOperation must be A or D")))
+  private val recordOperation = Seq(
+    RuleConfig("RecordOperation.required", "RecordOperation is required",
+      check("required", "RecordOperation")),
+    RuleConfig("RecordOperation.enum", "RecordOperation must be A or D",
+      inSet("RecordOperation", "A", "D")))
 
-  val organizationCode: RuleSet = RuleSet(Seq(
-    Rule("OrganizationCode.required", required(oc), "OrganizationCode is required"),
-    Rule("OrganizationCode.enum", inSet(oc, Seq("M", "D", "P", "R")),
-      "OrganizationCode must be one of M, D, P, R")))
+  private val organizationCode = Seq(
+    RuleConfig("OrganizationCode.required", "OrganizationCode is required",
+      check("required", "OrganizationCode")),
+    RuleConfig("OrganizationCode.enum", "OrganizationCode must be one of M, D, P, R",
+      inSet("OrganizationCode", "M", "D", "P", "R")))
 
-  val payee: RuleSet = RuleSet(Seq(
-    Rule("PayeeID.required", required(c("PayeeID")), "PayeeID is required"),
-    Rule("PayeeID.length", maxLength(c("PayeeID"), 9) || minLength(c("PayeeID"), 2),
-      "PayeeID must be 2-9 characters"),
-    Rule("PayeeID.charset", alnum(c("PayeeID")),
-      "PayeeID must be alphanumeric"),
-    Rule("PayeeID.matchesOrgIdentifier",
-      (present(c("PayeeID")) && present(c("OrganizationIdentifier")) &&
-        c("PayeeID") =!= c("OrganizationIdentifier")).onlyWhenCol(isMDP),
-      "PayeeID must equal OrganizationIdentifier for M, D and P records"),
-    Rule("OrganizationIdentifier.required", required(c("OrganizationIdentifier")),
-      "OrganizationIdentifier is required"),
-    Rule("OrganizationIdentifier.length",
-      maxLength(c("OrganizationIdentifier"), 12) || minLength(c("OrganizationIdentifier"), 3),
-      "OrganizationIdentifier must be 3-12 characters"),
-    Rule("OrganizationIdentifier.charset",
-      alnum(c("OrganizationIdentifier")),
-      "OrganizationIdentifier must be alphanumeric"),
-    Rule("OrganizationIdentifier.rFormat",
-      matches(c("OrganizationIdentifier"), "^[1-9][0-9]{9}$").onlyWhenCol(isR),
-      "OrganizationIdentifier must be a 10-digit identifier for R records")))
+  private val payee = Seq(
+    RuleConfig("PayeeID.required", "PayeeID is required",
+      check("required", "PayeeID")),
+    RuleConfig("PayeeID.length", "PayeeID must be 2-9 characters",
+      or(withN("maxLength", "PayeeID", 9), withN("minLength", "PayeeID", 2))),
+    RuleConfig("PayeeID.charset", "PayeeID must be alphanumeric",
+      check("alnum", "PayeeID")),
+    RuleConfig("PayeeID.matchesOrgIdentifier",
+      "PayeeID must equal OrganizationIdentifier for M, D and P records",
+      and(check("present", "PayeeID"), check("present", "OrganizationIdentifier"),
+        ColCmp("ne", "PayeeID", "OrganizationIdentifier")),
+      when = Some(isMDP)),
+    RuleConfig("OrganizationIdentifier.required", "OrganizationIdentifier is required",
+      check("required", "OrganizationIdentifier")),
+    RuleConfig("OrganizationIdentifier.length",
+      "OrganizationIdentifier must be 3-12 characters",
+      or(withN("maxLength", "OrganizationIdentifier", 12),
+        withN("minLength", "OrganizationIdentifier", 3))),
+    RuleConfig("OrganizationIdentifier.charset",
+      "OrganizationIdentifier must be alphanumeric",
+      check("alnum", "OrganizationIdentifier")),
+    RuleConfig("OrganizationIdentifier.rFormat",
+      "OrganizationIdentifier must be a 10-digit identifier for R records",
+      withS("matches", "OrganizationIdentifier", "^[1-9][0-9]{9}$"),
+      when = Some(isR)))
 
-  val organization: RuleSet = RuleSet(Seq(
-    Rule("OrganizationName.required", required(c("OrganizationName")),
-      "OrganizationName is required"),
-    Rule("OrganizationName.maxLength", maxLength(c("OrganizationName"), 40),
-      "OrganizationName exceeds 40 characters"),
-    Rule("OrganizationName.charset", charsetOnly(c("OrganizationName"), nameExtra),
-      "OrganizationName contains invalid characters"),
-    Rule("OrganizationLegalName.maxLength", maxLength(c("OrganizationLegalName"), 40),
-      "OrganizationLegalName exceeds 40 characters"),
-    Rule("OrganizationLegalName.charset", charsetOnly(c("OrganizationLegalName"), nameExtra),
-      "OrganizationLegalName contains invalid characters"),
-    Rule("OrganizationTIN.required", required(c("OrganizationTIN")).onlyWhenCol(isMDP),
-      "OrganizationTIN is required for M, D and P records"),
-    Rule("OrganizationTIN.format", digits(c("OrganizationTIN"), 9),
-      "OrganizationTIN must be 9 digits"),
-    Rule("OrganizationTIN.blankForR", mustBeBlank(c("OrganizationTIN")).onlyWhenCol(isR),
-      "OrganizationTIN must be blank for R records"),
-    Rule("OrganizationTINType.required", required(c("OrganizationTINType")).onlyWhenCol(isMDP),
-      "OrganizationTINType is required for M, D and P records"),
-    Rule("OrganizationTINType.enum", inSet(c("OrganizationTINType"), Seq("EIN", "SSN")),
-      "Invalid OrganizationTinType for non-R records"),
-    Rule("OrganizationTINType.blankForR", mustBeBlank(c("OrganizationTINType")).onlyWhenCol(isR),
-      "OrganizationTINType must be blank for R records"),
-    Rule("ProfitNonprofit.required", required(c("ProfitNonprofit")).onlyWhenCol(isDP),
-      "ProfitNonprofit is required for D and P records"),
-    Rule("ProfitNonprofit.enum", inSet(c("ProfitNonprofit"), Seq("P", "NP")),
-      "ProfitNonprofit must be P or NP"),
-    Rule("OrganizationNPI.format", matches(c("OrganizationNPI"), "^[1-9][0-9]{9}$"),
-      "OrganizationNPI must be 10 digits")))
+  private val organization = Seq(
+    RuleConfig("OrganizationName.required", "OrganizationName is required",
+      check("required", "OrganizationName")),
+    RuleConfig("OrganizationName.maxLength", "OrganizationName exceeds 40 characters",
+      withN("maxLength", "OrganizationName", 40)),
+    RuleConfig("OrganizationName.charset", "OrganizationName contains invalid characters",
+      withS("charsetOnly", "OrganizationName", nameExtra)),
+    RuleConfig("OrganizationLegalName.maxLength",
+      "OrganizationLegalName exceeds 40 characters",
+      withN("maxLength", "OrganizationLegalName", 40)),
+    RuleConfig("OrganizationLegalName.charset",
+      "OrganizationLegalName contains invalid characters",
+      withS("charsetOnly", "OrganizationLegalName", nameExtra)),
+    RuleConfig("OrganizationTIN.required",
+      "OrganizationTIN is required for M, D and P records",
+      check("required", "OrganizationTIN"), when = Some(isMDP)),
+    RuleConfig("OrganizationTIN.format", "OrganizationTIN must be 9 digits",
+      withN("digits", "OrganizationTIN", 9)),
+    RuleConfig("OrganizationTIN.blankForR", "OrganizationTIN must be blank for R records",
+      check("mustBeBlank", "OrganizationTIN"), when = Some(isR)),
+    RuleConfig("OrganizationTINType.required",
+      "OrganizationTINType is required for M, D and P records",
+      check("required", "OrganizationTINType"), when = Some(isMDP)),
+    RuleConfig("OrganizationTINType.enum", "Invalid OrganizationTinType for non-R records",
+      inSet("OrganizationTINType", "EIN", "SSN")),
+    RuleConfig("OrganizationTINType.blankForR",
+      "OrganizationTINType must be blank for R records",
+      check("mustBeBlank", "OrganizationTINType"), when = Some(isR)),
+    RuleConfig("ProfitNonprofit.required",
+      "ProfitNonprofit is required for D and P records",
+      check("required", "ProfitNonprofit"), when = Some(isDP)),
+    RuleConfig("ProfitNonprofit.enum", "ProfitNonprofit must be P or NP",
+      inSet("ProfitNonprofit", "P", "NP")),
+    RuleConfig("OrganizationNPI.format", "OrganizationNPI must be 10 digits",
+      withS("matches", "OrganizationNPI", "^[1-9][0-9]{9}$")))
 
-  val payment: RuleSet = RuleSet(Seq(
-    Rule("PaymentMode.required", required(pm).onlyWhenCol(isMDP),
-      "PaymentMode is required for M, D and P records"),
-    Rule("PaymentMode.enum", inSet(pm, Seq("EFT", "CHK")),
-      "PaymentMode must be EFT or CHK"),
-    Rule("PaymentMode.mRequiresEft", (present(pm) && pm =!= "EFT").onlyWhenCol(oc === "M"),
-      "PaymentMode must be EFT for M records")))
+  private val payment = Seq(
+    RuleConfig("PaymentMode.required", "PaymentMode is required for M, D and P records",
+      check("required", "PaymentMode"), when = Some(isMDP)),
+    RuleConfig("PaymentMode.enum", "PaymentMode must be EFT or CHK",
+      inSet("PaymentMode", "EFT", "CHK")),
+    RuleConfig("PaymentMode.mRequiresEft", "PaymentMode must be EFT for M records",
+      and(check("present", "PaymentMode"), Cmp("ne", "PaymentMode", "EFT")),
+      when = Some(Cmp("eq", "OrganizationCode", "M"))))
 
   /** EFT context: banking fields required + formatted
     * (tests/test_eft_banking_fields_blank_required_combined.py,
     * test_eft_banking_format_rules_combined.py; error CSV
     * "RoutingTransitNumber must be 9 digits, RoutingTransitNumber should
     * be numeric for M, D and P records with payment type as EFT"). */
-  val banking: RuleSet = RuleSet(Seq(
-    Rule("RoutingTransitNumber.requiredEft",
-      required(c("RoutingTransitNumber")).onlyWhenCol(isMDP && isEft),
-      "RoutingTransitNumber is required for M, D and P records with payment type as EFT"),
-    Rule("RoutingTransitNumber.format", digits(c("RoutingTransitNumber"), 9),
-      "RoutingTransitNumber must be 9 digits"),
-    Rule("AccountNumber.requiredEft",
-      required(c("AccountNumber")).onlyWhenCol(isMDP && isEft),
-      "AccountNumber is required for M, D and P records with payment type as EFT"),
+  private val banking = Seq(
+    RuleConfig("RoutingTransitNumber.requiredEft",
+      "RoutingTransitNumber is required for M, D and P records with payment type as EFT",
+      check("required", "RoutingTransitNumber"), when = Some(and(isMDP, isEft))),
+    RuleConfig("RoutingTransitNumber.format", "RoutingTransitNumber must be 9 digits",
+      withN("digits", "RoutingTransitNumber", 9)),
+    RuleConfig("AccountNumber.requiredEft",
+      "AccountNumber is required for M, D and P records with payment type as EFT",
+      check("required", "AccountNumber"), when = Some(and(isMDP, isEft))),
     // 1-17 digits without regex: any non-digit trips numeric, length
     // is bounded separately (present ⇒ length >= 1 already)
-    Rule("AccountNumber.format", numeric(c("AccountNumber")) || maxLength(c("AccountNumber"), 17),
-      "AccountNumber must be 1-17 digits"),
-    Rule("AccountType.requiredEft",
-      required(c("AccountType")).onlyWhenCol(isMDP && isEft),
-      "AccountType is required for M, D and P records with payment type as EFT"),
-    Rule("AccountType.enum", inSet(c("AccountType"), Seq("CHKING", "SAVING")),
-      "AccountType must be CHKING or SAVING"),
-    Rule("RoutingTransitNumber.blankChk",
-      mustBeBlank(c("RoutingTransitNumber")).onlyWhenCol(isChk),
-      "RoutingTransitNumber must be blank, For PaymentMode CHK"),
-    Rule("AccountNumber.blankChk", mustBeBlank(c("AccountNumber")).onlyWhenCol(isChk),
-      "AccountNumber must be blank, For PaymentMode CHK"),
-    Rule("AccountType.blankChk", mustBeBlank(c("AccountType")).onlyWhenCol(isChk),
-      "AccountType must be blank, For PaymentMode CHK"),
-    Rule("R.bankingAddressBlank",
-      Seq("RoutingTransitNumber", "AccountNumber", "AccountType", "AddressCode",
+    RuleConfig("AccountNumber.format", "AccountNumber must be 1-17 digits",
+      or(check("numeric", "AccountNumber"), withN("maxLength", "AccountNumber", 17))),
+    RuleConfig("AccountType.requiredEft",
+      "AccountType is required for M, D and P records with payment type as EFT",
+      check("required", "AccountType"), when = Some(and(isMDP, isEft))),
+    RuleConfig("AccountType.enum", "AccountType must be CHKING or SAVING",
+      inSet("AccountType", "CHKING", "SAVING")),
+    RuleConfig("RoutingTransitNumber.blankChk",
+      "RoutingTransitNumber must be blank, For PaymentMode CHK",
+      check("mustBeBlank", "RoutingTransitNumber"), when = Some(isChk)),
+    RuleConfig("AccountNumber.blankChk",
+      "AccountNumber must be blank, For PaymentMode CHK",
+      check("mustBeBlank", "AccountNumber"), when = Some(isChk)),
+    RuleConfig("AccountType.blankChk",
+      "AccountType must be blank, For PaymentMode CHK",
+      check("mustBeBlank", "AccountType"), when = Some(isChk)),
+    RuleConfig("R.bankingAddressBlank",
+      "For OrgCode R, all banking/address fields must be completely blank",
+      Or(Seq("RoutingTransitNumber", "AccountNumber", "AccountType", "AddressCode",
         "AddressLine1", "AddressLine2", "CityName", "State", "PostalCode",
-        "ContactFirstName", "ContactLastName")
-        .map(f => present(c(f))).reduce(_ || _).onlyWhenCol(isR),
-      "For OrgCode R, all banking/address fields must be completely blank")))
+        "ContactFirstName", "ContactLastName").map(f => check("present", f))),
+      when = Some(isR)))
 
-  val dates: RuleSet = RuleSet(Seq(
-    Rule("EffectiveStartDate.required", required(c("EffectiveStartDate")),
-      "EffectiveStartDate is required"),
-    Rule("EffectiveStartDate.format", dateYmd(c("EffectiveStartDate")),
-      "EffectiveStartDate must be a valid YYYY-MM-DD date"),
-    Rule("EffectiveEndDate.format", dateYmd(c("EffectiveEndDate")),
-      "EffectiveEndDate must be a valid YYYY-MM-DD date"),
-    Rule("EffectiveEndDate.afterStart",
-      present(c("EffectiveEndDate")) && present(c("EffectiveStartDate")) &&
-        try_to_date(c("EffectiveEndDate"), "yyyy-MM-dd")
-          .lt(try_to_date(c("EffectiveStartDate"), "yyyy-MM-dd")),
-      "EffectiveEndDate must not be before EffectiveStartDate"),
-    Rule("EffectiveEndDate.requiredDeactivated",
-      required(c("EffectiveEndDate")).onlyWhenCol(c("RecordOperation") === "D"),
-      "EffectiveEndDate should be provided for deactivated records")))
+  private val dates = Seq(
+    RuleConfig("EffectiveStartDate.required", "EffectiveStartDate is required",
+      check("required", "EffectiveStartDate")),
+    RuleConfig("EffectiveStartDate.format",
+      "EffectiveStartDate must be a valid YYYY-MM-DD date",
+      check("dateYmd", "EffectiveStartDate")),
+    RuleConfig("EffectiveEndDate.format",
+      "EffectiveEndDate must be a valid YYYY-MM-DD date",
+      check("dateYmd", "EffectiveEndDate")),
+    RuleConfig("EffectiveEndDate.afterStart",
+      "EffectiveEndDate must not be before EffectiveStartDate",
+      and(check("present", "EffectiveEndDate"), check("present", "EffectiveStartDate"),
+        DateCmp("lt", "EffectiveEndDate", "EffectiveStartDate"))),
+    RuleConfig("EffectiveEndDate.requiredDeactivated",
+      "EffectiveEndDate should be provided for deactivated records",
+      check("required", "EffectiveEndDate"),
+      when = Some(Cmp("eq", "RecordOperation", "D"))))
 
-  val address: RuleSet = RuleSet(Seq(
-    Rule("AddressCode.enum", inSet(c("AddressCode"), Seq("PMT", "COR")),
-      "AddressCode must be PMT or COR"),
-    Rule("AddressCode.requiredDP", required(c("AddressCode")).onlyWhenCol(isDP),
-      "AddressCode is required for D and P records"),
-    Rule("AddressLine1.maxLength", maxLength(c("AddressLine1"), 40),
-      "AddressLine1 exceeds 40 characters"),
-    Rule("AddressLine1.charset", charsetOnly(c("AddressLine1"), nameExtra + "/#"),
-      "AddressLine1 contains invalid characters"),
-    Rule("AddressLine2.maxLength", maxLength(c("AddressLine2"), 40),
-      "AddressLine2 exceeds 40 characters"),
-    Rule("AddressLine2.charset", charsetOnly(c("AddressLine2"), nameExtra + "/#"),
-      "AddressLine2 contains invalid characters"),
-    Rule("CityName.maxLength", maxLength(c("CityName"), 25),
-      "CityName exceeds 25 characters"),
-    Rule("CityName.charset", nameFormat(c("CityName")),
-      "CityName contains invalid characters"),
-    Rule("State.format", upperCode(c("State"), 2),
-      "State must be a 2-letter uppercase code"),
-    Rule("PostalCode.format", matches(c("PostalCode"), "^[0-9]{5}(-[0-9]{4})?$"),
-      "PostalCode must be 5 digits or ZIP+4")))
+  private val address = Seq(
+    RuleConfig("AddressCode.enum", "AddressCode must be PMT or COR",
+      inSet("AddressCode", "PMT", "COR")),
+    RuleConfig("AddressCode.requiredDP", "AddressCode is required for D and P records",
+      check("required", "AddressCode"), when = Some(isDP)),
+    RuleConfig("AddressLine1.maxLength", "AddressLine1 exceeds 40 characters",
+      withN("maxLength", "AddressLine1", 40)),
+    RuleConfig("AddressLine1.charset", "AddressLine1 contains invalid characters",
+      withS("charsetOnly", "AddressLine1", nameExtra + "/#")),
+    RuleConfig("AddressLine2.maxLength", "AddressLine2 exceeds 40 characters",
+      withN("maxLength", "AddressLine2", 40)),
+    RuleConfig("AddressLine2.charset", "AddressLine2 contains invalid characters",
+      withS("charsetOnly", "AddressLine2", nameExtra + "/#")),
+    RuleConfig("CityName.maxLength", "CityName exceeds 25 characters",
+      withN("maxLength", "CityName", 25)),
+    RuleConfig("CityName.charset", "CityName contains invalid characters",
+      check("nameFormat", "CityName")),
+    RuleConfig("State.format", "State must be a 2-letter uppercase code",
+      withN("upperCode", "State", 2)),
+    RuleConfig("PostalCode.format", "PostalCode must be 5 digits or ZIP+4",
+      withS("matches", "PostalCode", "^[0-9]{5}(-[0-9]{4})?$")))
 
-  val contact: RuleSet = RuleSet(Seq(
-    Rule("ContactCode.enum", inSet(c("ContactCode"), Seq("AO", "DO")),
-      "ContactCode must be AO or DO"),
-    Rule("ContactFirstName.maxLength", maxLength(c("ContactFirstName"), 20),
-      "ContactFirstName exceeds 20 characters"),
-    Rule("ContactFirstName.charset", nameFormat(c("ContactFirstName")),
-      "ContactFirstName contains invalid characters"),
-    Rule("ContactLastName.maxLength", maxLength(c("ContactLastName"), 25),
-      "ContactLastName exceeds 25 characters"),
-    Rule("ContactLastName.charset", nameFormat(c("ContactLastName")),
-      "ContactLastName contains invalid characters"),
-    Rule("ContactTitle.maxLength", maxLength(c("ContactTitle"), 23),
-      "ContactTitle exceeds 23 characters"),
-    Rule("ContactPhone.maxLength", maxLength(c("ContactPhone"), 25),
-      "ContactPhone exceeds 25 characters"),
-    Rule("ContactPhone.format", phone(c("ContactPhone")),
-      "ContactPhone has invalid format"),
-    Rule("ContactFax.maxLength", maxLength(c("ContactFax"), 25),
-      "ContactFax exceeds 25 characters"),
-    Rule("ContactFax.format", phone(c("ContactFax")),
-      "ContactFax has invalid format"),
-    Rule("ContactOtherPhone.maxLength", maxLength(c("ContactOtherPhone"), 25),
-      "ContactOtherPhone exceeds 25 characters"),
-    Rule("ContactOtherPhone.format", phone(c("ContactOtherPhone")),
-      "ContactOtherPhone has invalid format"),
-    Rule("ContactEmail.maxLength", maxLength(c("ContactEmail"), 99),
-      "ContactEmail exceeds 99 characters"),
-    Rule("ContactEmail.format", email(c("ContactEmail")),
-      "ContactEmail has invalid format")))
+  private val contact = Seq(
+    RuleConfig("ContactCode.enum", "ContactCode must be AO or DO",
+      inSet("ContactCode", "AO", "DO")),
+    RuleConfig("ContactFirstName.maxLength", "ContactFirstName exceeds 20 characters",
+      withN("maxLength", "ContactFirstName", 20)),
+    RuleConfig("ContactFirstName.charset", "ContactFirstName contains invalid characters",
+      check("nameFormat", "ContactFirstName")),
+    RuleConfig("ContactLastName.maxLength", "ContactLastName exceeds 25 characters",
+      withN("maxLength", "ContactLastName", 25)),
+    RuleConfig("ContactLastName.charset", "ContactLastName contains invalid characters",
+      check("nameFormat", "ContactLastName")),
+    RuleConfig("ContactTitle.maxLength", "ContactTitle exceeds 23 characters",
+      withN("maxLength", "ContactTitle", 23)),
+    RuleConfig("ContactPhone.maxLength", "ContactPhone exceeds 25 characters",
+      withN("maxLength", "ContactPhone", 25)),
+    RuleConfig("ContactPhone.format", "ContactPhone has invalid format",
+      check("phone", "ContactPhone")),
+    RuleConfig("ContactFax.maxLength", "ContactFax exceeds 25 characters",
+      withN("maxLength", "ContactFax", 25)),
+    RuleConfig("ContactFax.format", "ContactFax has invalid format",
+      check("phone", "ContactFax")),
+    RuleConfig("ContactOtherPhone.maxLength", "ContactOtherPhone exceeds 25 characters",
+      withN("maxLength", "ContactOtherPhone", 25)),
+    RuleConfig("ContactOtherPhone.format", "ContactOtherPhone has invalid format",
+      check("phone", "ContactOtherPhone")),
+    RuleConfig("ContactEmail.maxLength", "ContactEmail exceeds 99 characters",
+      withN("maxLength", "ContactEmail", 99)),
+    RuleConfig("ContactEmail.format", "ContactEmail has invalid format",
+      check("email", "ContactEmail")))
 
-  /** The complete rule set, declaration order = ERROR_DESC order. */
-  val all: RuleSet =
+  /** The complete set as config, declaration order = ERROR_DESC order.
+    * `RuleSetConfig.fromJson` loads a customized copy of its `toJson`. */
+  val config: RuleSetConfig = RuleSetConfig(
     recordOperation ++ organizationCode ++ payee ++ organization ++ payment ++
-      banking ++ dates ++ address ++ contact
+      banking ++ dates ++ address ++ contact)
 
-  /** Small syntax helper so rule bodies read naturally. */
-  implicit private class ColOps(val v: Column) {
-    def onlyWhenCol(cond: Column): Column = cond && v
-  }
+  /** The compiled rule set every validation run applies. */
+  val all: RuleSet = config.toRuleSet
 }

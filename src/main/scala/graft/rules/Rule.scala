@@ -43,13 +43,6 @@ final case class RuleSet(rules: Seq[Rule]) {
     * order. Empty array ⇔ valid row. */
   def errorsCol: Column =
     filter(array(rules.map(_.messageOrNull): _*), _.isNotNull)
-
-  /** Joined ERROR_DESC string (reference joins rule texts with ", "). */
-  def errorDescCol: Column = concat_ws(", ", errorsCol)
-
-  /** true ⇔ the row passes every rule. */
-  def validCol: Column =
-    !rules.map(r => coalesce(r.violation, lit(false))).reduce(_ || _)
 }
 
 object RuleSet {

@@ -10,16 +10,18 @@ import org.json4s.jackson.JsonMethods
   * pipeline driver and composes new checks without touching the engine
   * (/root/reference/DM_bankfile_validate_pipeline.py:3113 invalid-values
   * scenario, :2510 composite transform). This module gives the Scala
-  * engine the same property: a [[Pred]] AST covering every predicate
-  * family [[graft.bank.BankRules]] uses, (de)serialized to JSON, so a
-  * rule set ships as a config file and loads WITHOUT a recompile.
+  * engine the same property: a [[Pred]] AST, (de)serialized to JSON, so
+  * a rule set ships as a config file and loads WITHOUT a recompile.
+  * [[graft.bank.BankRules.config]] declares the bank rule set in this
+  * form.
   *
   * Design: the AST is data (case classes), compilation to Spark is one
   * total function [[Pred.toColumn]] onto the existing [[Checks]]
-  * combinators — a JSON-loaded rule therefore produces the IDENTICAL
-  * Column tree (same native kernels, same codegen) as the hand-written
-  * rule it replaces; parity is pinned bit-for-bit in RuleConfigSpec and
-  * the v_customer_* oracle queries load their rules from JSON text.
+  * combinators — a JSON-loaded rule therefore compiles to the same
+  * plan (same native kernels, same codegen) as the one it was saved
+  * from; RuleConfigSpec pins the bank set's JSON round trip with
+  * `Dataset.sameSemantics`, and the v_customer_* oracle queries load
+  * their rules from JSON text.
   *
   * JSON codecs are written out explicitly (no reflection extraction):
   * the wire format is a public contract — {"kind": ..., params} per
@@ -110,7 +112,7 @@ object Pred {
   /** Column vs column (cross-field equality family). */
   final case class ColCmp(op: String, left: String, right: String) extends Pred
   /** Date-parsed column vs column (format-string dates; NULL-safe via
-    * try_to_date, matching BankRules.dates). */
+    * try_to_date, as the bank set's EffectiveEndDate.afterStart needs). */
   final case class DateCmp(op: String, left: String, right: String,
                            fmt: String = "yyyy-MM-dd") extends Pred
   /** Raw set membership — a CONDITION (no present() guard), for `when`
@@ -195,8 +197,7 @@ object Pred {
 }
 
 /** One configurable rule: violation Pred + optional `when` context
-  * (compiles via [[Rule.onlyWhen]], preserving the hand-written rules'
-  * cond && violation shape). */
+  * (compiles via [[Rule.onlyWhen]] to `cond && violation`). */
 final case class RuleConfig(name: String, message: String,
                             violation: Pred, when: Option[Pred] = None) {
   def toRule: Rule = {

@@ -6,10 +6,10 @@ import org.apache.spark.metrics.source.CodegenMetrics
 /** Local instrument (not a shipped surface): how much of a warm
   * entry's wall time is whole-stage-codegen COMPILATION — re-runs one
   * bench/oracle entry and prints, per run, the wall seconds alongside
-  * the delta of Spark's codegen compile counters (events, generated
-  * source bytes, cumulative compile millis). A warm run that still
-  * compiles fresh classes every repetition has plan literals or
-  * structure that defeat the codegen cache. Usage:
+  * the delta of Spark's codegen counters: compilations, and generated
+  * classes (the class-bytecode-size histogram's sample count). A warm
+  * run that still compiles fresh classes every repetition has plan
+  * literals or structure that defeat the codegen cache. Usage:
   *   tools/java_main.sh graft.tools.CodegenProbe <sfDir> <query> [reps]
   */
 object CodegenProbe {
@@ -28,10 +28,9 @@ object CodegenProbe {
     spark.sparkContext.setLogLevel("ERROR")
     val all = graft.SparkEntry.queries ++ graft.SparkEntry.benchOnlyQueries
     val fn = all.getOrElse(name, sys.error(s"unknown query: $name"))
-    def snap(): (Long, Long, Long) = (
+    def snap(): (Long, Long) = (
       CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
-      CodegenMetrics.METRIC_GENERATED_CLASS_BYTECODE_SIZE.getCount,
-      0L)
+      CodegenMetrics.METRIC_GENERATED_CLASS_BYTECODE_SIZE.getCount)
     fn(spark, sfDir).count() // warm
     spark.catalog.clearCache()
     for (r <- 1 to reps) {
@@ -40,7 +39,7 @@ object CodegenProbe {
       val dt = (System.nanoTime() - t0) / 1e9
       val c1 = snap()
       println(f"run$r $dt%.3f s, compiles=${c1._1 - c0._1}, " +
-        f"bytecode=${c1._2 - c0._2}")
+        f"classes=${c1._2 - c0._2}")
       spark.catalog.clearCache()
     }
     spark.stop()

@@ -5,21 +5,16 @@ import org.apache.spark.sql.functions._
 
 /** Table-level integrity checks — constraints that span rows, which
   * the per-row rule engine ([[Validator]]) cannot express:
-  * key uniqueness, referential integrity, row-count expectations.
-  * These are the dataset-shaped analogues of the reference's
-  * duplicate-PayeeID and row-count scenario checks
-  * (DM_bankfile_validate_pipeline.py run_duplicate_payee_id_scenario
-  * :2696, count compare :786).
+  * referential integrity and row-count expectations (key uniqueness,
+  * the reference's duplicate-PayeeID scenario, is
+  * [[graft.ops.Dedup.duplicateKeys]]). These are the dataset-shaped
+  * analogues of the reference's row-count scenario checks
+  * (DM_bankfile_validate_pipeline.py count compare :786).
   *
   * Every check returns a DataFrame of violations (empty = pass), so
   * results compose into reports and route to sinks like rule errors.
   */
 object TableChecks {
-
-  /** Key values appearing more than once: (key cols..., dup_count).
-    * One hash shuffle on the key, partial-aggregated. */
-  def uniqueKey(df: DataFrame, keyCols: Seq[String]): DataFrame =
-    graft.ops.Dedup.duplicateKeys(df, keyCols)
 
   /** Child rows whose foreign key has no match in the parent —
     * referential-integrity orphans. Planned as a left-anti join:

@@ -12,7 +12,7 @@ class ScenarioConfigSpec extends SparkSpec {
     // the fully config-driven path: rules AND scenarios in one
     // document — nothing about the checks is compiled into the caller
     val json = s"""
-      { ${BankRulesConfig.all.toJson.trim.drop(1).dropRight(1).trim},
+      { ${BankRules.config.toJson.trim.drop(1).dropRight(1).trim},
         "keyCol": "PayeeID",
         "scenarios": [
           { "name": "clean_feed" },
@@ -79,7 +79,7 @@ class ScenarioConfigSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("scenario-cfg")
     val path = dir.resolve("suite.json")
     val json = s"""
-      { ${BankRulesConfig.all.toJson.trim.drop(1).dropRight(1).trim},
+      { ${BankRules.config.toJson.trim.drop(1).dropRight(1).trim},
         "keyCol": "PayeeID",
         "scenarios": [
           { "name": "bad_rtn",

@@ -17,7 +17,7 @@ class TableChecksSpec extends SparkSpec {
 
   test("uniqueKey reports duplicated keys with counts") {
     val df = Seq(("A", 1), ("A", 2), ("B", 3)).toDF("k", "v")
-    val d = TableChecks.uniqueKey(df, Seq("k")).as[(String, Long)].collect()
+    val d = graft.ops.Dedup.duplicateKeys(df, Seq("k")).as[(String, Long)].collect()
     assert(d.toSeq == Seq(("A", 2L)))
   }
 
