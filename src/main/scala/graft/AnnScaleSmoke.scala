@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.Smoke.{fmt, time}
 
 /** Scale smoke for similarity search over N hash-derived 64-dim
   * vectors (no driver state): exact brute-force top-10 for 100
@@ -22,9 +23,6 @@ object AnnScaleSmoke {
   def frontier(spark: SparkSession, rows: Long,
                clustered: Boolean = false): Unit = {
     import org.apache.spark.sql.DataFrame
-    def time[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
     val dir = java.nio.file.Files.createTempDirectory("ann-frontier").toString
     // uniform: structure-free directions — IVF's adversarial case.
     // clustered: 2000 hash-derived centers + +/-0.1 per-component noise
@@ -57,7 +55,6 @@ object AnnScaleSmoke {
       scanned / rows
     }
 
-    def fmt(p: String, d: Double) = p.formatLocal(java.util.Locale.ROOT, d)
     val results = scala.collection.mutable.ArrayBuffer.empty[String]
 
     // flat configs: (cells, nprobe)
@@ -77,8 +74,8 @@ object AnnScaleSmoke {
         .select(col("query_id"), col("p.cent_id").as("cell"))
       val sf = scanFraction(spark, idx, probes)
       val line = s"""{"kind":"flat","cells":$numCells,"nprobe":$nprobe,""" +
-        s""""build_sec":${fmt("%.2f", tBuild)},"probe_sec":${fmt("%.2f", tProbe)},""" +
-        s""""recall":${fmt("%.3f", recall)},"scan_fraction":${fmt("%.4f", sf)}}"""
+        s""""build_sec":${fmt(tBuild, 2)},"probe_sec":${fmt(tProbe, 2)},""" +
+        s""""recall":${fmt(recall, 3)},"scan_fraction":${fmt(sf, 4)}}"""
       println(s"FRONTIER $line")
       results += line
     }
@@ -103,19 +100,17 @@ object AnnScaleSmoke {
       val sf = scanFraction(spark, idx, probes)
       val line = s"""{"kind":"two_level","coarse":$nc,"fine_per_cell":$nf,""" +
         s""""cells":${nc * nf},"coarse_probe":$pc,"nprobe":$np,""" +
-        s""""build_sec":${fmt("%.2f", tBuild)},"probe_sec":${fmt("%.2f", tProbe)},""" +
-        s""""recall":${fmt("%.3f", recall)},"scan_fraction":${fmt("%.4f", sf)}}"""
+        s""""build_sec":${fmt(tBuild, 2)},"probe_sec":${fmt(tProbe, 2)},""" +
+        s""""recall":${fmt(recall, 3)},"scan_fraction":${fmt(sf, 4)}}"""
       println(s"FRONTIER $line")
       results += line
     }
     val data = if (clustered) "clustered" else "uniform"
     val json = s"""{"metric":"ann_frontier","rows":$rows,"dim":64,"queries":100,""" +
-      s""""k":10,"data":"$data","brute_sec":${fmt("%.2f", tBrute)},""" +
+      s""""k":10,"data":"$data","brute_sec":${fmt(tBrute, 2)},""" +
       s""""configs":[${results.mkString(",")}]}"""
-    println(json)
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(
-      if (clustered) "BENCH_SCALE_ANN_FRONTIER_CLUSTERED.json"
-      else "BENCH_SCALE_ANN_FRONTIER.json"), json)
+    Smoke.artifact(if (clustered) "BENCH_SCALE_ANN_FRONTIER_CLUSTERED.json"
+      else "BENCH_SCALE_ANN_FRONTIER.json", json)
     new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
   }
 
@@ -128,10 +123,6 @@ object AnnScaleSmoke {
     * One JSON line → BENCH_SCALE_ANN_AUTO.json. */
   def auto(spark: SparkSession, rows: Long): Unit = {
     import org.apache.spark.sql.DataFrame
-    def time[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    def fmt(p: String, d: Double) = p.formatLocal(java.util.Locale.ROOT, d)
     val dir = java.nio.file.Files.createTempDirectory("ann-auto").toString
     val results = scala.collection.mutable.ArrayBuffer.empty[String]
     for (clustered <- Seq(false, true)) {
@@ -164,18 +155,16 @@ object AnnScaleSmoke {
         s"persisted $persisted != chosen $choice")
       val line = s"""{"data":"$data","chosen":"${choice.kind}",""" +
         s""""measured_winner":"$expected","match":${choice.kind == expected},""" +
-        s""""mean_top_cosine":${fmt("%.3f", choice.meanTopCosine)},""" +
+        s""""mean_top_cosine":${fmt(choice.meanTopCosine, 3)},""" +
         s""""threshold":${choice.threshold},""" +
-        s""""build_sec":${fmt("%.2f", tBuild)},"probe_sec":${fmt("%.2f", tProbe)},""" +
-        s""""recall":${fmt("%.3f", recall)}}"""
+        s""""build_sec":${fmt(tBuild, 2)},"probe_sec":${fmt(tProbe, 2)},""" +
+        s""""recall":${fmt(recall, 3)}}"""
       println(s"AUTO $line")
       results += line
     }
     val json = s"""{"metric":"ann_auto_quantizer","rows":$rows,"dim":64,""" +
       s""""queries":100,"k":10,"corpora":[${results.mkString(",")}]}"""
-    println(json)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH_SCALE_ANN_AUTO.json"), json)
+    Smoke.artifact("BENCH_SCALE_ANN_AUTO.json", json)
     new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
   }
 
@@ -192,11 +181,7 @@ object AnnScaleSmoke {
     * over the same corpus rides along. One JSON line →
     * BENCH_SCALE_ANN_PQ.json. */
   def pqSmoke(spark: SparkSession, rows: Long): Unit = {
-    def time[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    import graft.Smoke.{fmt3 => fmt}
     val dir = java.nio.file.Files.createTempDirectory("ann-pq").toString
     val nCenters = math.max(rows / 10, 1)
     val raw = "transform(sequence(0, 63), j -> " +
@@ -300,9 +285,7 @@ object AnnScaleSmoke {
       s""""ivfadc_res_probe_sec":${fmt(tResProbe)},""" +
       s""""ivfadc_res_recall_at_10":${fmt(recallRes)},""" +
       s""""ecod_sec":${fmt(tEcod)}}"""
-    println(json)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH_SCALE_ANN_PQ.json"), json)
+    Smoke.artifact("BENCH_SCALE_ANN_PQ.json", json)
   }
 
   /** Residual-vs-raw IVFADC on TRAINED cells (`runMain
@@ -316,11 +299,7 @@ object AnnScaleSmoke {
     * fraction, which is also reported honestly from the as-written
     * index). One JSON line → BENCH_SCALE_ANN_PQ_RESIDUAL.json. */
   def pqResidualSmoke(spark: SparkSession, rows: Long): Unit = {
-    def time[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    import graft.Smoke.{fmt3 => fmt}
     val dir = java.nio.file.Files.createTempDirectory("ann-pqres").toString
     // identical manifold-shaped corpus to pqSmoke: rows/10 hash
     // centers, normalized
@@ -411,75 +390,28 @@ object AnnScaleSmoke {
       s""""probe_sec":${fmt(tProbeRaw)},"recall_at_10":${fmt(recallRaw)}},""" +
       s""""residual":{"train_sec":${fmt(tTrainRes)},"encode_sec":${fmt(tEncRes)},""" +
       s""""probe_sec":${fmt(tProbeRes)},"recall_at_10":${fmt(recallRes)}}}"""
-    println(json)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH_SCALE_ANN_PQ_RESIDUAL.json"), json)
+    Smoke.artifact("BENCH_SCALE_ANN_PQ_RESIDUAL.json", json)
     new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
   }
 
   def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("pqres")) {
-      val rows = if (args.length > 1) args(1).toLong else 2000000L
-      val spark = SparkSession.builder()
-        .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-        .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      pqResidualSmoke(spark, rows)
-      spark.stop()
-      return
+    def rowsAt(i: Int) = if (args.length > i) args(i).toLong else 2000000L
+    val spark = GraftSession.local(GraftSession.defaultCores, "graft-ann-smoke")
+    args.headOption match {
+      case Some("pqres") => pqResidualSmoke(spark, rowsAt(1))
+      case Some("auto") => auto(spark, rowsAt(1))
+      case Some("pq") => pqSmoke(spark, rowsAt(1))
+      case Some("frontier") =>
+        val clustered = args.length > 1 && args(1) == "clustered"
+        frontier(spark, rowsAt(if (clustered) 2 else 1), clustered)
+      case _ => serving(spark, rowsAt(0))
     }
-    if (args.headOption.contains("auto")) {
-      val rows = if (args.length > 1) args(1).toLong else 2000000L
-      val spark = SparkSession.builder()
-        .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-        .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      auto(spark, rows)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("pq")) {
-      val rows = if (args.length > 1) args(1).toLong else 2000000L
-      val spark = SparkSession.builder()
-        .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-        .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      pqSmoke(spark, rows)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("frontier")) {
-      val clustered = args.length > 1 && args(1) == "clustered"
-      val rows = if (args.length > (if (clustered) 2 else 1))
-        args(if (clustered) 2 else 1).toLong else 2000000L
-      val spark = SparkSession.builder()
-        .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-        .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      frontier(spark, rows, clustered)
-      spark.stop()
-      return
-    }
-    val rows = if (args.nonEmpty) args(0).toLong else 2000000L
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark.stop()
+  }
 
-    def time[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
-
+  /** Default mode (`runMain graft.AnnScaleSmoke [rows]`): brute vs IVF
+    * build + probe, plus semantic dedup over injected near-copies. */
+  def serving(spark: SparkSession, rows: Long): Unit = {
     val dir = java.nio.file.Files.createTempDirectory("ann-smoke").toString
     spark.range(rows).select(col("id").as("vec_id"),
         expr("transform(sequence(0, 63), j -> CAST(pmod(xxhash64(id, j), 2000) / 1000.0 - 1.0 AS FLOAT))")
@@ -539,19 +471,15 @@ object AnnScaleSmoke {
       s"expected survivors in [$rows, ${rows + nDup}), got $nSurv")
     val dedupRecall = (rows + nDup - nSurv).toDouble / nDup
 
-    // Locale.ROOT: a comma-decimal default locale would break the JSON
-    def fmt(p: String, d: Double) = p.formatLocal(java.util.Locale.ROOT, d)
     val json =
       s"""{"metric":"ann_scale","rows":$rows,"dim":64,"queries":100,"k":10,""" +
-      s""""brute_sec":${fmt("%.2f", tBrute)},"index_build_sec":${fmt("%.2f", tBuild)},""" +
-      s""""probe_sec":${fmt("%.2f", tProbe)},"probe_recall":${fmt("%.3f", recall)},""" +
+      s""""brute_sec":${fmt(tBrute, 2)},"index_build_sec":${fmt(tBuild, 2)},""" +
+      s""""probe_sec":${fmt(tProbe, 2)},"probe_recall":${fmt(recall, 3)},""" +
       s""""cells":$numCells,"nprobe":$nprobe,"semantic_dedup":{"corpus":${rows + nDup},""" +
       s""""injected_dups":$nDup,"survivors":$nSurv,""" +
-      s""""dedup_recall":${fmt("%.3f", dedupRecall)},"sec":${fmt("%.2f", tSem)},""" +
+      s""""dedup_recall":${fmt(dedupRecall, 3)},"sec":${fmt(tSem, 2)},""" +
       s""""planes":16,"threshold":0.999}}"""
-    println(json)
-    java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_SCALE_ANN.json"), json)
-    spark.stop()
+    Smoke.artifact("BENCH_SCALE_ANN.json", json)
     new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.Smoke.{fmt2 => fmt}
 
 /** Connected-components scale smoke: ~10 M edges with a KNOWN
   * component structure — `nChains` disjoint chains of length
@@ -24,18 +24,9 @@ object CcScaleSmoke {
     val nChains = if (args.nonEmpty) args(0).toLong else 1000000L
     val chainLen = 10L  // nChains*(chainLen-1) + longLen-1 edges ≈ 9 M + 8 k
     val longLen = 8192L // needs ~13 pointer-jump rounds, not 8191
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.defaultCores, "graft-cc-smoke")
     val ckptDir = java.nio.file.Files.createTempDirectory("cc-ckpt").toString
     spark.sparkContext.setCheckpointDir(ckptDir)
-
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
 
     // short chains: node ids [0, nChains*chainLen), chain c owns the
     // contiguous block [c*chainLen, (c+1)*chainLen); edge id→id+1
@@ -91,9 +82,7 @@ object CcScaleSmoke {
     }.mkString(",")
     val json = s"""{"metric":"cc_scale","edges":$nEdges,""" +
       s""""components":${nChains + 1},"long_chain":$longLen,$per}"""
-    println(json)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH_SCALE_CC.json"), json)
+    Smoke.artifact("BENCH_SCALE_CC.json", json)
     spark.stop()
     // ~13 rounds of 10M-node reliable-checkpoint label state
     new scala.reflect.io.Directory(new java.io.File(ckptDir)).deleteRecursively()

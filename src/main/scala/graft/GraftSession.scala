@@ -23,6 +23,14 @@ import org.apache.spark.sql.SparkSession
   * Shuffle partitions are NOT hardcoded: callers size them to the
   * cluster (rule of thumb: 2-3× total executor cores; the local test
   * harness uses the core count).
+  *
+  * [[local]] is the one place a local session's conf is decided. Its
+  * users: the test suite (`SparkSpec`, pinned at 4 cores), the
+  * `perfbench` benchmark, `PlanAudit` (8 cores), and the tools under
+  * `graft.tools`, `ScaleProbe` and every `*ScaleSmoke` main (sized by
+  * [[defaultCores]]). `Bench` and `Verify` are the measurement harness
+  * and build their own session, kept unchanged so their timings and
+  * outputs stay comparable across rounds.
   */
 object GraftSession {
 
@@ -47,13 +55,23 @@ object GraftSession {
       // buffers of bounded size fit executor memory comfortably.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
 
+  /** Core count for mains sized to the host: `SPARK_GRAFT_CPUS` when
+    * set, else every available processor. */
+  def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
   /** Local session for tests/benchmarks: `cores` threads, shuffle
-    * partitions sized to match. */
-  def local(cores: Int, appName: String = "graft-local"): SparkSession =
-    builder(appName)
+    * partitions sized to match, WARN logging. */
+  def local(cores: Int, appName: String = "graft-local"): SparkSession = {
+    val spark = builder(appName)
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", cores)
+      // small local parquet files arrive as ONE split; floor the split
+      // count so single-file inputs still use every core
       .config("spark.sql.files.minPartitionNum", cores)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.Smoke.{fmt2 => fmt}
 
 /** Scale smoke for the r12 graph operators (ShortestPaths, KCore,
   * personalized PageRank) at ~10 M edges with KNOWN structure, the
@@ -31,15 +31,7 @@ object GraphScaleSmoke {
     val longLen = 8192L
     val nCliques = 1000L
     val cliqueSize = 12
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
+    val spark = GraftSession.local(GraftSession.defaultCores, "graft-graph-smoke")
 
     val nShort = nChains * chainLen
     val chainEdges = spark.range(nShort)
@@ -108,10 +100,7 @@ object GraphScaleSmoke {
       s""""sssp":{"sec":${fmt(ssspSec)},"ok":$ssspOk},""" +
       s""""kcore":{"sec":${fmt(kcoreSec)},"rounds":$rounds,"ok":$kcoreOk},""" +
       s""""ppr":{"sec":${fmt(pprSec)},"ok":$pprOk}}"""
-    println(json)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get("BENCH_SCALE_GRAPH.json"),
-      (json + "\n").getBytes("UTF-8"))
+    Smoke.artifact("BENCH_SCALE_GRAPH.json", json)
     spark.stop()
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.Smoke.{fmt3 => fmt}
 
 /** Multimodal scale smoke: perceptual image hashing + near-dup
   * detection measured on a generated corpus of REAL encoded PNGs —
@@ -71,17 +71,9 @@ object ImgScaleSmoke {
 
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 50000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.defaultCores, "graft-img-smoke")
     import spark.implicits._
 
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val root = java.nio.file.Files.createTempDirectory("img-scale").toString
     // generation (PNG encode) is corpus setup, excluded from timings
     val t0 = System.nanoTime()
@@ -194,9 +186,7 @@ object ImgScaleSmoke {
       s""""mixed_exact":$exact,"mixed_probe_sec":${fmt(tMixed)},""" +
       s""""route_sec":${fmt(tRoute)},""" +
       s""""route_rows_per_sec":${(n / tRoute).toLong}}"""
-    println(json)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH_SCALE_IMG.json"), json)
+    Smoke.artifact("BENCH_SCALE_IMG.json", json)
     spark.stop()
     new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
   }

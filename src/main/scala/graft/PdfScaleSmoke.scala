@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.Smoke.{fmt3 => fmt}
 
 /** PDF-source scale smoke: N generated PDFs parsed by
   * [[graft.sources.Pdf.extractAll]] over a parquet-backed binary
@@ -106,16 +106,8 @@ object PdfScaleSmoke {
 
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 20000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.defaultCores, "graft-pdf-smoke")
     import spark.implicits._
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val root = java.nio.file.Files.createTempDirectory("pdf-scale").toString
     spark.range(n).map { id =>
       val payload = (id % 10) match {
@@ -158,9 +150,7 @@ object PdfScaleSmoke {
       s""""text_pages_enc_exact":$exact,"parse_sec":${fmt(sec)},""" +
       s""""docs_per_sec":${(okCount / sec).toLong},""" +
       s""""exact_check_sec":${fmt(exactSec)}}"""
-    println(json)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH_SCALE_PDF.json"), json)
+    Smoke.artifact("BENCH_SCALE_PDF.json", json)
     spark.stop()
     new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
   }

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Smoke.time
 
 /** Scale smoke for streaming-index MAINTENANCE
   * ([[graft.streaming.AnnIngest.recluster]]): build a cell-partitioned
@@ -18,14 +19,7 @@ object ReclusterScaleSmoke {
 
   def main(args: Array[String]): Unit = {
     val rows = if (args.nonEmpty) args(0).toLong else 500000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def time[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
+    val spark = GraftSession.local(GraftSession.defaultCores, "graft-recluster-smoke")
     val dir = java.nio.file.Files.createTempDirectory("ann-recluster").toString
     val idx = s"$dir/index"
     val numCells = 256
@@ -94,16 +88,14 @@ object ReclusterScaleSmoke {
       graft.streaming.AnnIngest.recluster(spark, idx, numCells, iters = 3))
     val (crowd1, scan1, recall1, tProbe1) = measure(cents1)
 
-    def f(d: Double) = "%.4f".formatLocal(java.util.Locale.ROOT, d)
+    def f(d: Double) = Smoke.fmt(d, 4)
     val json =
       s"""{"metric":"ann_recluster","rows":$rows,"cells":$numCells,"nprobe":$nprobe,""" +
       s""""ingest_sec":${f(tIngest)},"brute_sec":${f(tBrute)},"recluster_sec":${f(tRecluster)},""" +
       s""""before":{"max_drift_cell_frac":${f(crowd0)},"scan_frac":${f(scan0)},"recall":${f(recall0)},"probe_sec":${f(tProbe0)}},""" +
       s""""after":{"max_drift_cell_frac":${f(crowd1)},"scan_frac":${f(scan1)},"recall":${f(recall1)},"probe_sec":${f(tProbe1)}},""" +
       s""""generation":"${graft.streaming.AnnIngest.currentDataPath(spark, idx).split('/').last}"}"""
-    println(json)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH_SCALE_ANN_RECLUSTER.json"), json)
+    Smoke.artifact("BENCH_SCALE_ANN_RECLUSTER.json", json)
     spark.stop()
   }
 }

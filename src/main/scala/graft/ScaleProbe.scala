@@ -1,12 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val rows = 10000000L
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.local(GraftSession.defaultCores, "graft-scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
     val path = java.nio.file.Files.createTempDirectory("probe").toString + "/bank"
     graft.bank.BankDataGen.generate(spark, rows, seed = 3).write.mode("overwrite").parquet(path)

@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.Smoke.{fmt2 => fmt, time}
 
 /** Scale smoke for the core validation path: generate N bank rows
   * distributed, materialize to parquet (the real pipeline validates
@@ -28,17 +28,7 @@ object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val rows = if (args.nonEmpty) args(0).toLong else 10000000L
     val givenPath = if (args.length > 1) Some(args(1)) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def time[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
-    }
+    val spark = GraftSession.local(GraftSession.defaultCores, "graft-scale-smoke")
 
     val path = givenPath.getOrElse(
       java.nio.file.Files.createTempDirectory("scale-smoke").toString + "/bank")
@@ -69,16 +59,12 @@ object ScaleSmoke {
       graft.validate.Validator.validate(feed, graft.bank.BankRules.all)
         .select(count(when(!col(graft.validate.Validator.ValidCol), 1))).head().getLong(0)
     }
-    // Locale.ROOT: a comma-decimal default locale would render 77,70
-    // and break the JSON artifact (same rule as Bench.jsonLine)
-    def fmt(d: Double) = "%.2f".formatLocal(java.util.Locale.ROOT, d)
     val json =
       s"""{"metric":"validation_scale","rows":$actualRows,""" +
       s""""gen_write_sec":${fmt(tGen)},"scan_validate_sec":${fmt(tVal)},""" +
       s""""rows_per_sec":${(actualRows / tVal).toLong},"invalid_rows":$bad,""" +
       s""""fresh_jvm":${exists}}"""
-    println(json)
-    java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH_SCALE.json"), json)
+    Smoke.artifact("BENCH_SCALE.json", json)
     spark.stop()
     if (givenPath.isEmpty) {
       // the generated feed is gigabytes — don't leave it on /tmp

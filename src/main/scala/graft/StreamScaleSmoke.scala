@@ -37,8 +37,7 @@ object StreamScaleSmoke {
   def longrun(spark: SparkSession, nBatches: Int, rowsPerBatch: Long): Unit = {
     import org.apache.spark.sql.functions.{col, lit, pmod, when}
     import graft.sources.CommitLog
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
+    import graft.Smoke.{fmt2 => fmt}
     val root = java.nio.file.Files.createTempDirectory("stream-longrun").toString
     val drop = s"$root/drop"
     val valid = s"$root/valid"
@@ -139,9 +138,7 @@ object StreamScaleSmoke {
       s""""commits_files_after_compact":$commitFiles,""" +
       s""""offset_bytes_per_segment":[${offsetBytes.mkString(",")}],""" +
       s""""committed_list_ms":${fmt(listMs)}}"""
-    println(json)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH_SCALE_STREAM_LONGRUN.json"), json)
+    Smoke.artifact("BENCH_SCALE_STREAM_LONGRUN.json", json)
     new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
   }
 
@@ -159,8 +156,7 @@ object StreamScaleSmoke {
   def cdcLongrun(spark: SparkSession, nBatches: Int, rowsPerBatch: Long): Unit = {
     import org.apache.spark.sql.functions.{col, concat, lit, xxhash64}
     import graft.sources.CommitLog
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
+    import graft.Smoke.{fmt2 => fmt}
     val root = java.nio.file.Files.createTempDirectory("cdc-longrun").toString
     val (src, rep, ckpt) = (s"$root/src", s"$root/rep", s"$root/ckpt")
     val segments = 6
@@ -226,9 +222,7 @@ object StreamScaleSmoke {
       s""""offset_bytes_per_segment":[${offsetBytes.mkString(",")}],""" +
       s""""stage_dirs_per_segment":[${stageDirs.mkString(",")}],""" +
       s""""replica_checksum_equal":true}"""
-    println(json)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH_SCALE_CDC_LONGRUN.json"), json)
+    Smoke.artifact("BENCH_SCALE_CDC_LONGRUN.json", json)
     new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
   }
 
@@ -245,8 +239,7 @@ object StreamScaleSmoke {
       rowsPerBatch: Long): Unit = {
     import org.apache.spark.sql.functions.{col, concat, count, expr, lit, xxhash64}
     import graft.sources.CommitLog
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    import graft.Smoke.{fmt3 => fmt}
     val root = java.nio.file.Files.createTempDirectory("cdata-boot").toString
     val src = s"$root/src"
     val baseBatches = 4
@@ -292,9 +285,7 @@ object StreamScaleSmoke {
       s""""rows_per_batch":$rowsPerBatch,"events":$n1,""" +
       s""""cdata_secs":${fmt(tCdata)},"legacy_secs":${fmt(tLegacy)},""" +
       s""""speedup":${fmt(tLegacy / tCdata)},"events_equal":true}"""
-    println(json)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH_SCALE_CDATA.json"), json)
+    Smoke.artifact("BENCH_SCALE_CDATA.json", json)
     new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
   }
 
@@ -317,8 +308,7 @@ object StreamScaleSmoke {
   def cdataPlanSmoke(spark: SparkSession, nTxns: Int): Unit = {
     import org.apache.spark.sql.functions.{col, concat, hex, lit, lower, lpad}
     import graft.sources.CommitLog
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    import graft.Smoke.{fmt3 => fmt}
     val conf = spark.sparkContext.hadoopConfiguration
     def build(n: Int): String = {
       val root = java.nio.file.Files.createTempDirectory(s"cdboot$n").toString
@@ -393,9 +383,7 @@ object StreamScaleSmoke {
       s""""plan_nodes_big":$nodesB,"plan_secs_small":${fmt(planS)},""" +
       s""""plan_secs_big":${fmt(planB)},"exec_secs_small":${fmt(execS)},""" +
       s""""exec_secs_big":${fmt(execB)}}"""
-    println(json)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH_SCALE_CDATA_BOOT.json"), json)
+    Smoke.artifact("BENCH_SCALE_CDATA_BOOT.json", json)
     Seq(tSmall, tBig).foreach(t => new scala.reflect.io.Directory(
       new java.io.File(t).getParentFile).deleteRecursively())
   }
@@ -411,8 +399,7 @@ object StreamScaleSmoke {
   def optPlanSmoke(spark: SparkSession, nBatches: Int): Unit = {
     import org.apache.spark.sql.functions.{col, concat, lit}
     import graft.sources.CommitLog
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+    import graft.Smoke.{fmt3 => fmt}
     val conf = spark.sparkContext.hadoopConfiguration
     def build(n: Int): String = {
       val table = java.nio.file.Files
@@ -453,93 +440,32 @@ object StreamScaleSmoke {
       s""""secs_big":${fmt(big)},"us_per_batch_small":${fmt(perSmall)},""" +
       s""""us_per_batch_big":${fmt(perBig)},""" +
       s""""per_batch_ratio":${fmt(perBig / perSmall)}}"""
-    println(json)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH_SCALE_OPTPLAN.json"), json)
+    Smoke.artifact("BENCH_SCALE_OPTPLAN.json", json)
     Seq(t1, t4).foreach(t => new scala.reflect.io.Directory(
       new java.io.File(t).getParentFile).deleteRecursively())
   }
 
   def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("cdataplan")) {
-      val nTxns = if (args.length > 1) args(1).toInt else 2048
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      cdataPlanSmoke(spark, nTxns)
-      spark.stop()
-      return
+    def intAt(i: Int, default: Int) = if (args.length > i) args(i).toInt else default
+    def longAt(i: Int, default: Long) = if (args.length > i) args(i).toLong else default
+    val spark = GraftSession.local(GraftSession.defaultCores, "graft-stream-smoke")
+    args.headOption match {
+      case Some("cdataplan") => cdataPlanSmoke(spark, intAt(1, 2048))
+      case Some("cdatabootstrap") => cdataBootstrap(spark, intAt(1, 24), longAt(2, 250000L))
+      case Some("optplan") => optPlanSmoke(spark, intAt(1, 1000))
+      case Some("cdclongrun") => cdcLongrun(spark, intAt(1, 60), longAt(2, 5000L))
+      case Some("longrun") => longrun(spark, intAt(1, 120), longAt(2, 20000L))
+      case _ => fileDrop(spark, longAt(0, 1000000L))
     }
-    if (args.headOption.contains("cdatabootstrap")) {
-      val nMerges = if (args.length > 1) args(1).toInt else 24
-      val rowsPerBatch = if (args.length > 2) args(2).toLong else 250000L
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      cdataBootstrap(spark, nMerges, rowsPerBatch)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("optplan")) {
-      val nBatches = if (args.length > 1) args(1).toInt else 1000
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      optPlanSmoke(spark, nBatches)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("cdclongrun")) {
-      val nBatches = if (args.length > 1) args(1).toInt else 60
-      val rowsPerBatch = if (args.length > 2) args(2).toLong else 5000L
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      cdcLongrun(spark, nBatches, rowsPerBatch)
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("longrun")) {
-      val nBatches = if (args.length > 1) args(1).toInt else 120
-      val rowsPerBatch = if (args.length > 2) args(2).toLong else 20000L
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      longrun(spark, nBatches, rowsPerBatch)
-      spark.stop()
-      return
-    }
-    val rowsPerBatch = if (args.nonEmpty) args(0).toLong else 1000000L
+    spark.stop()
+  }
+
+  /** Default mode (`runMain graft.StreamScaleSmoke [rowsPerBatch]`):
+    * three file drops through validateAndRoute, then the recipe
+    * pipeline over streamed documents. */
+  def fileDrop(spark: SparkSession, rowsPerBatch: Long): Unit = {
     val nBatches = 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
+    import graft.Smoke.{fmt2 => fmt}
 
     val root = java.nio.file.Files.createTempDirectory("stream-scale").toString
     val drop = s"$root/drop"
@@ -701,10 +627,7 @@ object StreamScaleSmoke {
       s""""batch_max_over_min":${fmt(rFlat)},"accepted_rows":$acceptedRows,""" +
       s""""line_index_rows":$lineIdxRows,""" +
       s""""rejected_rows":$rejectedRows,"index_rows":$indexRows}}"""
-    println(json)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH_SCALE_STREAM.json"), json)
-    spark.stop()
+    Smoke.artifact("BENCH_SCALE_STREAM.json", json)
     // 3M generated rows + routed copies + checkpoint — clean up /tmp
     new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
   }

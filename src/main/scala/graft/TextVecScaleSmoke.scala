@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.Smoke.{fmt3 => fmt}
 
 /** Text→embeddings→ANN end-to-end scale smoke: the full semantic-
   * dedup path a training pipeline runs — SGNS trains on the corpus,
@@ -17,17 +17,8 @@ object TextVecScaleSmoke {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.defaultCores, "graft-text2vec-smoke")
     import spark.implicits._
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     // widen the natural corpus ~10x with deterministic VARIANTS (words
     // rotated by r, every (r+2)-th word dropped): each variant is a
     // distinct token multiset, so no accidental twins — the planted
@@ -87,9 +78,7 @@ object TextVecScaleSmoke {
       s""""train_sec":${fmt(trainSec)},"embed_sec":${fmt(embedSec)},""" +
       s""""knn_sec":${fmt(knnSec)},""" +
       s""""docs_per_sec":${(nDocs / (trainSec + embedSec + knnSec)).toLong}}"""
-    println(json)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH_SCALE_TEXT2VEC.json"), json)
+    Smoke.artifact("BENCH_SCALE_TEXT2VEC.json", json)
     spark.stop()
   }
 }

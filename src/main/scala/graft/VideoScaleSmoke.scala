@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.Smoke.{fmt3 => fmt}
 
 /** Video scale smoke: container demux + real MJPEG frame decode
   * measured on a generated corpus of REAL MJPEG-AVI payloads — the
@@ -39,17 +39,9 @@ object VideoScaleSmoke {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 5000L
     val frames = if (args.length > 1) args(1).toInt else 8
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.defaultCores, "graft-video-smoke")
     import spark.implicits._
 
-    def fmt(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val root = java.nio.file.Files.createTempDirectory("video-scale").toString
     // generation (JPEG encode + AVI mux) is corpus setup, excluded
     // from the decode timing
@@ -93,9 +85,7 @@ object VideoScaleSmoke {
       s""""videos_per_sec":${(n / tDecode).toLong},""" +
       s""""decoded_frames_per_sec":${(n * sampleFrames / tDecode).toLong},""" +
       s""""ok_meta":$okMeta,"ok_lumas":$okLumas,"total":$total}"""
-    println(json)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH_SCALE_VIDEO.json"), json)
+    Smoke.artifact("BENCH_SCALE_VIDEO.json", json)
     spark.stop()
     new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively()
     ()

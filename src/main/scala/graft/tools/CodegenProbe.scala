@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.metrics.source.CodegenMetrics
 
 /** Local instrument (not a shipped surface): how much of a warm
@@ -17,14 +16,7 @@ object CodegenProbe {
     val sfDir = args(0)
     val name = args(1)
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.files.minPartitionNum", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(graft.GraftSession.defaultCores, "graft-codegen-probe")
     spark.sparkContext.setLogLevel("ERROR")
     val all = graft.SparkEntry.queries ++ graft.SparkEntry.benchOnlyQueries
     val fn = all.getOrElse(name, sys.error(s"unknown query: $name"))

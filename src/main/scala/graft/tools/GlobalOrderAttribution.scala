@@ -24,7 +24,7 @@ object GlobalOrderAttribution {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val spark = graft.GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "globalorder-attribution")
+      graft.GraftSession.defaultCores, "globalorder-attribution")
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"),

@@ -14,7 +14,7 @@ object PrefixAttribution {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val spark = graft.GraftSession.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "prefix-attribution")
+      graft.GraftSession.defaultCores, "prefix-attribution")
     import graft.ops.Similarity
 
     val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")

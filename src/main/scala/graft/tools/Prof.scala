@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Local profiling harness (not part of any shipped surface): runs one
   * named bench/oracle query warm, then re-runs it with a listener that
@@ -15,15 +14,7 @@ object Prof {
     val sfDir = args(0)
     val name = args(1)
     val reps = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-      .config("spark.sql.files.minPartitionNum", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(graft.GraftSession.defaultCores, "graft-prof")
     val all = graft.SparkEntry.queries ++ graft.SparkEntry.benchOnlyQueries
     val fn = all.getOrElse(name, sys.error(s"unknown query: $name"))
 

@@ -76,6 +76,25 @@ class TrendSpec extends SparkSpec {
     assert(r1 == r2)
   }
 
+  test("theil-sen: many keys interleaved across partitions, one row per key") {
+    // 30 keys, each its own slope plus a per-key spike; repartition(7)
+    // deals rows round-robin, so every input partition mixes all keys
+    val keys = (0 until 30).map(i => f"k$i%02d")
+    val rows = for (x <- 1L to 20L; (k, i) <- keys.zipWithIndex)
+      yield (k, x, (i + 1) * x + (x * i) % 3 + (if (x == 7) 1000L * i else 0L))
+    val multi = Trend.theilSen(rows.toDF("k", "t", "v").repartition(7),
+      "k", "t", "v").collect()
+    assert(multi.length == keys.size, multi.map(_.getString(0)).sorted.mkString(","))
+    assert(multi.map(_.getString(0)).toSet == keys.toSet)
+    val byKey = multi.map(r => r.getString(0) -> r).toMap
+    keys.foreach { k =>
+      val single = Trend.theilSen(rows.filter(_._1 == k).toDF("k", "t", "v"),
+        "k", "t", "v").collect()
+      assert(single.length == 1)
+      assert(byKey(k) == single(0), s"key $k")
+    }
+  }
+
   test("deterministic across partitionings") {
     val rows = (1L to 300L).map(x => ((x % 3).toString, x, (x * 17) % 97))
     val r1 = Trend.fitGrouped(rows.toDF("k", "t", "v").repartition(1),

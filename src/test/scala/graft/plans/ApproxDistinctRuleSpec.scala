@@ -1,28 +1,16 @@
 package graft.plans
 
-import graft.{GraftExtensions, SparkSpec}
+import graft.SparkSpec
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 class ApproxDistinctRuleSpec extends AnyFunSuite {
 
-  private def withExtSession[T](fn: SparkSession => T): T = {
-    val shared = SparkSpec.session
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val sess = SparkSession.builder()
-        .master("local[2]")
-        .withExtensions(new GraftExtensions())
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      try fn(sess)
-      finally sess.conf.unset(ApproxDistinctRule.enabledKey)
-    } finally {
-      SparkSession.setDefaultSession(shared)
-      SparkSession.setActiveSession(shared)
-    }
-  }
+  /** A fresh session over the shared context: GraftExtensions (and so
+    * the rule) installed, and its own SQL conf, so the flag set here
+    * never leaks into other suites. */
+  private def withExtSession[T](fn: SparkSession => T): T =
+    fn(SparkSpec.session.newSession())
 
   test("disabled by default: count(DISTINCT) stays exact and untouched") {
     withExtSession { sess =>

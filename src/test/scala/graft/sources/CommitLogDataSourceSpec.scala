@@ -58,24 +58,12 @@ class CommitLogDataSourceSpec extends SparkSpec {
     CommitLog.writeBatch(rows(4, "b", 10L), table, "r1", 1L)
     val lib = canon(CommitLog.readCommitted(spark, table).get)
 
-    val shared = spark // ensure the shared context exists first
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    try {
-      val sess = org.apache.spark.sql.SparkSession.builder()
-        .master("local[2]")
-        .withExtensions(new graft.GraftExtensions())
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      val sql = sess.sql(s"SELECT * FROM graft_commitlog.`$table`")
-      assert(canon(sql) == lib)
-      assert(sess.sql(
-        s"SELECT count(*) AS n FROM graft_commitlog.`$table` WHERE id >= 10")
-        .collect()(0).getLong(0) == 4L)
-    } finally {
-      org.apache.spark.sql.SparkSession.setActiveSession(shared)
-      org.apache.spark.sql.SparkSession.setDefaultSession(shared)
-    }
+    val sess = spark.newSession()
+    val sql = sess.sql(s"SELECT * FROM graft_commitlog.`$table`")
+    assert(canon(sql) == lib)
+    assert(sess.sql(
+      s"SELECT count(*) AS n FROM graft_commitlog.`$table` WHERE id >= 10")
+      .collect()(0).getLong(0) == 4L)
   }
 
   test("SQL change feed: graft_commitlog_changes table function replays the CDC events") {
@@ -89,32 +77,20 @@ class CommitLogDataSourceSpec extends SparkSpec {
       .select("change_type", "change_ts", "id", "v")
       .collect().map(_.toString).toSet
 
-    val shared = spark
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    try {
-      val sess = org.apache.spark.sql.SparkSession.builder()
-        .master("local[2]")
-        .withExtensions(new graft.GraftExtensions())
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      val sql = sess.sql(
-        s"SELECT change_type, change_ts, id, v FROM graft_commitlog_changes('$table', 0)")
-        .collect().map(_.toString).toSet
-      assert(sql == lib)
-      // window form + downstream composition
-      assert(sess.sql(
-        s"SELECT count(*) AS n FROM graft_commitlog_changes('$table', 1000, 2000) " +
-          "WHERE change_type = 'delete'").collect()(0).getLong(0) == 1L)
-      // empty window: empty relation in the feed's schema, not an error
-      val empty = sess.sql(
-        s"SELECT * FROM graft_commitlog_changes('$table', 2000)")
-      assert(empty.count() == 0)
-      assert(empty.columns.contains("change_type") && empty.columns.contains("v"))
-    } finally {
-      org.apache.spark.sql.SparkSession.setActiveSession(shared)
-      org.apache.spark.sql.SparkSession.setDefaultSession(shared)
-    }
+    val sess = spark.newSession()
+    val sql = sess.sql(
+      s"SELECT change_type, change_ts, id, v FROM graft_commitlog_changes('$table', 0)")
+      .collect().map(_.toString).toSet
+    assert(sql == lib)
+    // window form + downstream composition
+    assert(sess.sql(
+      s"SELECT count(*) AS n FROM graft_commitlog_changes('$table', 1000, 2000) " +
+        "WHERE change_type = 'delete'").collect()(0).getLong(0) == 1L)
+    // empty window: empty relation in the feed's schema, not an error
+    val empty = sess.sql(
+      s"SELECT * FROM graft_commitlog_changes('$table', 2000)")
+    assert(empty.count() == 0)
+    assert(empty.columns.contains("change_type") && empty.columns.contains("v"))
   }
 
   test("pushed filters prune batch directories: inputFiles shows it, result stays exact") {
@@ -251,24 +227,11 @@ class CommitLogDataSourceSpec extends SparkSpec {
     assert(e.getMessage.contains("no committed batches"))
   }
 
-  /** Run `body` in a session with GraftExtensions installed (the SQL
-    * front door), restoring the shared session afterwards. */
-  private def withSqlSession(body: org.apache.spark.sql.SparkSession => Unit): Unit = {
-    val shared = spark
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    try {
-      val sess = org.apache.spark.sql.SparkSession.builder()
-        .master("local[2]")
-        .withExtensions(new graft.GraftExtensions())
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      body(sess)
-    } finally {
-      org.apache.spark.sql.SparkSession.setActiveSession(shared)
-      org.apache.spark.sql.SparkSession.setDefaultSession(shared)
-    }
-  }
+  /** Run `body` in a fresh session (own SQL conf and function
+    * registry) carrying the shared context's GraftExtensions — the SQL
+    * front door. */
+  private def withSqlSession(body: org.apache.spark.sql.SparkSession => Unit): Unit =
+    body(spark.newSession())
 
   test("SQL INSERT INTO / INSERT OVERWRITE ride the marker protocol") {
     val table = tmp("graft-dsv2-ins")

@@ -184,28 +184,16 @@ class CommitLogRestoreSpec extends SparkSpec {
 
   test("SQL RESTORE TO VERSION/TIMESTAMP AS OF maps onto restoreTo") {
     val (table, v1, _, _) = mergeDeleteHistory()
-    val shared = spark
-    org.apache.spark.sql.SparkSession.clearActiveSession()
-    org.apache.spark.sql.SparkSession.clearDefaultSession()
-    try {
-      val sess = org.apache.spark.sql.SparkSession.builder()
-        .master("local[2]")
-        .withExtensions(new graft.GraftExtensions())
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      val out = sess.sql(
-        s"RESTORE TABLE graft_commitlog.`$table` TO VERSION AS OF $v1")
-        .collect()
-      assert(out.toSeq.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        == Seq((1L, 2L, 1L)))
-      assert(CommitLog.readCommitted(sess, table).get.count() == 5)
-      // a repeated restore to the same point is a clean no-op
-      val again = sess.sql(
-        s"RESTORE graft_commitlog.`$table` TO VERSION AS OF $v1").collect()
-      assert(again.toSeq.map(r => r.getLong(0)) == Seq(0L))
-    } finally {
-      org.apache.spark.sql.SparkSession.setActiveSession(shared)
-      org.apache.spark.sql.SparkSession.setDefaultSession(shared)
-    }
+    val sess = spark.newSession()
+    val out = sess.sql(
+      s"RESTORE TABLE graft_commitlog.`$table` TO VERSION AS OF $v1")
+      .collect()
+    assert(out.toSeq.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      == Seq((1L, 2L, 1L)))
+    assert(CommitLog.readCommitted(sess, table).get.count() == 5)
+    // a repeated restore to the same point is a clean no-op
+    val again = sess.sql(
+      s"RESTORE graft_commitlog.`$table` TO VERSION AS OF $v1").collect()
+    assert(again.toSeq.map(r => r.getLong(0)) == Seq(0L))
   }
 }
