@@ -164,79 +164,73 @@ object Als {
       i -> Array.tabulate(rank)(d => initVal(i, d, rank))).toMap
     // bounded driver fold: the items collect above materialized the
     // checkpointed rating frame, so its exact row count is free to read
-    if (driverFoldRatings > 0) {
-      val nRatings = r.queryExecution.logical match {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.count()
-        case _ => Long.MaxValue
-      }
-      if (nRatings <= driverFoldRatings) {
-        val triples = r.collect()
-        // observation lists sorted ONCE by partner id — the same
-        // per-group accumulation order as the distributed
-        // sort-by-partner fold, so solves are bit-identical; per-group
-        // solves are independent, so the half-steps run on a parallel
-        // stream (each slot written exactly once, order-free)
-        def grouped(key: ((String, String, Double)) => String,
-            partner: ((String, String, Double)) => String)
-            : Array[(String, Array[(String, Double)])] = {
-          val m = new scala.collection.mutable.AnyRefMap[String,
-            scala.collection.mutable.ArrayBuffer[(String, Double)]]()
-          triples.foreach { t =>
-            m.getOrElseUpdate(key(t),
-              new scala.collection.mutable.ArrayBuffer[(String, Double)]()) +=
-              ((partner(t), t._3))
-          }
-          m.iterator.map { case (k, buf) =>
-            (k, buf.toArray.sortBy(_._1)) }.toArray
+    if (Checkpointed.admits(r, driverFoldRatings)) {
+      val triples = r.collect()
+      // observation lists sorted ONCE by partner id — the same
+      // per-group accumulation order as the distributed
+      // sort-by-partner fold, so solves are bit-identical; per-group
+      // solves are independent, so the half-steps run on a parallel
+      // stream (each slot written exactly once, order-free)
+      def grouped(key: ((String, String, Double)) => String,
+          partner: ((String, String, Double)) => String)
+          : Array[(String, Array[(String, Double)])] = {
+        val m = new scala.collection.mutable.AnyRefMap[String,
+          scala.collection.mutable.ArrayBuffer[(String, Double)]]()
+        triples.foreach { t =>
+          m.getOrElseUpdate(key(t),
+            new scala.collection.mutable.ArrayBuffer[(String, Double)]()) +=
+            ((partner(t), t._3))
         }
-        val byUser = grouped(_._1, _._2)
-        val byItemL = grouped(_._2, _._1)
-        val itemIdx = new scala.collection.mutable.AnyRefMap[String, Int]()
-        byItemL.iterator.zipWithIndex.foreach { case ((i, _), s) => itemIdx(i) = s }
-        val userIdx = new scala.collection.mutable.AnyRefMap[String, Int]()
-        byUser.iterator.zipWithIndex.foreach { case ((u, _), s) => userIdx(u) = s }
-        val itemVecs: Array[Array[Double]] =
-          byItemL.map { case (i, _) => itemF(i) }
-        val userVecs = new Array[Array[Double]](byUser.length)
-        def solveGroup(obs: Array[(String, Double)],
-            partnerVec: String => Array[Double]): Array[Double] = {
-          val a = new Array[Double](rank * rank)
-          val b = new Array[Double](rank)
-          obs.foreach { case (pid, rating) =>
-            val q = partnerVec(pid)
-            if (q != null) {
-              var i = 0
-              while (i < rank) {
-                val qi = q(i)
-                var j = 0
-                while (j < rank) { a(i * rank + j) += qi * q(j); j += 1 }
-                b(i) += rating * qi
-                i += 1
-              }
+        m.iterator.map { case (k, buf) =>
+          (k, buf.toArray.sortBy(_._1)) }.toArray
+      }
+      val byUser = grouped(_._1, _._2)
+      val byItemL = grouped(_._2, _._1)
+      val itemIdx = new scala.collection.mutable.AnyRefMap[String, Int]()
+      byItemL.iterator.zipWithIndex.foreach { case ((i, _), s) => itemIdx(i) = s }
+      val userIdx = new scala.collection.mutable.AnyRefMap[String, Int]()
+      byUser.iterator.zipWithIndex.foreach { case ((u, _), s) => userIdx(u) = s }
+      val itemVecs: Array[Array[Double]] =
+        byItemL.map { case (i, _) => itemF(i) }
+      val userVecs = new Array[Array[Double]](byUser.length)
+      def solveGroup(obs: Array[(String, Double)],
+          partnerVec: String => Array[Double]): Array[Double] = {
+        val a = new Array[Double](rank * rank)
+        val b = new Array[Double](rank)
+        obs.foreach { case (pid, rating) =>
+          val q = partnerVec(pid)
+          if (q != null) {
+            var i = 0
+            while (i < rank) {
+              val qi = q(i)
+              var j = 0
+              while (j < rank) { a(i * rank + j) += qi * q(j); j += 1 }
+              b(i) += rating * qi
+              i += 1
             }
           }
-          choleskySolve(a, b, rank, reg)
         }
-        for (_ <- 1 to iters) {
-          java.util.stream.IntStream.range(0, byUser.length).parallel()
-            .forEach { ui =>
-              userVecs(ui) = solveGroup(byUser(ui)._2,
-                pid => itemIdx.get(pid).map(itemVecs).orNull)
-            }
-          java.util.stream.IntStream.range(0, byItemL.length).parallel()
-            .forEach { ii =>
-              itemVecs(ii) = solveGroup(byItemL(ii)._2,
-                uid => userVecs(userIdx(uid)))
-            }
-        }
-        itemF = byItemL.iterator.zipWithIndex
-          .map { case ((i, _), s) => i -> itemVecs(s) }.toMap
-        val userDf = spark.createDataset(
-          byUser.iterator.zipWithIndex
-            .map { case ((u, _), s) => (u, userVecs(s).toSeq) }.toSeq)
-          .toDF("user", "factors")
-        return AlsModel(rank, userDf, itemF)
+        choleskySolve(a, b, rank, reg)
       }
+      for (_ <- 1 to iters) {
+        java.util.stream.IntStream.range(0, byUser.length).parallel()
+          .forEach { ui =>
+            userVecs(ui) = solveGroup(byUser(ui)._2,
+              pid => itemIdx.get(pid).map(itemVecs).orNull)
+          }
+        java.util.stream.IntStream.range(0, byItemL.length).parallel()
+          .forEach { ii =>
+            itemVecs(ii) = solveGroup(byItemL(ii)._2,
+              uid => userVecs(userIdx(uid)))
+          }
+      }
+      itemF = byItemL.iterator.zipWithIndex
+        .map { case ((i, _), s) => i -> itemVecs(s) }.toMap
+      val userDf = spark.createDataset(
+        byUser.iterator.zipWithIndex
+          .map { case ((u, _), s) => (u, userVecs(s).toSeq) }.toSeq)
+        .toDF("user", "factors")
+      return AlsModel(rank, userDf, itemF)
     }
     var userF: Dataset[(String, Array[Double])] = null
     val byItem = r.map(t => (t._2, t._1, t._3)).localCheckpoint(eager = false)

@@ -43,7 +43,8 @@ object Ann {
   }
 
   /** Logical nodes that never introduce an exchange — the plans on
-    * which the `.rdd` partition-count probe is free. */
+    * which the `.rdd` partition-count probe is free. `Generate` stays
+    * in the set by decision; [[pinDerived]] gives its cost. */
   private val ScanShapedNodes: Set[String] = Set(
     "Project", "Filter", "Generate", "LogicalRelation", "LogicalRDD",
     "LocalRelation", "Range", "DataSourceV2ScanRelation")
@@ -57,7 +58,10 @@ object Ann {
     * inside one sgns_embed_eval action). Scan-shaped frames pass
     * through untouched: re-reading a columnar scan is cheaper than
     * writing a copy of it to block storage, and at 100 TB the pin
-    * would double the corpus' storage footprint for no saved work. */
+    * would double the corpus' storage footprint for no saved work.
+    * An explode (`Generate`) or heavy projection over a scan counts as
+    * scan-shaped too, so it is left unpinned and re-executes once per
+    * reference; no measurement supports pinning it. */
   private[graft] def pinDerived(df: DataFrame): DataFrame = {
     val scanShaped = df.queryExecution.optimizedPlan.collectFirst {
       case n if !ScanShapedNodes(n.getClass.getSimpleName) => n

@@ -55,25 +55,6 @@ object ConnectedComponents {
   // union-find).
   val DriverFoldEdges = 2000000L
 
-  /** Resolve the checkpoint mode for an iterative operator: an
-    * explicit choice wins; otherwise reliable iff a checkpoint dir is
-    * set AND `materialized` (a frame whose plan root is the LogicalRDD
-    * of an already-executed checkpoint) holds at least `threshold`
-    * rows. The row count reads the persisted RDD directly — a job, but
-    * not a SQL action, so per-round one-SQL-action pins are unaffected. */
-  private[graft] def resolveReliable(materialized: DataFrame,
-      explicit: Option[Boolean],
-      threshold: Long = AutoReliableEdges): Boolean =
-    explicit.getOrElse {
-      materialized.sparkSession.sparkContext.getCheckpointDir.isDefined && {
-        val n = materialized.queryExecution.logical match {
-          case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.count()
-          case _ => 0L
-        }
-        n >= threshold
-      }
-    }
-
   /** Returns (id, component) for every node appearing in `edges`, with
     * component = min reachable node id. `edges` needs two long-castable
     * columns `src`, `dst`; self-loops are fine (isolated nodes can be
@@ -117,18 +98,6 @@ object ConnectedComponents {
     def ckptLazy(df: DataFrame): DataFrame =
       if (useReliable) df.checkpoint(eager = false) else df.localCheckpoint(eager = false)
 
-    // release exactly the blocks a checkpointed frame persisted: the
-    // checkpoint APIs return a Dataset whose logical plan is the
-    // LogicalRDD wrapping the persisted RDD, so unpersisting THAT rdd
-    // frees precisely this computation's blocks — no session-global
-    // persistent-RDD-id diffing, which would race with (and could
-    // fatally unpersist) concurrent jobs' localCheckpoints on the same
-    // SparkSession. A reliable checkpoint's rdd is not block-persisted;
-    // unpersist is a no-op there.
-    def release(df: DataFrame): Unit = df.queryExecution.logical match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
-      case _ => ()
-    }
     // materialize the edge list FIRST: `und` is referenced by both the
     // symmetric-closure job and the initial-labels job below — without
     // this checkpoint the caller's whole upstream pipeline (e.g. an
@@ -141,47 +110,41 @@ object ConnectedComponents {
     // the full edge list, only the ≤ 2·threshold-entry primitive map)
     // — identical min-id components, zero distributed rounds. An
     // explicit `reliable` choice opts into the distributed machinery.
-    if (reliable.isEmpty && driverFoldEdges > 0) {
-      val nEdges = und.queryExecution.logical match {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.count()
-        case _ => Long.MaxValue
+    if (reliable.isEmpty && Checkpointed.admits(und, driverFoldEdges)) {
+      // union-find, min-id representative: union hangs the larger
+      // root under the smaller, so every tree root is its
+      // component's minimum — order-independent, deterministic
+      val parent = new scala.collection.mutable.LongMap[Long]()
+      def find(x: Long): Long = {
+        var r = x
+        while (parent(r) != r) r = parent(r)
+        var c = x
+        while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
+        r
       }
-      if (nEdges <= driverFoldEdges) {
-        // union-find, min-id representative: union hangs the larger
-        // root under the smaller, so every tree root is its
-        // component's minimum — order-independent, deterministic
-        val parent = new scala.collection.mutable.LongMap[Long]()
-        def find(x: Long): Long = {
-          var r = x
-          while (parent(r) != r) r = parent(r)
-          var c = x
-          while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
-          r
+      val it = und.toLocalIterator()
+      while (it.hasNext) {
+        val row = it.next()
+        if (!row.isNullAt(0) && !row.isNullAt(1)) {
+          val s = row.getLong(0); val d = row.getLong(1)
+          if (!parent.contains(s)) parent(s) = s
+          if (!parent.contains(d)) parent(d) = d
+          val (rs, rd) = (find(s), find(d))
+          if (rs != rd) { if (rs < rd) parent(rd) = rs else parent(rs) = rd }
         }
-        val it = und.toLocalIterator()
-        while (it.hasNext) {
-          val row = it.next()
-          if (!row.isNullAt(0) && !row.isNullAt(1)) {
-            val s = row.getLong(0); val d = row.getLong(1)
-            if (!parent.contains(s)) parent(s) = s
-            if (!parent.contains(d)) parent(d) = d
-            val (rs, rd) = (find(s), find(d))
-            if (rs != rd) { if (rs < rd) parent(rd) = rs else parent(rs) = rd }
-          }
-        }
-        release(und)
-        val spark = edges.sparkSession
-        import spark.implicits._
-        val out = parent.keys.toArray
-        val labels = spark.createDataset(
-          out.toIndexedSeq.map(n => (n, find(n)))).toDF("id", "component")
-        return (labels, 0, Seq.empty)
       }
+      Checkpointed.release(und)
+      val spark = edges.sparkSession
+      import spark.implicits._
+      val out = parent.keys.toArray
+      val labels = spark.createDataset(
+        out.toIndexedSeq.map(n => (n, find(n)))).toDF("id", "component")
+      return (labels, 0, Seq.empty)
     }
     // auto mode: the edge frame is now materialized (locally — the
     // decision predates the mode), so its exact size decides the mode
     // for every downstream cut
-    useReliable = resolveReliable(und, reliable, autoReliableEdges)
+    useReliable = Checkpointed.resolveReliable(und, reliable, autoReliableEdges)
     // symmetric closure, checkpointed (not just cached): a cache keeps
     // the upstream logical plan — e.g. a whole near-dup pair pipeline —
     // and every round's join re-runs the optimizer over that subtree;
@@ -198,7 +161,7 @@ object ConnectedComponents {
     var roundCkpt: DataFrame = labels0
     // `und` fed only the symmetric closure and the initial labels,
     // both now materialized — release its full-edge-copy blocks
-    release(und)
+    Checkpointed.release(und)
 
     var round = 0
     var converged = false
@@ -235,14 +198,14 @@ object ConnectedComponents {
       // accumulated rounds overflowed executor storage and the
       // eviction/GC thrash showed up as 20-80x per-round spikes in the
       // r7 scale smoke (910 s vs 162 s with per-round release).
-      release(roundCkpt)
+      Checkpointed.release(roundCkpt)
       roundCkpt = next
       round += 1
       roundSecs += (System.nanoTime() - roundT0) / 1e9
     }
     // the result depends only on the final round's truncated state —
     // the doubled edge list (the largest persisted object) can go
-    release(sym)
+    Checkpointed.release(sym)
     // silent non-convergence would hand back labels that LOOK like
     // components but still straddle cluster boundaries — fail instead
     if (!converged) throw new IllegalStateException(

@@ -74,23 +74,13 @@ object Coreset {
         .withColumn("dmin", least(col("dmin"), dist(farVec)))
         .select("id", "v", "dmin")
         .localCheckpoint(false)
-      if (prev ne null) releaseBlocks(prev)
+      if (prev ne null) Checkpointed.release(prev)
       prev = old
       i += 1
     }
-    releaseState(state, prev)
+    Checkpointed.release(state)
+    if (prev ne null) Checkpointed.release(prev)
     chosen.toSeq
-  }
-
-  private def releaseBlocks(df: DataFrame): Unit =
-    df.queryExecution.logical match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
-      case _ => ()
-    }
-
-  private def releaseState(state: DataFrame, prev: DataFrame): Unit = {
-    releaseBlocks(state)
-    if (prev ne null) releaseBlocks(prev)
   }
 
   /** Corpus assignment to the selected centers: (id, center_id,

@@ -52,12 +52,12 @@ object Hits {
     val dec = "decimal(38,0)"
     val e = edges.select(col("src"), col("dst"))
       .localCheckpoint(eager = false)
-    // bounded driver fold (r20, the CC/PageRank tier): every half-step
+    // bounded driver fold (r20, the CC tier): every half-step
     // is a graph-sized job; the fold replays the same integer sums and
     // (s·10¹²) div smax normalization (Long sums are exact under the
     // 2M-edge budget: ≤ 2M·10¹² < 2⁶³; the division runs in BigInt
     // like the decimal(38,0) plan). Bit-identical, parity-tested.
-    if (PageRank.foldable(e, driverFoldEdges))
+    if (foldable(e, driverFoldEdges))
       return scoresLocal(e, iters)
     // node set pre-partitioned by node: every round's two left joins
     // land on this exchange instead of re-shuffling the full node set
@@ -125,6 +125,49 @@ object Hits {
         coalesce(col("a"), lit(0L)).as("authority"))
   }
 
+  /** True when the materialized edge checkpoint is small enough for
+    * the driver fold AND both endpoint columns share one type (the
+    * distributed node set unions them under Spark's coercion; the fold
+    * must not re-implement coercion, so mixed types stay distributed). */
+  private def foldable(e: DataFrame, budget: Long): Boolean =
+    e.schema.fields(0).dataType == e.schema.fields(1).dataType &&
+      Checkpointed.admits(e, budget)
+
+  /** Dense-int interning of node values for the driver fold — the
+    * Any-keyed hash loops measured SLOWER than the distributed rounds
+    * at ~1M string edges; one interning pass then flat long-array
+    * recurrences keep the fold decisively under them. Insertion order
+    * is the node enumeration order (first appearance). */
+  private final class NodeIntern {
+    private val idx = new java.util.HashMap[Any, Integer]()
+    val values = new scala.collection.mutable.ArrayBuffer[Any]()
+    def id(v: Any): Int = {
+      val e = idx.get(v)
+      if (e != null) e.intValue()
+      else { idx.put(v, Integer.valueOf(values.length)); values += v; values.length - 1 }
+    }
+    def nullId: Int = { val e = idx.get(null); if (e == null) -1 else e.intValue() }
+  }
+
+  /** Build the output frame of the driver fold: (node, score...) with
+    * the node column keeping the edge frame's type; `scores` maps the
+    * interned node slot to its score row. */
+  private def localScoreDf(spark: org.apache.spark.sql.SparkSession,
+      nodeType: org.apache.spark.sql.types.DataType,
+      nodes: scala.collection.mutable.ArrayBuffer[Any], scoreCols: Seq[String],
+      scores: Int => Seq[Long]): DataFrame = {
+    import org.apache.spark.sql.types._
+    val schema = StructType(StructField("node", nodeType) +:
+      scoreCols.map(c => StructField(c, LongType)))
+    val out = nodes.iterator.zipWithIndex.map { case (nd, v) =>
+      org.apache.spark.sql.Row.fromSeq(nd +: scores(v))
+    }.toSeq
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(out,
+        math.max(1, math.min(spark.sparkContext.defaultParallelism,
+          1 + out.length / 5000))), schema)
+  }
+
   /** Driver fold of [[scores]] — the same recurrence edge by edge:
     * edges dedupe null-safely (dropDuplicates semantics), a null
     * endpoint never matches a score row (SQL join), but a null-keyed
@@ -134,7 +177,7 @@ object Hits {
   private def scoresLocal(e: DataFrame, iters: Int): DataFrame = {
     val spark = e.sparkSession
     val one = 1000000000000L
-    val in = new PageRank.NodeIntern
+    val in = new NodeIntern
     val dedup = new java.util.LinkedHashSet[Long]() // (srcId << 32) | dstId
     e.collect().foreach { r =>
       val s = in.id(r.get(0)); val d = in.id(r.get(1))
@@ -193,7 +236,7 @@ object Hits {
       val h = halfStep(auth, authV, dstA, srcA)
       hub = h._1; hubV = h._2
     }
-    PageRank.localScoreDf(spark, e.schema.fields(0).dataType, in.values,
+    localScoreDf(spark, e.schema.fields(0).dataType, in.values,
       Seq("hub", "authority"),
       v => Seq(
         if (v != nullId && hub(v)) hubV(v) else 0L,

@@ -50,13 +50,9 @@ object KCore {
     def ckptLazy(df: DataFrame): DataFrame =
       if (useReliable) df.checkpoint(eager = false)
       else df.localCheckpoint(eager = false)
-    def release(df: DataFrame): Unit = df.queryExecution.logical match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
-      case _ => ()
-    }
     var e = ckpt(edges.select(col("src"), col("dst"))
       .where(col("src") =!= col("dst")))
-    useReliable = ConnectedComponents.resolveReliable(e, reliable)
+    useReliable = Checkpointed.resolveReliable(e, reliable)
     var rounds = 0
     var peeled = true
     var deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
@@ -71,7 +67,7 @@ object KCore {
       val deg2 = e2.groupBy("src").agg(count(lit(1)).as("deg"))
       // peel again only if some surviving node fell below k
       peeled = deg2.where(col("deg") < k).count() > 0L
-      release(e)
+      Checkpointed.release(e)
       e = e2
       deg = deg2
     }

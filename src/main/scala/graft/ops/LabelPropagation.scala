@@ -53,78 +53,68 @@ object LabelPropagation {
     require(maxRounds >= 1, s"maxRounds: $maxRounds")
     def ckpt(df: DataFrame): DataFrame = df.localCheckpoint()
     def ckptLazy(df: DataFrame): DataFrame = df.localCheckpoint(false)
-    def release(df: DataFrame): Unit = df.queryExecution.logical match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
-      case _ => ()
-    }
     val und = ckpt(edges.select(col("src").cast("long"), col("dst").cast("long"))
       .where(col("src").isNotNull && col("dst").isNotNull))
     // bounded driver fold: the checkpoint above materialized the edge
     // list, so its exact size decides the tier (the CC discipline)
-    if (driverFoldEdges > 0) {
-      val nEdges = und.queryExecution.logical match {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.count()
-        case _ => Long.MaxValue
-      }
-      if (nEdges <= driverFoldEdges) {
-        val rows = und.collect()
-        release(und)
-        val nbrs = scala.collection.mutable.LongMap
-          .empty[scala.collection.mutable.HashSet[Long]]
-        var labels = scala.collection.mutable.LongMap.empty[Long]
-        rows.foreach { r =>
-          val s = r.getLong(0); val d = r.getLong(1)
-          labels(s) = s; labels(d) = d
-          if (s != d) {
-            nbrs.getOrElseUpdate(s,
-              scala.collection.mutable.HashSet.empty[Long]) += d
-            nbrs.getOrElseUpdate(d,
-              scala.collection.mutable.HashSet.empty[Long]) += s
-          }
+    if (Checkpointed.admits(und, driverFoldEdges)) {
+      val rows = und.collect()
+      Checkpointed.release(und)
+      val nbrs = scala.collection.mutable.LongMap
+        .empty[scala.collection.mutable.HashSet[Long]]
+      var labels = scala.collection.mutable.LongMap.empty[Long]
+      rows.foreach { r =>
+        val s = r.getLong(0); val d = r.getLong(1)
+        labels(s) = s; labels(d) = d
+        if (s != d) {
+          nbrs.getOrElseUpdate(s,
+            scala.collection.mutable.HashSet.empty[Long]) += d
+          nbrs.getOrElseUpdate(d,
+            scala.collection.mutable.HashSet.empty[Long]) += s
         }
-        var round = 0
-        var converged = false
-        while (!converged && round < maxRounds) {
-          val next = scala.collection.mutable.LongMap.empty[Long]
-          var changed = false
-          labels.foreach { case (id, lbl) =>
-            val ns = nbrs.getOrElse(id, null)
-            if (ns == null || ns.isEmpty) next(id) = lbl
-            else {
-              val cnt = scala.collection.mutable.LongMap.empty[Long]
-              ns.foreach { nb =>
-                val l = labels(nb)
-                cnt(l) = cnt.getOrElse(l, 0L) + 1L
-              }
-              var bestL = Long.MaxValue
-              var bestN = 0L
-              cnt.foreach { case (l, c) =>
-                if (c > bestN || (c == bestN && l < bestL)) {
-                  bestN = c; bestL = l
-                }
-              }
-              next(id) = bestL
-              if (bestL != lbl) changed = true
+      }
+      var round = 0
+      var converged = false
+      while (!converged && round < maxRounds) {
+        val next = scala.collection.mutable.LongMap.empty[Long]
+        var changed = false
+        labels.foreach { case (id, lbl) =>
+          val ns = nbrs.getOrElse(id, null)
+          if (ns == null || ns.isEmpty) next(id) = lbl
+          else {
+            val cnt = scala.collection.mutable.LongMap.empty[Long]
+            ns.foreach { nb =>
+              val l = labels(nb)
+              cnt(l) = cnt.getOrElse(l, 0L) + 1L
             }
+            var bestL = Long.MaxValue
+            var bestN = 0L
+            cnt.foreach { case (l, c) =>
+              if (c > bestN || (c == bestN && l < bestL)) {
+                bestN = c; bestL = l
+              }
+            }
+            next(id) = bestL
+            if (bestL != lbl) changed = true
           }
-          converged = !changed
-          labels = next
-          round += 1
         }
-        val spark = edges.sparkSession
-        import spark.implicits._
-        val out = spark.createDataset(
-          labels.toSeq.map { case (id, c) => (id, c) })
-          .toDF("id", "community")
-        return (out, round)
+        converged = !changed
+        labels = next
+        round += 1
       }
+      val spark = edges.sparkSession
+      import spark.implicits._
+      val out = spark.createDataset(
+        labels.toSeq.map { case (id, c) => (id, c) })
+        .toDF("id", "community")
+      return (out, round)
     }
     val sym = ckpt(und.union(und.select(col("dst").as("src"), col("src").as("dst")))
       .where(col("src") =!= col("dst")).distinct()
       .select(col("src").as("e_id"), col("dst").as("e_nbr")))
     val labels0 = ckpt(und.select(explode(array(col("src"), col("dst"))).as("id"))
       .distinct().select(col("id"), col("id").as("community")))
-    release(und)
+    Checkpointed.release(und)
 
     var labels = labels0
     var roundCkpt = labels0
@@ -145,11 +135,11 @@ object LabelPropagation {
           coalesce(col("new_comm"), col("community")).as("community")))
       converged = next.where(col("community") =!= col("old_comm")).count() == 0L
       labels = next.select("id", "community")
-      release(roundCkpt)
+      Checkpointed.release(roundCkpt)
       roundCkpt = next
       round += 1
     }
-    release(sym)
+    Checkpointed.release(sym)
     (labels, round)
   }
 }

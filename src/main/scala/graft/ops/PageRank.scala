@@ -42,19 +42,6 @@ import org.apache.spark.sql.functions._
   */
 object PageRank {
 
-  /** Fold budget for the PageRank family ([[ranks]]/[[personalized]])
-    * and [[ShortestPaths.bounded]] — deliberately far below
-    * [[ConnectedComponents.DriverFoldEdges]] (2M): the r20 driver
-    * capture measured the fold LOSING 0.51–0.87× on the ~1M
-    * string-keyed purchase bipartites (collect of ~1M Rows + ~2M
-    * hash-map interning lookups on a cold driver outweigh the ~6 small
-    * distributed rounds it saves), while CC's distributed rounds are
-    * heavy enough that its 2M budget still pays. HITS keeps the 2M
-    * budget too — its two joins + two max-normalizations per round
-    * make the distributed side ~2× costlier per round (measured 1.89×
-    * improved at ~600k collected rows in the same capture). */
-  val DriverFoldEdges = 250000L
-
   /** Ranks after `iters` rounds over directed `(src, dst)` edges.
     * Output: `(node, rank)` — rank in 10¹² micro-units; the initial
     * mass is `10¹² div |V|` per node and `base = (r0·15) div 100` is
@@ -71,8 +58,7 @@ object PageRank {
     * smoke measured reliable both faster and flatter at that size). */
   def ranks(edges: DataFrame, iters: Int = 5,
       checkpointEvery: Int = 4,
-      reliable: Option[Boolean] = None,
-      driverFoldEdges: Long = DriverFoldEdges): DataFrame = {
+      reliable: Option[Boolean] = None): DataFrame = {
     require(iters >= 1, s"iters $iters must be >= 1")
     var useReliable = reliable.getOrElse(false)
     def ckpt(df: DataFrame): DataFrame =
@@ -82,14 +68,7 @@ object PageRank {
     // an expensive upstream (a join+distinct building the graph) runs
     // exactly once, not once per derived frame
     val e = ckpt(edges.select(col("src"), col("dst")))
-    // bounded driver fold (r20, the CC tier): every round is a
-    // graph-sized job — pure fixed cost on a bounded graph; the fold
-    // replays the SAME integer arithmetic edge by edge (bit-identical,
-    // parity-tested). Explicit `reliable` opts into the distributed
-    // machinery, as in CC.
-    if (reliable.isEmpty && foldable(e, driverFoldEdges))
-      return ranksLocal(e, iters)
-    useReliable = ConnectedComponents.resolveReliable(e, reliable)
+    useReliable = Checkpointed.resolveReliable(e, reliable)
     val nodes = ckpt(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct())
     val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
@@ -123,96 +102,6 @@ object PageRank {
     ranks.withColumnRenamed("r", "rank")
   }
 
-  /** True when the materialized edge checkpoint is small enough for
-    * the driver fold AND both endpoint columns share one type (the
-    * distributed node set unions them under Spark's coercion; the fold
-    * must not re-implement coercion, so mixed types stay distributed). */
-  private[ops] def foldable(e: DataFrame, budget: Long): Boolean =
-    budget > 0 &&
-      e.schema.fields(0).dataType == e.schema.fields(1).dataType && {
-        val n = e.queryExecution.logical match {
-          case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.count()
-          case _ => Long.MaxValue
-        }
-        n <= budget
-      }
-
-  /** Dense-int interning of node values for the driver folds — the
-    * Any-keyed hash loops measured SLOWER than the distributed rounds
-    * at ~1M string edges; one interning pass then flat long-array
-    * recurrences keep the fold decisively under them. Insertion order
-    * is the node enumeration order (first appearance). */
-  private[ops] final class NodeIntern {
-    val idx = new java.util.HashMap[Any, Integer]()
-    val values = new scala.collection.mutable.ArrayBuffer[Any]()
-    def id(v: Any): Int = {
-      val e = idx.get(v)
-      if (e != null) e.intValue()
-      else { idx.put(v, Integer.valueOf(values.length)); values += v; values.length - 1 }
-    }
-    def nullId: Int = { val e = idx.get(null); if (e == null) -1 else e.intValue() }
-  }
-
-  /** Driver fold of [[ranks]] — the identical integral recurrence:
-    * duplicate edges keep their multiplicity (deg counts rows, each
-    * row contributes), null endpoints contribute nothing (a SQL join
-    * never matches null), the null node — if present — still receives
-    * the teleport base, exactly like the distributed left join. */
-  private def ranksLocal(e: DataFrame, iters: Int): DataFrame = {
-    val spark = e.sparkSession
-    val rows = e.collect()
-    val in = new NodeIntern
-    val srcA = new Array[Int](rows.length)
-    val dstA = new Array[Int](rows.length)
-    var k = 0
-    while (k < rows.length) {
-      srcA(k) = in.id(rows(k).get(0)); dstA(k) = in.id(rows(k).get(1)); k += 1
-    }
-    val n = in.values.length
-    require(n > 0, "PageRank on an empty edge frame")
-    val nullId = in.nullId
-    val deg = new Array[Long](n)
-    k = 0
-    while (k < rows.length) { deg(srcA(k)) += 1L; k += 1 }
-    val r0 = 1000000000000L / n
-    val base = (r0 * 15L) / 100L
-    val rank = Array.fill(n)(r0)
-    val m = new Array[Long](n)
-    for (_ <- 1 to iters) {
-      java.util.Arrays.fill(m, 0L)
-      k = 0
-      while (k < rows.length) {
-        val s = srcA(k); val d = dstA(k)
-        if (s != nullId && d != nullId)
-          m(d) += (rank(s) * 85L) / (100L * deg(s))
-        k += 1
-      }
-      var v = 0
-      while (v < n) { rank(v) = base + m(v); v += 1 }
-    }
-    localScoreDf(spark, e.schema.fields(0).dataType, in.values,
-      Seq("rank"), v => Seq(rank(v)))
-  }
-
-  /** Build the output frame of a driver fold: (node, score...) with the
-    * node column keeping the edge frame's type; `scores` maps the
-    * interned node slot to its score row. */
-  private[ops] def localScoreDf(spark: org.apache.spark.sql.SparkSession,
-      nodeType: org.apache.spark.sql.types.DataType,
-      nodes: scala.collection.mutable.ArrayBuffer[Any], scoreCols: Seq[String],
-      scores: Int => Seq[Long]): DataFrame = {
-    import org.apache.spark.sql.types._
-    val schema = StructType(StructField("node", nodeType) +:
-      scoreCols.map(c => StructField(c, LongType)))
-    val out = nodes.iterator.zipWithIndex.map { case (nd, v) =>
-      org.apache.spark.sql.Row.fromSeq(nd +: scores(v))
-    }.toSeq
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(out,
-        math.max(1, math.min(spark.sparkContext.defaultParallelism,
-          1 + out.length / 5000))), schema)
-  }
-
   /** Personalized PageRank: teleport mass returns ONLY to `sources`
     * (uniformly) — proximity-to-the-seed-set centrality, the standard
     * seed-expansion primitive (crawl frontier prioritization from
@@ -226,21 +115,13 @@ object PageRank {
     * Nodes never reached carry rank 0 (they stay in the frame). */
   def personalized(edges: DataFrame, sources: DataFrame, iters: Int = 3,
       checkpointEvery: Int = 4,
-      reliable: Option[Boolean] = None,
-      driverFoldEdges: Long = DriverFoldEdges): DataFrame = {
+      reliable: Option[Boolean] = None): DataFrame = {
     require(iters >= 1, s"iters $iters must be >= 1")
     var useReliable = reliable.getOrElse(false)
     def ckpt(df: DataFrame): DataFrame =
       if (useReliable) df.checkpoint() else df.localCheckpoint()
     val e = ckpt(edges.select(col("src"), col("dst")))
-    // bounded driver fold — see [[ranks]]; sources are a seed set
-    // (bounded by definition), collected alongside the edges. Mixed
-    // source/edge types would need SQL's coercion — stay distributed.
-    if (reliable.isEmpty && foldable(e, driverFoldEdges) &&
-        sources.select(col("node")).schema.fields(0).dataType ==
-          e.schema.fields(0).dataType)
-      return personalizedLocal(e, sources, iters)
-    useReliable = ConnectedComponents.resolveReliable(e, reliable)
+    useReliable = Checkpointed.resolveReliable(e, reliable)
     val nodes0 = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
     // nodes carry the is-source flag for the whole run (one frame, one
@@ -274,59 +155,5 @@ object PageRank {
         ranks = ckpt(ranks)
     }
     ranks.withColumnRenamed("r", "rank")
-  }
-
-  /** Driver fold of [[personalized]] — identical integral recurrence;
-    * a null source value can never flag a node (a SQL join never
-    * matches null), and the null NODE — if present — is never a
-    * source, receives no base, and keeps only joined contributions
-    * (none, since null never matches), exactly like the distributed
-    * plan. */
-  private def personalizedLocal(e: DataFrame, sources: DataFrame,
-      iters: Int): DataFrame = {
-    val spark = e.sparkSession
-    val rows = e.collect()
-    val in = new NodeIntern
-    val srcA = new Array[Int](rows.length)
-    val dstA = new Array[Int](rows.length)
-    var k = 0
-    while (k < rows.length) {
-      srcA(k) = in.id(rows(k).get(0)); dstA(k) = in.id(rows(k).get(1)); k += 1
-    }
-    val n = in.values.length
-    val nullId = in.nullId
-    val deg = new Array[Long](n)
-    k = 0
-    while (k < rows.length) { deg(srcA(k)) += 1L; k += 1 }
-    val isSrc = new Array[Boolean](n)
-    sources.select(col("node")).distinct().collect().foreach { r =>
-      val v = r.get(0)
-      if (v != null) {
-        val e2 = in.idx.get(v)
-        if (e2 != null) isSrc(e2.intValue()) = true
-      }
-    }
-    val nSrc = isSrc.count(identity).toLong
-    require(nSrc > 0, "PageRank.personalized: no source intersects the graph")
-    val r0 = 1000000000000L / nSrc
-    val base = (1000000000000L * 15L / 100L) / nSrc
-    val rank = Array.tabulate(n)(v => if (isSrc(v)) r0 else 0L)
-    val m = new Array[Long](n)
-    for (_ <- 1 to iters) {
-      java.util.Arrays.fill(m, 0L)
-      k = 0
-      while (k < rows.length) {
-        val s = srcA(k); val d = dstA(k)
-        if (s != nullId && d != nullId)
-          m(d) += (rank(s) * 85L) / (100L * deg(s))
-        k += 1
-      }
-      var v = 0
-      while (v < n) {
-        rank(v) = (if (isSrc(v)) base else 0L) + m(v); v += 1
-      }
-    }
-    localScoreDf(spark, e.schema.fields(0).dataType, in.values,
-      Seq("rank"), v => Seq(rank(v)))
   }
 }

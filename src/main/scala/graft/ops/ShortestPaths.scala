@@ -48,10 +48,8 @@ object ShortestPaths {
     * auto-switches when the materialized edge count is at least
     * [[ConnectedComponents.AutoReliableEdges]]. */
   def bounded(edges: DataFrame, sources: DataFrame, maxHops: Int,
-      reliable: Option[Boolean] = None,
-      driverFoldEdges: Long = PageRank.DriverFoldEdges): DataFrame = {
+      reliable: Option[Boolean] = None): DataFrame = {
     require(maxHops >= 1, s"maxHops $maxHops must be >= 1")
-    val spark = edges.sparkSession
     var useReliable = reliable.getOrElse(false)
     def ckpt(df: DataFrame): DataFrame =
       if (useReliable) df.checkpoint() else df.localCheckpoint()
@@ -62,27 +60,13 @@ object ShortestPaths {
     def ckptLazy(df: DataFrame): DataFrame =
       if (useReliable) df.checkpoint(eager = false)
       else df.localCheckpoint(eager = false)
-    def release(df: DataFrame): Unit = df.queryExecution.logical match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
-      case _ => ()
-    }
     val INF = Long.MaxValue
     // one materialization of the caller's edge pipeline (often a
     // join+aggregate building a co-occurrence graph), then pin the
     // src-hash layout every round's join reuses
     val e0 = ckpt(edges.select(col("src"), col("dst"),
       col("w").cast("long").as("w")))
-    // bounded driver fold (r20, the CC tier): each relaxation round is
-    // a graph-sized job; the fold replays the identical min-plus
-    // integer recurrence (bit-identical, parity-tested). Explicit
-    // `reliable` opts into the distributed machinery; a null endpoint
-    // or weight bails out (full-outer-on-null semantics stay with the
-    // SQL plan).
-    if (reliable.isEmpty && PageRank.foldable(e0, driverFoldEdges)) {
-      val local = boundedLocal(e0, sources, maxHops)
-      if (local.isDefined) return local.get
-    }
-    useReliable = ConnectedComponents.resolveReliable(e0, reliable)
+    useReliable = Checkpointed.resolveReliable(e0, reliable)
     val negs = e0.filter(col("w") < 0).limit(1).count()
     require(negs == 0L, "ShortestPaths.bounded: negative edge weight")
     val e = e0.repartition(col("src")).cache()
@@ -109,83 +93,10 @@ object ShortestPaths {
       improving = merged.filter(col("improved")).count() > 0L
       frontier = merged.filter(col("improved")).select("node", "dist")
       state = merged.select("node", "dist")
-      if (roundCkpt ne null) release(roundCkpt)
+      if (roundCkpt ne null) Checkpointed.release(roundCkpt)
       roundCkpt = merged
     }
     e.unpersist()
     state
-  }
-
-  /** Driver fold of [[bounded]] — identical min-plus recurrence over
-    * the collected weighted edges. Returns None (caller falls back to
-    * the distributed rounds) when any endpoint, source or weight is
-    * null — those ride SQL join/full-outer semantics. */
-  private def boundedLocal(e0: DataFrame, sources: DataFrame,
-      maxHops: Int): Option[DataFrame] = {
-    val spark = e0.sparkSession
-    // mixed endpoint/source types would need SQL's coercion — bail
-    if (sources.select(col("node")).schema.fields(0).dataType !=
-        e0.schema.fields(0).dataType) return None
-    val rows = e0.collect()
-    if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)))
-      return None
-    rows.foreach(r => require(r.getLong(2) >= 0,
-      "ShortestPaths.bounded: negative edge weight"))
-    val srcRows = sources.select(col("node")).distinct().collect()
-    if (srcRows.exists(_.isNullAt(0))) return None
-    val in = new PageRank.NodeIntern
-    // sources first: their interned slots lead the node enumeration
-    srcRows.foreach(r => in.id(r.get(0)))
-    val nSrcOnly = in.values.length
-    val srcA = new Array[Int](rows.length)
-    val dstA = new Array[Int](rows.length)
-    val wA = new Array[Long](rows.length)
-    var k = 0
-    while (k < rows.length) {
-      srcA(k) = in.id(rows(k).get(0)); dstA(k) = in.id(rows(k).get(1))
-      wA(k) = rows(k).getLong(2); k += 1
-    }
-    val n = in.values.length
-    val INF = Long.MaxValue
-    val dist = Array.fill(n)(INF)
-    var frontier = new Array[Boolean](n)
-    var i = 0
-    while (i < nSrcOnly) { dist(i) = 0L; frontier(i) = true; i += 1 }
-    var frontierNonEmpty = nSrcOnly > 0
-    var hop = 0
-    while (frontierNonEmpty && hop < maxHops) {
-      hop += 1
-      val cand = Array.fill(n)(INF)
-      k = 0
-      while (k < rows.length) {
-        val s = srcA(k)
-        if (frontier(s)) {
-          val nd = dist(s) + wA(k)
-          val d = dstA(k)
-          if (nd < cand(d)) cand(d) = nd
-        }
-        k += 1
-      }
-      val next = new Array[Boolean](n)
-      frontierNonEmpty = false
-      i = 0
-      while (i < n) {
-        if (cand(i) < dist(i)) {
-          dist(i) = cand(i); next(i) = true; frontierNonEmpty = true
-        }
-        i += 1
-      }
-      frontier = next
-    }
-    val reached = new scala.collection.mutable.ArrayBuffer[Any]()
-    val reachedDist = new scala.collection.mutable.ArrayBuffer[Long]()
-    i = 0
-    while (i < n) {
-      if (dist(i) < INF) { reached += in.values(i); reachedDist += dist(i) }
-      i += 1
-    }
-    Some(PageRank.localScoreDf(spark, sources.select(col("node"))
-        .schema.fields(0).dataType, reached,
-      Seq("dist"), v => Seq(reachedDist(v))))
   }
 }

@@ -99,20 +99,7 @@ object Trend {
       .select(col("key"), col("x"), col("y"))
       .sortWithinPartitions("key", "x")
       .as[(String, Long, Long)]
-      .mapPartitions { it0 =>
-        val it = it0.buffered
-        Iterator.continually {
-          if (!it.hasNext) None
-          else {
-            val key = it.head._1
-            val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-            while (it.hasNext && it.head._1 == key) {
-              val r = it.next(); buf += ((r._2, r._3))
-            }
-            Some((key, buf.toArray))
-          }
-        }.takeWhile(_.isDefined).map(_.get)
-      }
+      .mapPartitions(keyRuns)
       .flatMap { case (key, pts0) =>
         val pts = pts0.sortBy(_._1)
         val n = pts.length
@@ -147,5 +134,33 @@ object Trend {
         }
       }
       .toDF("key", "n_pairs", "slope")
+  }
+
+  /** One `(key, points)` run per key of a partition whose rows arrive
+    * clustered by key — [[theilSen]]'s key repartition and
+    * sortWithinPartitions guarantee it. A key that reappears after its
+    * run closed means that clustering broke; each fragment would then
+    * emit a plausible but wrong slope, so it fails instead. Closed keys
+    * are tracked in a set, not by comparing strings in order: Spark's
+    * UTF8String byte order differs from `String.compareTo` above
+    * U+FFFF. */
+  private[ops] def keyRuns(it0: Iterator[(String, Long, Long)])
+      : Iterator[(String, Array[(Long, Long)])] = {
+    val it = it0.buffered
+    val closed = scala.collection.mutable.HashSet.empty[String]
+    Iterator.continually {
+      if (!it.hasNext) None
+      else {
+        val key = it.head._1
+        if (!closed.add(key)) throw new IllegalStateException(
+          s"theilSen: key '$key' appears in two runs of one partition — " +
+            "its rows are not clustered by key")
+        val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+        while (it.hasNext && it.head._1 == key) {
+          val r = it.next(); buf += ((r._2, r._3))
+        }
+        Some((key, buf.toArray))
+      }
+    }.takeWhile(_.isDefined).map(_.get)
   }
 }

@@ -100,13 +100,13 @@ class ConnectedComponentsSpec extends SparkSpec {
     val edges = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("src", "dst")
       .localCheckpoint()
     // explicit choice always wins, regardless of size or dir
-    assert(ConnectedComponents.resolveReliable(edges, Some(true), threshold = 100L))
-    assert(!ConnectedComponents.resolveReliable(edges, Some(false), threshold = 1L))
+    assert(Checkpointed.resolveReliable(edges, Some(true), threshold = 100L))
+    assert(!Checkpointed.resolveReliable(edges, Some(false), threshold = 1L))
     // auto: 3 edges vs threshold
-    assert(ConnectedComponents.resolveReliable(edges, None, threshold = 3L))
-    assert(ConnectedComponents.resolveReliable(edges, None, threshold = 1L))
-    assert(!ConnectedComponents.resolveReliable(edges, None, threshold = 4L))
-    assert(!ConnectedComponents.resolveReliable(edges, None)) // default 2M
+    assert(Checkpointed.resolveReliable(edges, None, threshold = 3L))
+    assert(Checkpointed.resolveReliable(edges, None, threshold = 1L))
+    assert(!Checkpointed.resolveReliable(edges, None, threshold = 4L))
+    assert(!Checkpointed.resolveReliable(edges, None)) // default 2M
     // end-to-end: auto above threshold produces reliably-checkpointed
     // label state (and the same components)
     val (labels, _, _) = ConnectedComponents.componentsInstrumented(

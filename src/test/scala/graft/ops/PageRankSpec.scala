@@ -42,12 +42,8 @@ class PageRankSpec extends SparkSpec {
 
   test("periodic checkpointing bounds the plan, not the result") {
     val g = undirected(("a", "b"), ("b", "c"), ("c", "a"))
-    // pins the DISTRIBUTED rounds' plan bounding — opt out of the
-    // r20 driver fold (which has no plan to bound)
-    val checked = PageRank.ranks(g, iters = 6, checkpointEvery = 2,
-      driverFoldEdges = 0L)
-    val unchecked = PageRank.ranks(g, iters = 6, checkpointEvery = 0,
-      driverFoldEdges = 0L)
+    val checked = PageRank.ranks(g, iters = 6, checkpointEvery = 2)
+    val unchecked = PageRank.ranks(g, iters = 6, checkpointEvery = 0)
     assert(checked.orderBy("node").collect().toSeq
       === unchecked.orderBy("node").collect().toSeq)
     def planSize(df: org.apache.spark.sql.DataFrame) =

@@ -95,6 +95,16 @@ class TrendSpec extends SparkSpec {
     }
   }
 
+  test("theil-sen: a key split into two runs of one partition fails loudly") {
+    val clustered = Trend.keyRuns(Iterator(("a", 1L, 1L), ("a", 2L, 3L),
+      ("b", 1L, 5L))).map(r => r._1 -> r._2.toSeq).toList
+    assert(clustered == List("a" -> Seq((1L, 1L), (2L, 3L)), "b" -> Seq((1L, 5L))))
+    val e = intercept[IllegalStateException] {
+      Trend.keyRuns(Iterator(("a", 1L, 1L), ("b", 1L, 5L), ("a", 2L, 3L))).toList
+    }
+    assert(e.getMessage.contains("'a'"))
+  }
+
   test("deterministic across partitionings") {
     val rows = (1L to 300L).map(x => ((x % 3).toString, x, (x * 17) % 97))
     val r1 = Trend.fitGrouped(rows.toDF("k", "t", "v").repartition(1),
