@@ -21,8 +21,12 @@ private[ops] object Checkpointed {
   /** Driver-fold admission: a positive `budget` and a checkpoint of at
     * most `budget` rows. A frame that is not a checkpoint is never
     * admitted; a budget of 0 admits nothing and runs no count. */
-  def admits(ds: Dataset[_], budget: Long): Boolean =
-    budget > 0 && rows(ds).exists(_ <= budget)
+  def admits(ds: Dataset[_], budget: Long): Boolean = admits(budget, rows(ds))
+
+  /** [[admits]] over a count the caller already holds; by-name, so a
+    * budget of 0 never forces it. */
+  def admits(budget: Long, rows: => Option[Long]): Boolean =
+    budget > 0 && rows.exists(_ <= budget)
 
   /** Release exactly the blocks a checkpointed frame persisted — no
     * session-global persistent-RDD-id diffing, which would race with
@@ -41,8 +45,15 @@ private[ops] object Checkpointed {
     * `threshold` rows. A frame that is not a checkpoint counts as 0. */
   def resolveReliable(materialized: DataFrame, explicit: Option[Boolean],
       threshold: Long = ConnectedComponents.AutoReliableEdges): Boolean =
+    resolveReliable(materialized, explicit, threshold, rows(materialized))
+
+  /** [[resolveReliable]] over a count of `materialized` the caller
+    * already holds; by-name, so it is forced only in auto mode with a
+    * checkpoint dir set. */
+  def resolveReliable(materialized: DataFrame, explicit: Option[Boolean],
+      threshold: Long, rows: => Option[Long]): Boolean =
     explicit.getOrElse {
       materialized.sparkSession.sparkContext.getCheckpointDir.isDefined &&
-        rows(materialized).getOrElse(0L) >= threshold
+        rows.getOrElse(0L) >= threshold
     }
 }

@@ -110,7 +110,10 @@ object ConnectedComponents {
     // the full edge list, only the ≤ 2·threshold-entry primitive map)
     // — identical min-id components, zero distributed rounds. An
     // explicit `reliable` choice opts into the distributed machinery.
-    if (reliable.isEmpty && Checkpointed.admits(und, driverFoldEdges)) {
+    // one count of `und` serves both the fold admission and the auto
+    // mode below; lazy, so neither runs it when it cannot matter
+    lazy val undRows = Checkpointed.rows(und)
+    if (reliable.isEmpty && Checkpointed.admits(driverFoldEdges, undRows)) {
       // union-find, min-id representative: union hangs the larger
       // root under the smaller, so every tree root is its
       // component's minimum — order-independent, deterministic
@@ -144,7 +147,8 @@ object ConnectedComponents {
     // auto mode: the edge frame is now materialized (locally — the
     // decision predates the mode), so its exact size decides the mode
     // for every downstream cut
-    useReliable = Checkpointed.resolveReliable(und, reliable, autoReliableEdges)
+    useReliable = Checkpointed.resolveReliable(und, reliable,
+      autoReliableEdges, undRows)
     // symmetric closure, checkpointed (not just cached): a cache keeps
     // the upstream logical plan — e.g. a whole near-dup pair pipeline —
     // and every round's join re-runs the optimizer over that subtree;

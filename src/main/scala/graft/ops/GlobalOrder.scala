@@ -76,25 +76,17 @@ object GlobalOrder {
     * one whole extra pass (bench: 4× on curriculum ordering); lineage
     * truncates at first materialization either way, so the pinning
     * guarantee is identical. */
-  private def withPositions(keyed: DataFrame, numPartitions: Int): DataFrame =
+  private def withPositions(keyed: DataFrame, numPartitions: Int): DataFrame = {
+    val n = if (numPartitions > 0) numPartitions
+            else keyed.sparkSession.sessionState.conf.numShufflePartitions
     // MEMORY_AND_DISK (deserialized) measured equal to a properly
     // released cache() on the curriculum shape (0.571 vs 0.569 s,
     // BENCH_ATTRIBUTION_r13.json); the r12 "3.6x regression" was the
     // r11 cache LEAK serving bench re-runs from the leaked entry.
-    withPositionsPinned(keyed, numPartitions,
-      _.localCheckpoint(false,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  /** Pin-strategy-parameterized body — the hook exists so
-    * [[graft.tools.GlobalOrderAttribution]] can measure cache vs
-    * checkpoint variants on the identical plan; production always goes
-    * through [[withPositions]]'s lazy localCheckpoint. */
-  private[graft] def withPositionsPinned(keyed: DataFrame,
-      numPartitions: Int, pin: DataFrame => DataFrame): DataFrame = {
-    val n = if (numPartitions > 0) numPartitions
-            else keyed.sparkSession.sessionState.conf.numShufflePartitions
-    val ranged = pin(keyed.repartitionByRange(n, col("_gkey"))
-      .withColumn("_bucket", spark_partition_id()))
+    val ranged = keyed.repartitionByRange(n, col("_gkey"))
+      .withColumn("_bucket", spark_partition_id())
+      .localCheckpoint(false,
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // bounded: one row per range partition
     val counts = ranged.groupBy("_bucket").count().collect()
       .map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)

@@ -79,4 +79,13 @@ class BenchSpec extends AnyFunSuite {
     // oracle-verified when only the md5 variant is
     assert(SparkEntry.queries.keySet.intersect(SparkEntry.benchOnlyQueries.keySet).isEmpty)
   }
+
+  test("every registry entry name is declared exactly once") {
+    // the three views are built with toMap, which would keep one of
+    // two same-named entries and drop the other without a word
+    val dups = SparkEntry.registry.groupBy(_.name).collect {
+      case (name, es) if es.size > 1 => name
+    }
+    assert(dups.isEmpty, s"declared more than once: ${dups.mkString(", ")}")
+  }
 }

@@ -121,6 +121,37 @@ class ConnectedComponentsSpec extends SparkSpec {
     new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
   }
 
+  test("auto mode above the fold budget counts the edge checkpoint once") {
+    val dir = java.nio.file.Files.createTempDirectory("cc-count-once").toString
+    spark.sparkContext.setCheckpointDir(dir)
+    // call site of each job (its result stage's name, "count at X.scala:N")
+    val sites = scala.collection.mutable.ArrayBuffer[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        sites.synchronized { sites += e.stageInfos.maxBy(_.stageId).name }
+    }
+    // 3 edges over a budget of 1: the fold is refused, then auto mode
+    // reads the same edge count to pick the checkpoint kind
+    val edges = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("src", "dst")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (labels, rounds, _) = ConnectedComponents.componentsInstrumented(
+        edges, reliable = None, driverFoldEdges = 1L)
+      assert(rounds > 0)
+      assert(labels.as[(Long, Long)].collect().toMap ===
+        Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L))
+      // listener events post asynchronously: wait until they stop
+      val deadline = System.nanoTime() + 10e9.toLong
+      var last = -1
+      while (System.nanoTime() < deadline && sites.synchronized(sites.size) != last) {
+        last = sites.synchronized(sites.size); Thread.sleep(200)
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val counts = sites.synchronized(sites.filter(_.contains("Checkpointed.scala")).toList)
+    assert(counts.size === 1, s"edge checkpoint counts: ${counts.mkString("; ")}")
+    new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
+  }
+
   test("auto mode folds small graphs on the driver; explicit mode stays distributed") {
     val edges = Seq((1L, 2L), (2L, 3L), (9L, 9L)).toDF("src", "dst")
     // driver fold: zero distributed rounds, same labels

@@ -51,7 +51,7 @@ class TextAnalysisSpec extends SparkSpec {
       "vi", "hr", "sl", "et", "lt", "lv", "ru", "uk", "bg", "sr", "mk",
       "ar", "fa", "el", "he", "th", "hi", "ja", "zh", "ko", "und",
       "bn", "ta", "te", "gu", "kn", "ml", "pa", "ta", "bn", "or", "or")
-    val got = graft.SparkEntry.langPlanted.toDF("doc_id", "text")
+    val got = graft.entries.TextEntries.langPlanted.toDF("doc_id", "text")
       .orderBy("doc_id")
       .select(TextAnalysis.langId(col("text"))).as[String].collect().toSeq
     assert(got == expected,
@@ -86,7 +86,7 @@ class TextAnalysisSpec extends SparkSpec {
       "଀୿",
       "ଅଆ oriya minority with the latin majority here",
       "ଅଆ")
-    val texts = graft.SparkEntry.langPlanted.map(_._2) ++ hostile
+    val texts = graft.entries.TextEntries.langPlanted.map(_._2) ++ hostile
     val df = texts.zipWithIndex.map { case (t, i) => (i, t) }
       .toDF("i", "text")
     val both = df.select(col("i"),
