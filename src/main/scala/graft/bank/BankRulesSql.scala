@@ -125,12 +125,20 @@ object BankRulesSql {
     "ContactEmail.maxLength" -> maxLen("ContactEmail", 99),
     "ContactEmail.format" -> email("ContactEmail"))
 
-  /** Fixed on-disk home for the oracle's input copies of generated
-    * frames. The generator is seeded and deterministic, so the dump is
-    * pure input data (like the driver's testdata parquet), not a
+  /** On-disk home for the oracle's input copies of generated frames.
+    * The generator is seeded and deterministic, so the dump is pure
+    * input data (like the driver's testdata parquet), not a
     * Spark-result echo; the rules are then applied independently by
-    * each engine. Lives under target/ (build-transient, not in git). */
-  val auxDir = "/root/repo/target/oracle_aux"
+    * each engine. Lives under the `target/` of the build whose classes
+    * run (build-transient, not in git), so two checkouts never share
+    * it: `<checkout>/target/scala-2.13/classes` gives
+    * `<checkout>/target/oracle_aux`. */
+  val auxDir: String = auxDirOf(java.nio.file.Paths.get(
+    getClass.getProtectionDomain.getCodeSource.getLocation.toURI))
+
+  private[bank] def auxDirOf(classes: java.nio.file.Path): String =
+    classes.getParent.getParent.resolve("oracle_aux").toString
+
   val genPath = s"$auxDir/bank_gen.parquet"
   val brokenPath = s"$auxDir/bank_broken.parquet"
 

@@ -682,7 +682,7 @@ private[graft] object EmbeddingEntries {
       // widenScan (r21): the dim² quantized outer product + 200M-row
       // explode ran as ONE task on the unsplittable local file (1.5 s
       // single-task stage); a properly-split corpus passes untouched
-      graft.ops.Ann.widenScan(t(s, dir, "embeddings").select("embedding"))
+      graft.ops.Adaptive.widenScan(t(s, dir, "embeddings").select("embedding"))
         .select(posexplode(flatten(transform(col("embedding"), x =>
           transform(col("embedding"), y =>
             floor(x.cast("double") * y.cast("double") * 1e6).cast("long")))))

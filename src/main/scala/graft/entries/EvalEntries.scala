@@ -23,7 +23,7 @@ private[graft] object EvalEntries {
     // ran as ONE task on the unsplittable local documents file (a
     // 1.2-1.5 s single-task stage in every eval_quality_* entry while
     // 31 cores idled); a properly-split corpus passes through untouched
-    graft.ops.Ann.widenScan(
+    graft.ops.Adaptive.widenScan(
         docs.select(col("source"), col("text"), col("lang")))
       .select(
         col("source"),

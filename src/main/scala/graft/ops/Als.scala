@@ -128,22 +128,24 @@ object Als {
     }
   }
 
-  /** Driver-fold budget (r20): at or below this many materialized
-    * rating rows the whole alternating loop runs on the driver over
-    * the collected triples — every half-step is otherwise a
-    * ratings-sized job (groupByKey + per-key solve), pure fixed cost
-    * on a bounded matrix. BIT-IDENTICAL: same per-group
-    * sort-by-partner fold, same Cholesky, same init — only the
-    * scheduler disappears. ~60 MB collected at the bound; above it the
-    * distributed alternation runs unchanged. */
-  val DriverFoldRatings = 1000000L
+  /** Driver bytes per rating of the fold (~60 MB of collected triples
+    * per million). Within its [[Adaptive.foldRows]] cap the whole
+    * alternating loop runs on the driver (r20): every half-step is
+    * otherwise a ratings-sized job. BIT-IDENTICAL: same per-group
+    * sort-by-partner fold, same Cholesky, same init. */
+  private[graft] val FoldBytesPerRating = 64L
 
   /** Fit `iters` alternating rounds. Items must be bounded (<= 1M
     * distinct — the driver/broadcast side); users are unbounded. */
   def train(ratings: DataFrame, userCol: String, itemCol: String,
       ratingCol: String, rank: Int = 8, reg: Double = 0.1,
-      iters: Int = 5,
-      driverFoldRatings: Long = DriverFoldRatings): AlsModel = {
+      iters: Int = 5): AlsModel =
+    trainCapped(ratings, userCol, itemCol, ratingCol, rank, reg, iters,
+      Adaptive.foldRows(FoldBytesPerRating))
+
+  /** [[train]] under a given fold cap (0: never fold). */
+  private[graft] def trainCapped(ratings: DataFrame, userCol: String, itemCol: String,
+      ratingCol: String, rank: Int, reg: Double, iters: Int, foldRows: Long): AlsModel = {
     require(rank >= 1 && rank <= 256, s"rank out of range: $rank")
     require(iters >= 1, s"iters must be >= 1: $iters")
     require(reg > 0, s"reg must be positive (keeps the normal " +
@@ -164,7 +166,7 @@ object Als {
       i -> Array.tabulate(rank)(d => initVal(i, d, rank))).toMap
     // bounded driver fold: the items collect above materialized the
     // checkpointed rating frame, so its exact row count is free to read
-    if (Checkpointed.admits(r, driverFoldRatings)) {
+    if (Adaptive.admits(foldRows, Adaptive.rows(r))) {
       val triples = r.collect()
       // observation lists sorted ONCE by partner id — the same
       // per-group accumulation order as the distributed

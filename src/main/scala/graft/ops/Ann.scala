@@ -14,61 +14,6 @@ import org.apache.spark.sql.functions._
   */
 object Ann {
 
-  /** Scale-adaptive scan widening (guide §2.5: unsplittable input). A
-    * single-row-group parquet file arrives as ONE effective scan task,
-    * serializing whatever per-row compute sits behind it — here the
-    * |corpus|·|queries|·dim scoring loop, measured as a 4.2 s
-    * single-task stage at sf0.1 while 31 cores idled. When the frame's
-    * planned partition count is below the session's default
-    * parallelism, repartition round-robin up to it: one corpus-bytes
-    * exchange buys full-width scoring. A properly-split corpus (the
-    * 100 TB case — thousands of scan splits) passes through UNTOUCHED:
-    * no exchange is added, so the scale plan shape is unchanged.
-    *
-    * Guarded to SCAN-SHAPED plans: probing `.rdd` on a plan containing
-    * exchanges would execute its AQE query stages eagerly just to read
-    * the partition count (measured as a full duplicate run of the
-    * upstream pipeline). A frame whose optimized plan holds anything
-    * beyond project/filter/generate over a leaf passes through
-    * untouched — those plans end in an exchange whose width the
-    * session's shuffle sizing already governs. */
-  private[graft] def widenScan(df: DataFrame): DataFrame = {
-    val scanShaped = df.queryExecution.optimizedPlan.collectFirst {
-      case n if !ScanShapedNodes(n.getClass.getSimpleName) => n
-    }.isEmpty
-    if (!scanShaped) return df
-    val sc = df.sparkSession.sparkContext
-    val target = sc.defaultParallelism
-    if (df.rdd.getNumPartitions >= target) df else df.repartition(target)
-  }
-
-  /** Logical nodes that never introduce an exchange — the plans on
-    * which the `.rdd` partition-count probe is free. `Generate` stays
-    * in the set by decision; [[pinDerived]] gives its cost. */
-  private val ScanShapedNodes: Set[String] = Set(
-    "Project", "Filter", "Generate", "LogicalRelation", "LogicalRDD",
-    "LocalRelation", "Range", "DataSourceV2ScanRelation")
-
-  /** Materialize a DERIVED frame once (lazy localCheckpoint) before it
-    * feeds several subtrees of one query — [[knnGraph]] references its
-    * corpus three times (centroid seed, cell assignment, probes) and
-    * [[EmbedEval.neighborPurity]] two more, so an un-pinned derived
-    * corpus (a join+aggregate embedding pipeline) re-executes per
-    * reference (measured: the whole SGNS doc-embedding build ran 5×
-    * inside one sgns_embed_eval action). Scan-shaped frames pass
-    * through untouched: re-reading a columnar scan is cheaper than
-    * writing a copy of it to block storage, and at 100 TB the pin
-    * would double the corpus' storage footprint for no saved work.
-    * An explode (`Generate`) or heavy projection over a scan counts as
-    * scan-shaped too, so it is left unpinned and re-executes once per
-    * reference; no measurement supports pinning it. */
-  private[graft] def pinDerived(df: DataFrame): DataFrame = {
-    val scanShaped = df.queryExecution.optimizedPlan.collectFirst {
-      case n if !ScanShapedNodes(n.getClass.getSimpleName) => n
-    }.isEmpty
-    if (scanShaped) df else df.localCheckpoint(eager = false)
-  }
-
   /** Cosine similarity between two float-array columns: native fused
     * expression (graft.expr.CosineSimF) — bit-identical to the
     * higher-order formulation below but one codegen'd loop instead of
@@ -116,7 +61,8 @@ object Ann {
   def bruteTopK(corpus: DataFrame, queries: DataFrame,
                 idCol: String, vecCol: String, k: Int): DataFrame = {
     val q = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv")))
-    val c = widenScan(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv")))
+    val c = Adaptive.widenScan(
+      corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv")))
     val scored = c.crossJoin(q)
       .where(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
@@ -159,19 +105,19 @@ object Ann {
                centroids: Option[DataFrame] = None): DataFrame = {
     // a derived corpus is consumed by three subtrees below (and twice
     // as query + corpus side of the brute path) — pin it once
-    val corpus = pinDerived(corpus0)
+    val corpus = Adaptive.pinDerived(corpus0)
     if (cells <= 0) return bruteTopK(corpus, corpus, idCol, vecCol, k)
     require(nprobe >= 1, "nprobe must be >= 1 when cells are used")
     val cents = broadcast(centroidArray(centroids.getOrElse(
       corpus.select(col(idCol).as("cent_id"), col(vecCol).as("cent_vec"))
         .orderBy(md5(col("cent_id").cast("string")).asc, col("cent_id").asc)
         .limit(cells))))
-    val assigned = widenScan(
+    val assigned = Adaptive.widenScan(
         corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv")))
       .crossJoin(cents)
       .select(col("neighbor_id"), col("cv"),
         bestCell(col("cv"), col("cents")).as("cell"))
-    val probes = widenScan(
+    val probes = Adaptive.widenScan(
         corpus.select(col(idCol).as("query_id"), col(vecCol).as("qv")))
       .crossJoin(cents)
       .select(col("query_id"), col("qv"),
@@ -481,7 +427,7 @@ object Ann {
         .map(r => r.getLong(0) -> r.getSeq[Float](1)).toSeq
     // widenScan (r20): every k-means iteration re-scans the corpus with
     // a k-way argmin per row — widen a narrow scan, no-op otherwise
-    val c = widenScan(corpus.select(col(idCol).as("vid"), col(vecCol).as("cv")))
+    val c = Adaptive.widenScan(corpus.select(col(idCol).as("vid"), col(vecCol).as("cv")))
     for (_ <- 1 to iters) {
       val assigned = c.crossJoin(broadcast(centroidArray(toDf(cents))))
         .select(bestCell(col("cv"), col("cents")).as("cell"), col("cv"))

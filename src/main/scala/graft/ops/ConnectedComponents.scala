@@ -27,33 +27,15 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
-  /** Auto-mode threshold: above this many (directed) input edges the
-    * r7 10 M-edge smoke measured reliable checkpointing both FASTER
-    * (126 vs 162 s — HDFS-path writes beat block-store churn once the
-    * label frame is tens of MB per round) and flatter (round max/min
-    * 1.62 vs 4.57), so big graphs default to it when a checkpoint dir
-    * is available. */
-  val AutoReliableEdges = 2000000L
-
-  /** Auto mode folds the closure on the DRIVER (union-find over the
-    * already-materialized edge list) when the edge count is at or
-    * below this. Rationale: each distributed pointer-jumping round
-    * costs several scheduler round trips and shuffles — pure fixed
-    * overhead when the whole graph fits in a bounded driver structure
-    * (the same bounded-collect budget as IVF centroids or BPE pair
-    * stats: ≤ threshold × 16 bytes in a primitive-keyed map). Above
-    * the threshold — the 100 TB shape, where a blocked near-dup pair
-    * graph is billions of edges — the log-round distributed closure
-    * runs unchanged. An EXPLICIT `reliable` choice always takes the
-    * distributed path: asking for a checkpoint mode is asking for the
-    * distributed machinery. */
-  // 2M (was 500k, r20): the r20 profile measured the distributed
-  // closure on a 1.05M-edge core-core graph (dbscan) at ~10 s of round
-  // fixed cost where the driver fold streams it in ~1 s; 2M edges is
-  // ≤ ~64 MB in the primitive-keyed map — two orders of magnitude
-  // under the driver heap, same answer by construction (min-id
-  // union-find).
-  val DriverFoldEdges = 2000000L
+  /** Driver bytes per input edge of the auto-mode fold — a union-find
+    * over the materialized edge list in a primitive-keyed map of ≤ 2
+    * nodes per edge at 16 bytes each. Within its [[Adaptive.foldRows]]
+    * cap the closure runs on the driver: each distributed round is
+    * scheduler and shuffle fixed cost (r20: ~10 s of rounds on dbscan's
+    * 1.05M-edge graph, ~1 s folded). Above it — the 100 TB shape — the
+    * log-round closure runs unchanged. An EXPLICIT `reliable` choice
+    * always takes the distributed path. */
+  private[graft] val FoldBytesPerEdge = 32L
 
   /** Returns (id, component) for every node appearing in `edges`, with
     * component = min reachable node id. `edges` needs two long-castable
@@ -68,26 +50,31 @@ object ConnectedComponents {
     *
     * The default `None` decides automatically: reliable when a
     * checkpoint dir is set AND the materialized edge count is at least
-    * [[AutoReliableEdges]] (above that size reliable is also the
-    * faster mode — measured, see threshold doc); the local fast path
-    * otherwise. */
+    * [[Adaptive.AutoReliableEdges]] (above that size reliable is also
+    * the faster mode — measured, see threshold doc); the local fast
+    * path otherwise. */
   def components(edges: DataFrame, maxRounds: Int = 20,
-                 reliable: Option[Boolean] = None,
-                 driverFoldEdges: Long = DriverFoldEdges): DataFrame =
-    componentsInstrumented(edges, maxRounds, reliable,
-      driverFoldEdges = driverFoldEdges)._1
+                 reliable: Option[Boolean] = None): DataFrame =
+    componentsInstrumented(edges, maxRounds, reliable)._1
 
   /** [[components]] plus (rounds taken, per-round wall seconds) — the
     * scale-smoke evidence that rounds ≈ log₂(longest chain) and that
     * per-round time stays flat (checkpointing truncates the iterative
     * lineage; without it each round would replan and re-execute every
     * earlier round's DAG). `autoReliableEdges` overrides the
-    * [[AutoReliableEdges]] decision threshold (tests pin the switch
-    * with a tiny graph). */
+    * [[Adaptive.AutoReliableEdges]] decision threshold (tests pin the
+    * switch with a tiny graph). */
   def componentsInstrumented(edges: DataFrame, maxRounds: Int = 20,
                  reliable: Option[Boolean] = None,
-                 autoReliableEdges: Long = AutoReliableEdges,
-                 driverFoldEdges: Long = DriverFoldEdges): (DataFrame, Int, Seq[Double]) = {
+                 autoReliableEdges: Long = Adaptive.AutoReliableEdges)
+      : (DataFrame, Int, Seq[Double]) =
+    componentsCapped(edges, Adaptive.foldRows(FoldBytesPerEdge), maxRounds,
+      reliable, autoReliableEdges)
+
+  /** [[componentsInstrumented]] under a given fold cap (0: never fold). */
+  private[graft] def componentsCapped(edges: DataFrame, foldRows: Long,
+      maxRounds: Int = 20, reliable: Option[Boolean] = None,
+      autoReliableEdges: Long = Adaptive.AutoReliableEdges): (DataFrame, Int, Seq[Double]) = {
     var useReliable = reliable.getOrElse(false)
     def ckpt(df: DataFrame): DataFrame =
       if (useReliable) df.checkpoint() else df.localCheckpoint()
@@ -104,16 +91,12 @@ object ConnectedComponents {
     // n-gram Jaccard pair join) executes once per reference, since
     // exchange reuse never spans separate actions
     val und = ckpt(edges.select(col("src").cast("long"), col("dst").cast("long")))
-    // auto-mode small-graph fold: the materialized edge count is now
-    // exact; at or below the threshold the closure runs as a driver
-    // union-find streamed over the persisted partitions (never holding
-    // the full edge list, only the ≤ 2·threshold-entry primitive map)
-    // — identical min-id components, zero distributed rounds. An
-    // explicit `reliable` choice opts into the distributed machinery.
-    // one count of `und` serves both the fold admission and the auto
+    // auto-mode fold (see [[FoldBytesPerEdge]]), streamed over the
+    // persisted partitions: identical min-id components, zero rounds.
+    // One count of `und` serves both the fold admission and the auto
     // mode below; lazy, so neither runs it when it cannot matter
-    lazy val undRows = Checkpointed.rows(und)
-    if (reliable.isEmpty && Checkpointed.admits(driverFoldEdges, undRows)) {
+    lazy val undRows = Adaptive.rows(und)
+    if (reliable.isEmpty && Adaptive.admits(foldRows, undRows)) {
       // union-find, min-id representative: union hangs the larger
       // root under the smaller, so every tree root is its
       // component's minimum — order-independent, deterministic
@@ -136,7 +119,7 @@ object ConnectedComponents {
           if (rs != rd) { if (rs < rd) parent(rd) = rs else parent(rs) = rd }
         }
       }
-      Checkpointed.release(und)
+      Adaptive.release(und)
       val spark = edges.sparkSession
       import spark.implicits._
       val out = parent.keys.toArray
@@ -147,7 +130,7 @@ object ConnectedComponents {
     // auto mode: the edge frame is now materialized (locally — the
     // decision predates the mode), so its exact size decides the mode
     // for every downstream cut
-    useReliable = Checkpointed.resolveReliable(und, reliable,
+    useReliable = Adaptive.resolveReliable(und, reliable,
       autoReliableEdges, undRows)
     // symmetric closure, checkpointed (not just cached): a cache keeps
     // the upstream logical plan — e.g. a whole near-dup pair pipeline —
@@ -165,7 +148,7 @@ object ConnectedComponents {
     var roundCkpt: DataFrame = labels0
     // `und` fed only the symmetric closure and the initial labels,
     // both now materialized — release its full-edge-copy blocks
-    Checkpointed.release(und)
+    Adaptive.release(und)
 
     var round = 0
     var converged = false
@@ -202,14 +185,14 @@ object ConnectedComponents {
       // accumulated rounds overflowed executor storage and the
       // eviction/GC thrash showed up as 20-80x per-round spikes in the
       // r7 scale smoke (910 s vs 162 s with per-round release).
-      Checkpointed.release(roundCkpt)
+      Adaptive.release(roundCkpt)
       roundCkpt = next
       round += 1
       roundSecs += (System.nanoTime() - roundT0) / 1e9
     }
     // the result depends only on the final round's truncated state —
     // the doubled edge list (the largest persisted object) can go
-    Checkpointed.release(sym)
+    Adaptive.release(sym)
     // silent non-convergence would hand back labels that LOOK like
     // components but still straddle cluster boundaries — fail instead
     if (!converged) throw new IllegalStateException(
@@ -225,8 +208,5 @@ object ConnectedComponents {
     * smokes, repeated dedup passes) otherwise stack dead label frames
     * in storage. Call AFTER consuming the result: the frame cannot be
     * recomputed once its blocks are gone. */
-  def releaseResult(df: DataFrame): Unit =
-    df.queryExecution.logical.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.unpersist(false)
-    }
+  def releaseResult(df: DataFrame): Unit = Adaptive.release(df)
 }

@@ -74,12 +74,12 @@ object Coreset {
         .withColumn("dmin", least(col("dmin"), dist(farVec)))
         .select("id", "v", "dmin")
         .localCheckpoint(false)
-      if (prev ne null) Checkpointed.release(prev)
+      if (prev ne null) Adaptive.release(prev)
       prev = old
       i += 1
     }
-    Checkpointed.release(state)
-    if (prev ne null) Checkpointed.release(prev)
+    Adaptive.release(state)
+    if (prev ne null) Adaptive.release(prev)
     chosen.toSeq
   }
 

@@ -36,8 +36,8 @@ object EmbedEval {
       labelCol: String, k: Int, cells: Int = 0, nprobe: Int = 0): DataFrame = {
     // the corpus feeds the kNN graph AND both label joins — pin a
     // derived corpus once instead of re-executing its pipeline per
-    // reference (scan-shaped corpora pass through, see Ann.pinDerived)
-    val corpus = Ann.pinDerived(corpus0)
+    // reference (scan-shaped corpora pass through, see Adaptive.pinDerived)
+    val corpus = Adaptive.pinDerived(corpus0)
     val g = Ann.knnGraph(corpus, idCol, vecCol, k, cells, nprobe)
     val qLab = corpus.select(col(idCol).cast("long").as("query_id"),
       col(labelCol).as("_qlbl"))

@@ -44,10 +44,20 @@ object Hits {
     *    hub scores key on src) and pays exactly ONE shuffle — the
     *    joined frame into the aggregate — which is the floor for a
     *    shuffle join. */
-  def scores(edges: DataFrame, iters: Int = 5,
-      checkpointEvery: Int = 4,
-      broadcastNodeLimit: Long = 4000000L,
-      driverFoldEdges: Long = ConnectedComponents.DriverFoldEdges): DataFrame = {
+  def scores(edges: DataFrame, iters: Int = 5, checkpointEvery: Int = 4,
+      broadcastNodeLimit: Long = 4000000L): DataFrame =
+    scoresCapped(edges, Adaptive.foldRows(FoldBytesPerEdge), iters,
+      checkpointEvery, broadcastNodeLimit)
+
+  /** Driver bytes per input edge of [[scoresLocal]]: CC's figure
+    * ([[ConnectedComponents.FoldBytesPerEdge]]), not measured for this
+    * fold. */
+  private[graft] val FoldBytesPerEdge = 32L
+
+  /** [[scores]] under a given fold cap (0: never fold). */
+  private[graft] def scoresCapped(edges: DataFrame, foldRows: Long,
+      iters: Int = 5, checkpointEvery: Int = 4,
+      broadcastNodeLimit: Long = 4000000L): DataFrame = {
     require(iters >= 1, s"iters $iters must be >= 1")
     val dec = "decimal(38,0)"
     val e = edges.select(col("src"), col("dst"))
@@ -55,9 +65,12 @@ object Hits {
     // bounded driver fold (r20, the CC tier): every half-step
     // is a graph-sized job; the fold replays the same integer sums and
     // (s·10¹²) div smax normalization (Long sums are exact under the
-    // 2M-edge budget: ≤ 2M·10¹² < 2⁶³; the division runs in BigInt
-    // like the decimal(38,0) plan). Bit-identical, parity-tested.
-    if (foldable(e, driverFoldEdges))
+    // ~2.1M-edge cap: ≤ 2.1M·10¹² < 2⁶³; the division runs in BigInt
+    // like the decimal(38,0) plan). Bit-identical, parity-tested. Mixed
+    // endpoint types stay distributed: the fold does not re-implement
+    // the node-set union's type coercion.
+    if (e.schema.fields(0).dataType == e.schema.fields(1).dataType &&
+        Adaptive.admits(foldRows, Adaptive.rows(e)))
       return scoresLocal(e, iters)
     // node set pre-partitioned by node: every round's two left joins
     // land on this exchange instead of re-shuffling the full node set
@@ -124,14 +137,6 @@ object Hits {
       .select(col("node"), coalesce(col("h"), lit(0L)).as("hub"),
         coalesce(col("a"), lit(0L)).as("authority"))
   }
-
-  /** True when the materialized edge checkpoint is small enough for
-    * the driver fold AND both endpoint columns share one type (the
-    * distributed node set unions them under Spark's coercion; the fold
-    * must not re-implement coercion, so mixed types stay distributed). */
-  private def foldable(e: DataFrame, budget: Long): Boolean =
-    e.schema.fields(0).dataType == e.schema.fields(1).dataType &&
-      Checkpointed.admits(e, budget)
 
   /** Dense-int interning of node values for the driver fold — the
     * Any-keyed hash loops measured SLOWER than the distributed rounds

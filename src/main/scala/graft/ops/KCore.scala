@@ -52,7 +52,7 @@ object KCore {
       else df.localCheckpoint(eager = false)
     var e = ckpt(edges.select(col("src"), col("dst"))
       .where(col("src") =!= col("dst")))
-    useReliable = Checkpointed.resolveReliable(e, reliable)
+    useReliable = Adaptive.resolveReliable(e, reliable)
     var rounds = 0
     var peeled = true
     var deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
@@ -67,7 +67,7 @@ object KCore {
       val deg2 = e2.groupBy("src").agg(count(lit(1)).as("deg"))
       // peel again only if some surviving node fell below k
       peeled = deg2.where(col("deg") < k).count() > 0L
-      Checkpointed.release(e)
+      Adaptive.release(e)
       e = e2
       deg = deg2
     }

@@ -27,29 +27,28 @@ import org.apache.spark.sql.functions._
   * one action; previous round's blocks released. */
 object LabelPropagation {
 
-  /** Driver-fold budget (the [[ConnectedComponents.DriverFoldEdges]]
-    * tier applied to LPA): at or below this many materialized input
-    * edges the synchronous rounds run on the driver over the collected
-    * edge list — every distributed round is a graph-sized job, pure
-    * scheduler/shuffle fixed cost on a bounded graph (r20 profile:
-    * ~0.6 s/round on a 6k-edge kNN graph where the fold does all
-    * rounds in ~10 ms). Identical semantics by construction: same
-    * symmetric-deduped neighborhood, same (count desc, label asc)
-    * argmax, same synchronous update + convergence/maxRounds stop.
-    * Smaller than CC's budget because per-node neighbor sets and label
-    * counts are heavier than union-find's two flat arrays. */
-  val DriverFoldEdges = 500000L
+  /** Driver bytes per input edge of the fold — per-node neighbor sets
+    * and label counts, four times union-find's flat map
+    * ([[ConnectedComponents.FoldBytesPerEdge]]). Within its
+    * [[Adaptive.foldRows]] cap the rounds run on the driver over the
+    * collected edges (r20: ~0.6 s/round distributed on a 6k-edge kNN
+    * graph, all rounds ~10 ms folded), with the same neighborhoods,
+    * (count desc, label asc) argmax and synchronous stop. */
+  private[graft] val FoldBytesPerEdge = 128L
 
   /** (id, community) for every node in `edges` (two long-castable
     * columns src, dst; self-loops admit isolated nodes, which keep
     * their own label). Also returns rounds via
     * [[communitiesInstrumented]]. */
-  def communities(edges: DataFrame, maxRounds: Int = 10,
-      driverFoldEdges: Long = DriverFoldEdges): DataFrame =
-    communitiesInstrumented(edges, maxRounds, driverFoldEdges)._1
+  def communities(edges: DataFrame, maxRounds: Int = 10): DataFrame =
+    communitiesInstrumented(edges, maxRounds)._1
 
-  def communitiesInstrumented(edges: DataFrame, maxRounds: Int = 10,
-      driverFoldEdges: Long = DriverFoldEdges): (DataFrame, Int) = {
+  def communitiesInstrumented(edges: DataFrame, maxRounds: Int = 10): (DataFrame, Int) =
+    communitiesCapped(edges, Adaptive.foldRows(FoldBytesPerEdge), maxRounds)
+
+  /** [[communitiesInstrumented]] under a given fold cap (0: never fold). */
+  private[graft] def communitiesCapped(edges: DataFrame, foldRows: Long,
+      maxRounds: Int = 10): (DataFrame, Int) = {
     require(maxRounds >= 1, s"maxRounds: $maxRounds")
     def ckpt(df: DataFrame): DataFrame = df.localCheckpoint()
     def ckptLazy(df: DataFrame): DataFrame = df.localCheckpoint(false)
@@ -57,9 +56,9 @@ object LabelPropagation {
       .where(col("src").isNotNull && col("dst").isNotNull))
     // bounded driver fold: the checkpoint above materialized the edge
     // list, so its exact size decides the tier (the CC discipline)
-    if (Checkpointed.admits(und, driverFoldEdges)) {
+    if (Adaptive.admits(foldRows, Adaptive.rows(und))) {
       val rows = und.collect()
-      Checkpointed.release(und)
+      Adaptive.release(und)
       val nbrs = scala.collection.mutable.LongMap
         .empty[scala.collection.mutable.HashSet[Long]]
       var labels = scala.collection.mutable.LongMap.empty[Long]
@@ -114,7 +113,7 @@ object LabelPropagation {
       .select(col("src").as("e_id"), col("dst").as("e_nbr")))
     val labels0 = ckpt(und.select(explode(array(col("src"), col("dst"))).as("id"))
       .distinct().select(col("id"), col("id").as("community")))
-    Checkpointed.release(und)
+    Adaptive.release(und)
 
     var labels = labels0
     var roundCkpt = labels0
@@ -135,11 +134,11 @@ object LabelPropagation {
           coalesce(col("new_comm"), col("community")).as("community")))
       converged = next.where(col("community") =!= col("old_comm")).count() == 0L
       labels = next.select("id", "community")
-      Checkpointed.release(roundCkpt)
+      Adaptive.release(roundCkpt)
       roundCkpt = next
       round += 1
     }
-    Checkpointed.release(sym)
+    Adaptive.release(sym)
     (labels, round)
   }
 }

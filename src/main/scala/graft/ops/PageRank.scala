@@ -54,7 +54,7 @@ object PageRank {
     * executor-loss-safe for long production runs; default `None`
     * auto-switches the downstream cuts to reliable when a checkpoint
     * dir is set and the materialized edge count is at least
-    * [[ConnectedComponents.AutoReliableEdges]] (the r7 10 M-edge CC
+    * [[Adaptive.AutoReliableEdges]] (the r7 10 M-edge CC
     * smoke measured reliable both faster and flatter at that size). */
   def ranks(edges: DataFrame, iters: Int = 5,
       checkpointEvery: Int = 4,
@@ -68,7 +68,7 @@ object PageRank {
     // an expensive upstream (a join+distinct building the graph) runs
     // exactly once, not once per derived frame
     val e = ckpt(edges.select(col("src"), col("dst")))
-    useReliable = Checkpointed.resolveReliable(e, reliable)
+    useReliable = Adaptive.resolveReliable(e, reliable)
     val nodes = ckpt(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct())
     val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
@@ -121,7 +121,7 @@ object PageRank {
     def ckpt(df: DataFrame): DataFrame =
       if (useReliable) df.checkpoint() else df.localCheckpoint()
     val e = ckpt(edges.select(col("src"), col("dst")))
-    useReliable = Checkpointed.resolveReliable(e, reliable)
+    useReliable = Adaptive.resolveReliable(e, reliable)
     val nodes0 = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
     // nodes carry the is-source flag for the whole run (one frame, one

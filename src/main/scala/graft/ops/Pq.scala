@@ -52,7 +52,7 @@ object Pq {
       slice(col(vecCol), s * dsub + 1, dsub).as("sv")))
     // widenScan (r20): every k-means iteration scans this frame — on an
     // unsplittable local file the argmin+aggregate ran single-task
-    val ex = graft.ops.Ann.widenScan(
+    val ex = Adaptive.widenScan(
         corpus.select(explode(array(subs: _*)).as("e")))
       .select(col("e.sub").as("sub"), col("e.sv").as("sv"))
       .localCheckpoint(eager = false)
@@ -126,7 +126,7 @@ object Pq {
     }
     // widenScan (r20): m argmins over ksub codewords per row is the
     // heavy per-row stage; widen a narrow scan, no-op otherwise
-    graft.ops.Ann.widenScan(corpus.select(col(idCol), col(vecCol)))
+    Adaptive.widenScan(corpus.select(col(idCol), col(vecCol)))
       .select(col(idCol).as("id"), array(codeCols: _*).as("codes"))
   }
 

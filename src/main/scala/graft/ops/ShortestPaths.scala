@@ -46,7 +46,7 @@ object ShortestPaths {
     * `reliable` mirrors [[PageRank.ranks]]: `Some(true)` checkpoints
     * every cut to the SparkContext checkpoint dir; default `None`
     * auto-switches when the materialized edge count is at least
-    * [[ConnectedComponents.AutoReliableEdges]]. */
+    * [[Adaptive.AutoReliableEdges]]. */
   def bounded(edges: DataFrame, sources: DataFrame, maxHops: Int,
       reliable: Option[Boolean] = None): DataFrame = {
     require(maxHops >= 1, s"maxHops $maxHops must be >= 1")
@@ -66,7 +66,7 @@ object ShortestPaths {
     // src-hash layout every round's join reuses
     val e0 = ckpt(edges.select(col("src"), col("dst"),
       col("w").cast("long").as("w")))
-    useReliable = Checkpointed.resolveReliable(e0, reliable)
+    useReliable = Adaptive.resolveReliable(e0, reliable)
     val negs = e0.filter(col("w") < 0).limit(1).count()
     require(negs == 0L, "ShortestPaths.bounded: negative edge weight")
     val e = e0.repartition(col("src")).cache()
@@ -93,7 +93,7 @@ object ShortestPaths {
       improving = merged.filter(col("improved")).count() > 0L
       frontier = merged.filter(col("improved")).select("node", "dist")
       state = merged.select("node", "dist")
-      if (roundCkpt ne null) Checkpointed.release(roundCkpt)
+      if (roundCkpt ne null) Adaptive.release(roundCkpt)
       roundCkpt = merged
     }
     e.unpersist()

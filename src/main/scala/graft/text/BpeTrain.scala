@@ -39,21 +39,15 @@ object BpeTrain {
   /** End-of-word marker symbol (kept distinct from any character). */
   val EndOfWord = "</w>"
 
-  /** Driver-fold budget: when the corpus' distinct-word vocabulary has
-    * at most this many entries, the merge loop runs on the DRIVER over
-    * the collected (word, freq) table — the same bounded-collect tier
-    * as [[graft.ops.ConnectedComponents.DriverFoldEdges]] and the IVF
-    * centroid collects. Rationale: every merge round is a vocab-sized
-    * job, so below the budget the whole loop is pure scheduler/shuffle
-    * fixed cost (measured 0.3 s/round at a 20k-word vocab = 14.5 s for
-    * a 1k-merge induction that folds in ~1.5 s on the driver); above
-    * it — web-corpus vocabularies with hundreds of millions of hapaxes
-    * — the distributed loop runs unchanged. 1M words ≈ tens of MB
-    * driver-resident, the standard model-data bound here. The fold is
-    * BIT-IDENTICAL to the distributed loop: same greedy counting, same
-    * top-(want·4) candidate window, same (count desc, pair asc) order,
-    * same batch selection — pinned by BpeTrainSpec. */
-  val DriverFoldWords = 1000000
+  /** Driver bytes per distinct word of the fold's (word, freq) table.
+    * Within its [[graft.ops.Adaptive.foldRows]] cap the merge loop runs
+    * on the driver: every merge round is a vocab-sized job (0.3 s/round
+    * at a 20k-word vocab = 14.5 s for a 1k-merge induction that folds
+    * in ~1.5 s). Above it — web vocabularies with hundreds of millions
+    * of hapaxes — the distributed loop runs. BIT-IDENTICAL: same greedy
+    * counting, top-(want·4) window, (count desc, pair asc) order and
+    * batch selection — pinned by BpeTrainSpec. */
+  private[graft] val FoldBytesPerWord = 64L
 
   /** Greedy left-to-right merge of one adjacent pair in a symbol
     * sequence — the reference semantics ("a a a" + (a,a) → ["aa","a"]). */
@@ -83,8 +77,13 @@ object BpeTrain {
     * linearly, which is what makes a realistic ≥1k-merge vocabulary
     * affordable when every round is a driver-coordinated job. */
   def train(docs: DataFrame, textCol: String, numMerges: Int,
-            batchK: Int = 1, autoBatch: Boolean = false,
-            driverFoldWords: Int = DriverFoldWords): Seq[(String, String)] = {
+            batchK: Int = 1, autoBatch: Boolean = false): Seq[(String, String)] =
+    trainCapped(docs, textCol, numMerges, batchK, autoBatch,
+      graft.ops.Adaptive.foldRows(FoldBytesPerWord).toInt)
+
+  /** [[train]] under a given fold cap (0: fold only an empty vocabulary). */
+  private[graft] def trainCapped(docs: DataFrame, textCol: String, numMerges: Int,
+      batchK: Int, autoBatch: Boolean, foldRows: Int): Seq[(String, String)] = {
     require(numMerges > 0 && batchK >= 1)
     val spark = docs.sparkSession
     import spark.implicits._
@@ -93,14 +92,12 @@ object BpeTrain {
     // runs wherever the vocabulary's size says it should.
     val wf = Bpe.wordFreq(docs, textCol).as[(String, Long)]
       .localCheckpoint(true)
-    // bounded driver fold (see [[DriverFoldWords]]): the limit-probed
+    // bounded driver fold (see [[FoldBytesPerWord]]): the limit-probed
     // collect reads the checkpoint, costs one vocab-bounded job, and
-    // decides the tier — at or below the budget the whole loop runs on
+    // decides the tier — at or below the cap the whole loop runs on
     // the driver with bit-identical semantics; above it, distributed.
-    val head =
-      if (driverFoldWords > 0) wf.limit(driverFoldWords + 1).collect()
-      else Array.empty[(String, Long)]
-    if (driverFoldWords > 0 && head.length <= driverFoldWords) {
+    val head = wf.limit(foldRows + 1).collect()
+    if (head.length <= foldRows) {
       wf.unpersist()
       return trainLocal(head, numMerges, batchK, autoBatch)
     }
@@ -323,7 +320,7 @@ object BpeTrain {
     val idx = docs.schema.fieldIndex(textCol)
     // widenScan (r21): the per-word merge loop is the heavy per-row
     // stage; on an unsplittable local file it ran single-task
-    graft.ops.Ann.widenScan(docs).mapPartitions { rows =>
+    graft.ops.Adaptive.widenScan(docs).mapPartitions { rows =>
       val ms = bc.value
       rows.map { r =>
         val text = r.getString(idx)

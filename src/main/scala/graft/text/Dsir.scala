@@ -59,7 +59,7 @@ object Dsir {
     // scan stage — on an unsplittable local file that whole pipeline
     // sat on one task (0.8 s while 31 cores idled). Guarded: derived
     // (non-scan-shaped) inputs pass through untouched.
-    val feats = graft.ops.Ann.widenScan(docs.select(col(idCol), col(textCol)))
+    val feats = graft.ops.Adaptive.widenScan(docs.select(col(idCol), col(textCol)))
       .select(col(idCol).as("doc_id"),
         explode(concat(toks, bigrams)).as("feat"))
     val bucket =

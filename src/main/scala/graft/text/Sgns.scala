@@ -523,10 +523,10 @@ object Sgns {
   /** The shared (doc_id, word) tokenize both document-embedding passes
     * consume; widened when the underlying scan planned below the
     * session parallelism (single-row-group local files — a no-op on a
-    * properly-split corpus, see [[graft.ops.Ann.widenScan]]). */
+    * properly-split corpus, see [[graft.ops.Adaptive.widenScan]]). */
   private def tokensOf(docs: DataFrame, idCol: String,
       textCol: String): DataFrame =
-    graft.ops.Ann.widenScan(
+    graft.ops.Adaptive.widenScan(
         docs.select(col(idCol).as("doc_id"), col(textCol).as("_t")))
       .select(col("doc_id"),
         explode(filter(split(trim(lower(col("_t"))), "\\s+"),

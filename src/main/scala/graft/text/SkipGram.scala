@@ -74,7 +74,7 @@ object SkipGram {
     // (unlike the plain window-2 pairs()/trainingPairs() tokenize,
     // where the r20 A/B measured the extra exchange as a net loss);
     // a properly-split corpus passes through untouched
-    graft.ops.Ann.widenScan(docs.select(col(idCol).as("doc_id"),
+    graft.ops.Adaptive.widenScan(docs.select(col(idCol).as("doc_id"),
         col(textCol).as("_t")))
       .select(col("doc_id"), explode(concat(perOffset: _*)).as("p"))
       .select(explode(array(

@@ -227,7 +227,7 @@ object UnigramTokenizer {
     val idx = docs.schema.fieldIndex(textCol)
     // widenScan (r21): per-word Viterbi is the heavy per-row stage; on
     // an unsplittable local file it ran single-task
-    graft.ops.Ann.widenScan(docs).mapPartitions { rows =>
+    graft.ops.Adaptive.widenScan(docs).mapPartitions { rows =>
       val m = bc.value
       rows.map { r =>
         val text = r.getString(idx)

@@ -56,8 +56,7 @@ object Winnowing {
   def fingerprints(df: DataFrame, idCol: String, textCol: String,
                    k: Int = 5, w: Int = 4,
                    replayable: Boolean = true,
-                   caseFold: Boolean = true,
-                   widen: Boolean = false): DataFrame = {
+                   caseFold: Boolean = true): DataFrame = {
     require(k >= 1 && w >= 1, s"k=$k, w=$w must be >= 1")
     val hashOne =
       if (replayable) "x -> CAST(conv(substr(md5(x), 1, 15), 16, 10) AS BIGINT)"
@@ -65,16 +64,8 @@ object Winnowing {
     // caseFold = false keeps positions valid on the ORIGINAL text
     // (what span removal needs; Unicode case folding is not always
     // length-preserving)
-    // widen (r21, opt-in per caller): the long-gram (k=20) span/
-    // boilerplate paths ran their charGrams + per-gram hash on the
-    // unsplittable local file's ONE scan task (1.9 s single-task at
-    // sf0.1 on the boilerplate entry) and win from spreading it; the
-    // cheap k=5 fingerprint paths measured the extra exchange as a
-    // net LOSS (winnow_corpus 0.40 -> 0.80 s), so they keep the
-    // narrow shape. A properly-split corpus passes through untouched.
-    val src = df.select(col(idCol).as("id"),
-      (if (caseFold) lower(col(textCol)) else col(textCol)).as("s"))
-    (if (widen) graft.ops.Ann.widenScan(src) else src)
+    df.select(col(idCol).as("id"),
+        (if (caseFold) lower(col(textCol)) else col(textCol)).as("s"))
       .where(length(col("s")) >= k + w - 1)
       .select(col("id"),
         graft.expr.CharGrams.charGrams(col("s"), k, distinct = false).as("g"))
@@ -122,8 +113,13 @@ object Winnowing {
       replayable: Boolean = true): DataFrame = {
     require(minDf >= 2, s"minDf=$minDf must be >= 2")
     import org.apache.spark.sql.expressions.Window
-    val fps = fingerprints(df, idCol, textCol, k, w, replayable,
-      caseFold = false, widen = true)
+    // widened (r21): the k=20 charGrams + per-gram hash ran on the
+    // unsplittable local file's ONE scan task (1.9 s single-task at
+    // sf0.1 on the boilerplate entry); the cheap k=5 fingerprint paths
+    // measured the extra exchange as a net LOSS (winnow_corpus 0.40 ->
+    // 0.80 s), so they keep the narrow shape
+    val fps = fingerprints(graft.ops.Adaptive.widenScan(df.select(idCol, textCol)),
+      idCol, textCol, k, w, replayable, caseFold = false)
     val dup = fps.select("fp", "id").distinct()
       .groupBy("fp").agg(count(lit(1)).as("n_docs"))
       .where(col("n_docs") >= minDf)
@@ -157,8 +153,9 @@ object Winnowing {
       k: Int = 20, w: Int = 8, minDf: Long = 10,
       topK: Int = 20): DataFrame = {
     require(minDf >= 2 && topK >= 1, "need minDf >= 2, topK >= 1")
-    val fps = fingerprints(df, idCol, textCol, k, w, replayable = true,
-      caseFold = false, widen = true)
+    // widened as in duplicateSpans
+    val fps = fingerprints(graft.ops.Adaptive.widenScan(df.select(idCol, textCol)),
+      idCol, textCol, k, w, replayable = true, caseFold = false)
     val dfreq = fps.select("fp", "id").distinct()
       .groupBy("fp").agg(count(lit(1)).as("n_docs"))
       .where(col("n_docs") >= minDf)

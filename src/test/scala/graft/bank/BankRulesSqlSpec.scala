@@ -1,5 +1,6 @@
 package graft.bank
 
+import java.nio.file.Paths
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The SQL double-entry must stay 1:1 with the Column rule set: same
@@ -19,6 +20,16 @@ class BankRulesSqlSpec extends AnyFunSuite {
       assert(msgs(n).nonEmpty, s"$n has no message")
       assert(p.trim.nonEmpty, s"$n has an empty predicate")
     }
+  }
+
+  test("oracle inputs live under the target/ of the build whose classes run") {
+    assert(BankRulesSql.auxDirOf(Paths.get("/co/target/scala-2.13/classes")) ===
+      Paths.get("/co/target/oracle_aux").toString)
+    val classes = Paths.get(
+      BankRulesSql.getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+    val target = Paths.get(BankRulesSql.auxDir).getParent
+    assert(target.getFileName.toString === "target")
+    assert(classes.startsWith(target), s"${BankRulesSql.auxDir} is outside $classes's build")
   }
 
   test("generated SQL parenthesizes every predicate (safe to OR-join)") {

@@ -54,13 +54,13 @@ class AlsSpec extends SparkSpec {
 
   test("driver fold and distributed alternation agree bit-for-bit (r20)") {
     def run(budget: Long) = {
-      val m = Als.train(lowRank, "user", "item", "rating",
-        rank = 2, reg = 0.1, iters = 3, driverFoldRatings = budget)
+      val m = Als.trainCapped(lowRank, "user", "item", "rating",
+        rank = 2, reg = 0.1, iters = 3, foldRows = budget)
       (m.userFactors.orderBy("user").collect()
         .map(r => (r.getString(0), r.getSeq[Double](1).toSeq)).toSeq,
         m.itemFactors.toSeq.sortBy(_._1).map { case (k, v) => (k, v.toSeq) })
     }
-    assert(run(0L) == run(Als.DriverFoldRatings))
+    assert(run(0L) == run(Adaptive.foldRows(Als.FoldBytesPerRating)))
   }
 
   test("item cap and unknown-item predictions") {

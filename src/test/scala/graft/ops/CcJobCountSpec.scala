@@ -32,7 +32,7 @@ class CcJobCountSpec extends SparkSpec {
     val edges = Seq((1L, 2L)).toDF("src", "dst")
     spark.sparkContext.addSparkListener(counting)
     try {
-      val m = ConnectedComponents.components(edges, driverFoldEdges = 0L)
+      val m = ConnectedComponents.componentsCapped(edges, foldRows = 0L)._1
         .as[(Long, Long)].collect().toMap
       assert(m === Map(1L -> 1L, 2L -> 1L))
       // listener events post asynchronously — wait until the stream is

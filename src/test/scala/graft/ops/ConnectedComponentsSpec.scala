@@ -12,7 +12,7 @@ class ConnectedComponentsSpec extends SparkSpec {
     val df = edges.toDF("src", "dst")
     val folded = ConnectedComponents.components(df)
       .as[(Long, Long)].collect().toMap
-    val dist = ConnectedComponents.components(df, driverFoldEdges = 0L)
+    val dist = ConnectedComponents.componentsCapped(df, foldRows = 0L)._1
       .as[(Long, Long)].collect().toMap
     assert(folded === dist, "driver fold and distributed rounds disagree")
     folded
@@ -66,9 +66,9 @@ class ConnectedComponentsSpec extends SparkSpec {
     // round spikes) — after the run at most one round's state and the
     // symmetric edge list may remain
     val before = spark.sparkContext.getPersistentRDDs.size
-    val labels = ConnectedComponents.components(
+    val (labels, _, _) = ConnectedComponents.componentsCapped(
       (0L until 63L).map(i => (i, i + 1)).toDF("src", "dst"),
-      driverFoldEdges = 0L)
+      foldRows = 0L)
     assert(labels.select(countDistinct("component")).head().getLong(0) == 1L)
     // only the FINAL round's label state may remain (und, sym, and
     // every earlier round are released via their LogicalRDD handles)
@@ -89,8 +89,8 @@ class ConnectedComponentsSpec extends SparkSpec {
   test("non-convergence at maxRounds throws instead of returning bad labels") {
     val edges = (0L until 63L).map(i => (i, i + 1)).toDF("src", "dst")
     intercept[IllegalStateException] {
-      ConnectedComponents.components(edges, maxRounds = 2,
-        driverFoldEdges = 0L).collect()
+      ConnectedComponents.componentsCapped(edges, foldRows = 0L,
+        maxRounds = 2)._1.collect()
     }
   }
 
@@ -100,17 +100,17 @@ class ConnectedComponentsSpec extends SparkSpec {
     val edges = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("src", "dst")
       .localCheckpoint()
     // explicit choice always wins, regardless of size or dir
-    assert(Checkpointed.resolveReliable(edges, Some(true), threshold = 100L))
-    assert(!Checkpointed.resolveReliable(edges, Some(false), threshold = 1L))
+    assert(Adaptive.resolveReliable(edges, Some(true), threshold = 100L))
+    assert(!Adaptive.resolveReliable(edges, Some(false), threshold = 1L))
     // auto: 3 edges vs threshold
-    assert(Checkpointed.resolveReliable(edges, None, threshold = 3L))
-    assert(Checkpointed.resolveReliable(edges, None, threshold = 1L))
-    assert(!Checkpointed.resolveReliable(edges, None, threshold = 4L))
-    assert(!Checkpointed.resolveReliable(edges, None)) // default 2M
+    assert(Adaptive.resolveReliable(edges, None, threshold = 3L))
+    assert(Adaptive.resolveReliable(edges, None, threshold = 1L))
+    assert(!Adaptive.resolveReliable(edges, None, threshold = 4L))
+    assert(!Adaptive.resolveReliable(edges, None)) // default 2M
     // end-to-end: auto above threshold produces reliably-checkpointed
     // label state (and the same components)
-    val (labels, _, _) = ConnectedComponents.componentsInstrumented(
-      edges, reliable = None, autoReliableEdges = 1L, driverFoldEdges = 0L)
+    val (labels, _, _) = ConnectedComponents.componentsCapped(
+      edges, foldRows = 0L, reliable = None, autoReliableEdges = 1L)
     val reliableState = labels.queryExecution.logical.collectFirst {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
         l.rdd.getCheckpointFile.isDefined
@@ -135,8 +135,8 @@ class ConnectedComponentsSpec extends SparkSpec {
     val edges = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("src", "dst")
     spark.sparkContext.addSparkListener(listener)
     try {
-      val (labels, rounds, _) = ConnectedComponents.componentsInstrumented(
-        edges, reliable = None, driverFoldEdges = 1L)
+      val (labels, rounds, _) = ConnectedComponents.componentsCapped(
+        edges, foldRows = 1L, reliable = None)
       assert(rounds > 0)
       assert(labels.as[(Long, Long)].collect().toMap ===
         Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L))
@@ -147,7 +147,7 @@ class ConnectedComponentsSpec extends SparkSpec {
         last = sites.synchronized(sites.size); Thread.sleep(200)
       }
     } finally spark.sparkContext.removeSparkListener(listener)
-    val counts = sites.synchronized(sites.filter(_.contains("Checkpointed.scala")).toList)
+    val counts = sites.synchronized(sites.filter(_.contains("Adaptive.scala")).toList)
     assert(counts.size === 1, s"edge checkpoint counts: ${counts.mkString("; ")}")
     new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
   }
@@ -165,8 +165,8 @@ class ConnectedComponentsSpec extends SparkSpec {
       edges, reliable = Some(false))
     assert(rounds2 > 0)
     // threshold boundary: 3 edges with threshold 2 goes distributed
-    val (_, rounds3, _) = ConnectedComponents.componentsInstrumented(
-      edges, driverFoldEdges = 2L)
+    val (_, rounds3, _) = ConnectedComponents.componentsCapped(
+      edges, foldRows = 2L)
     assert(rounds3 > 0)
   }
 

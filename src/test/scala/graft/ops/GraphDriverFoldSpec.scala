@@ -68,7 +68,7 @@ class GraphDriverFoldSpec extends SparkSpec {
 
   test("Hits.scores: fold == distributed") {
     val fold = m(Hits.scores(edges, iters = 4))
-    val dist = m(Hits.scores(edges, iters = 4, driverFoldEdges = 0L))
+    val dist = m(Hits.scoresCapped(edges, foldRows = 0L, iters = 4))
     assert(fold == dist)
   }
 

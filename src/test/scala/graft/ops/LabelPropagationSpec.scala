@@ -58,8 +58,8 @@ class LabelPropagationSpec extends SparkSpec {
     }.toDF("src", "dst")
     val fold = LabelPropagation.communities(edges, maxRounds = 6)
       .as[(Long, Long)].collect().toMap
-    val dist = LabelPropagation.communities(edges, maxRounds = 6,
-        driverFoldEdges = 0L)
+    val dist = LabelPropagation.communitiesCapped(edges, foldRows = 0L,
+        maxRounds = 6)._1
       .as[(Long, Long)].collect().toMap
     assert(fold == dist)
   }

@@ -102,8 +102,8 @@ class BpeTrainSpec extends SparkSpec {
       (i.toLong, w.mkString(" ") + (if (i % 7 == 0) " héllo wörld ābc" else ""))
     }.toDF("doc_id", "text")
     for ((k, auto) <- Seq((1, false), (3, false), (1, true))) {
-      val dist = BpeTrain.train(docs, "text", numMerges = 40,
-        batchK = k, autoBatch = auto, driverFoldWords = 0)
+      val dist = BpeTrain.trainCapped(docs, "text", numMerges = 40,
+        batchK = k, autoBatch = auto, foldRows = 0)
       val fold = BpeTrain.train(docs, "text", numMerges = 40,
         batchK = k, autoBatch = auto)
       assert(fold == dist, s"tiers diverge at batchK=$k autoBatch=$auto")
