@@ -1,5 +1,6 @@
 package graft.rules
 
+import graft.expr.AnyTrue
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -12,8 +13,12 @@ import org.apache.spark.sql.functions._
   * DM_bankfile_validate_pipeline.py:833).
   *
   * Rules are pure `Column` expressions: evaluating a whole RuleSet is ONE
-  * narrow projection — no UDF, no shuffle, whole-stage-codegen'd — so a
-  * 100 TB scan validates at I/O speed.
+  * narrow projection — no UDF, no shuffle. Validity
+  * ([[RuleSet.violatedCol]]) is one whole-stage-codegen'd
+  * [[graft.expr.AnyTrue]] with each rule in its own small method; the
+  * message array ([[RuleSet.errorsCol]]) is evaluated interpreted
+  * (Spark's `filter` is a `CodegenFallback`), so callers build it only
+  * for the rows that are invalid.
   *
   * @param name      stable identifier (used in summaries)
   * @param violation boolean Column, true ⇔ the row breaks this rule
@@ -40,9 +45,16 @@ final case class RuleSet(rules: Seq[Rule]) {
   def +(r: Rule): RuleSet = RuleSet(rules :+ r)
 
   /** `array<string>` of messages for every violated rule, in declaration
-    * order. Empty array ⇔ valid row. */
+    * order; empty exactly when [[violatedCol]] is false. Interpreted per
+    * row (`filter` is a `CodegenFallback`): filter on [[violatedCol]]
+    * first and build it for the invalid rows only. */
   def errorsCol: Column =
     filter(array(rules.map(_.messageOrNull): _*), _.isNotNull)
+
+  /** True ⇔ the row violates at least one rule (a NULL violation is
+    * not one): the one definition of row validity. A codegen'd
+    * [[graft.expr.AnyTrue]] over the violations, in declaration order. */
+  def violatedCol: Column = AnyTrue.anyTrue(rules.map(_.violation))
 }
 
 object RuleSet {

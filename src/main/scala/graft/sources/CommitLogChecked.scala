@@ -21,21 +21,23 @@ import org.apache.spark.sql.functions._
   * the rejects durably recorded and the data invisible — a retry
   * overwrites its own partitions and no-ops on existing markers
   * (never a duplicate, never an accepted row whose rejects vanished).
-  * The validation itself is ONE narrow projection (no shuffle, stays
-  * in whole-stage codegen) over a lazily-checkpointed frame, so the
-  * source is computed once for both routes.
+  * Validity is [[graft.rules.RuleSet.violatedCol]] (one whole-stage-
+  * codegen'd kernel, no shuffle), computed once into a
+  * lazily-checkpointed frame, so the source is computed once for both
+  * routes. The interpreted message array is built on the reject route
+  * only.
   */
 object CommitLogChecked {
 
   val ErrorsCol = "_errors"
 
   private def routed(df: DataFrame, rules: RuleSet): (DataFrame, DataFrame) = {
-    val v = df.withColumn("__errs", rules.errorsCol)
+    val v = df.withColumn("__bad", rules.violatedCol)
       .localCheckpoint(eager = false)
-    (v.where(size(col("__errs")) === 0).drop("__errs"),
-      v.where(size(col("__errs")) > 0)
-        .withColumn(ErrorsCol, concat_ws(", ", col("__errs")))
-        .drop("__errs"))
+    (v.where(!col("__bad")).drop("__bad"),
+      v.where(col("__bad"))
+        .withColumn(ErrorsCol, concat_ws(", ", rules.errorsCol))
+        .drop("__bad"))
   }
 
   /** [[CommitLog.writeBatchWithStats]] with the rule set enforced:

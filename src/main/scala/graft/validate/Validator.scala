@@ -11,8 +11,12 @@ import org.apache.spark.sql.functions._
   * `FILENAME|PayeeId|ERROR_DESC` artifacts,
   * /root/reference/DM_bankfile_validate_pipeline.py:833,969).
   *
-  * Scale notes: `validate` adds one array column — no shuffle, stays in
-  * whole-stage codegen; at 100 TB it is scan-bound. `summary` is a
+  * Scale notes: validity is [[graft.rules.RuleSet.violatedCol]], one
+  * whole-stage-codegen'd kernel that runs each rule in its own small
+  * method, with no shuffle. `split` and `splitCounts` read only that.
+  * The `errors` array is still interpreted (Spark's `filter` is a
+  * `CodegenFallback`), and `errorFile` builds it only for the invalid
+  * rows that pass its validity filter. `summary` is a
   * single partial-aggregable `agg` (one sum per rule, map-side combined,
   * result is #rules rows). `split` filters the same plan twice — callers
   * that need both sides at scale should `persist()` the validated frame
@@ -24,16 +28,17 @@ object Validator {
   val ErrorsCol = "errors"
   val ValidCol = "is_valid"
 
-  /** df + `errors: array<string>` + `is_valid: boolean`. */
+  /** df + `errors: array<string>` + `is_valid: boolean`, where
+    * `is_valid` is `!violatedCol` (not a test on `errors`, so a plan
+    * that drops `errors` never builds it). */
   def validate(df: DataFrame, rules: RuleSet): DataFrame =
     df.withColumn(ErrorsCol, rules.errorsCol)
-      .withColumn(ValidCol, size(col(ErrorsCol)) === 0)
+      .withColumn(ValidCol, !rules.violatedCol)
 
-  /** (valid rows, invalid rows), both without the helper columns. */
+  /** (valid rows, invalid rows), both with the input's columns only. */
   def split(df: DataFrame, rules: RuleSet): (DataFrame, DataFrame) = {
-    val v = validate(df, rules)
-    (v.where(col(ValidCol)).drop(ErrorsCol, ValidCol),
-     v.where(!col(ValidCol)).drop(ErrorsCol, ValidCol))
+    val violated = rules.violatedCol
+    (df.where(!violated), df.where(violated))
   }
 
   /** Reference-shaped error file: one row per invalid input row with the
@@ -41,12 +46,11 @@ object Validator {
     * (DM_bankfile_validate_pipeline.py:833 parses exactly this shape). */
   def errorFile(df: DataFrame, rules: RuleSet, keyCol: String,
                 fileName: String = "input"): DataFrame =
-    validate(df, rules)
-      .where(!col(ValidCol))
+    df.where(rules.violatedCol)
       .select(
         lit(fileName).as("FILENAME"),
         col(keyCol).cast("string").as("PayeeId"),
-        concat_ws(", ", col(ErrorsCol)).as("ERROR_DESC"))
+        concat_ws(", ", rules.errorsCol).as("ERROR_DESC"))
 
   /** Write an [[errorFile]] result in the reference's on-disk shape:
     * pipe-delimited CSV with a FILENAME|PayeeId|ERROR_DESC header
@@ -82,8 +86,7 @@ object Validator {
   /** Valid/invalid row counts as a 2-row frame (status, cnt) — the Glue
     * log's "Valid records: N / Error records: M" summary. */
   def splitCounts(df: DataFrame, rules: RuleSet): DataFrame =
-    validate(df, rules)
-      .groupBy(when(col(ValidCol), "valid").otherwise("invalid").as("status"))
+    df.groupBy(when(!rules.violatedCol, "valid").otherwise("invalid").as("status"))
       .agg(count(lit(1)).as("cnt"))
       .orderBy("status")
 }
