@@ -136,8 +136,18 @@ object BankRulesSql {
   val auxDir: String = auxDirOf(java.nio.file.Paths.get(
     getClass.getProtectionDomain.getCodeSource.getLocation.toURI))
 
-  private[bank] def auxDirOf(classes: java.nio.file.Path): String =
-    classes.getParent.getParent.resolve("oracle_aux").toString
+  /** The outermost `target/` above `classes`, so the copy of the
+    * classes that `sbt runMain` runs from
+    * (`<checkout>/target/bg-jobs/sbt_…/job-N/target/…/classes`, deleted
+    * when the run ends) still gives `<checkout>/target/oracle_aux`. */
+  private[bank] def auxDirOf(classes: java.nio.file.Path): String = {
+    val names = (0 until classes.getNameCount).map(classes.getName(_).toString)
+    val target = names.indexOf("target")
+    val base =
+      if (target < 0) classes.getParent.getParent
+      else classes.getRoot.resolve(classes.subpath(0, target + 1))
+    base.resolve("oracle_aux").toString
+  }
 
   val genPath = s"$auxDir/bank_gen.parquet"
   val brokenPath = s"$auxDir/bank_broken.parquet"

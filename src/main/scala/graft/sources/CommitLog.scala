@@ -190,18 +190,37 @@ object CommitLog {
     }
 
   /** Write one batch's rows into its (run_id, batch_id) partition and
-    * atomically commit it. Safe to replay with the same ids. */
+    * atomically commit it. Safe to replay with the same ids. A batch
+    * with no rows commits no marker (see [[commitLanded]]). */
   def writeBatch(df: DataFrame, table: String, runId: String,
       batchId: Long, ts: Long = -1L,
       retires: Seq[(String, Long)] = Seq.empty): Unit = {
-    df.withColumn("run_id", lit(runId)).withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("run_id", "batch_id")
-      .parquet(table)
-    commitWithMeta(df.sparkSession, table, runId, batchId, Seq.empty,
+    writeDataOnly(df, table, runId, batchId)
+    commitLanded(df.sparkSession, table, runId, batchId, Seq.empty,
       schemaOf(df), ts, retires)
   }
+
+  /** Did [[writeDataOnly]] land the (run_id, batch_id) partition? A
+    * frame with no rows writes no partition directory, and a marker
+    * naming a missing directory would break every later read of the
+    * table. A directory check, not a Spark job. */
+  private def landed(spark: SparkSession, table: String, runId: String,
+      batchId: Long): Boolean = {
+    val (hfs, dir) = fs(spark, s"$table/run_id=$runId/batch_id=$batchId")
+    hfs.exists(dir)
+  }
+
+  /** Commit the partition [[writeDataOnly]] just wrote; when it wrote
+    * none, commit only `retires` (a retire-only transaction), or
+    * nothing. `stats` is computed only when the marker is written. */
+  private def commitLanded(spark: SparkSession, table: String,
+      runId: String, batchId: Long, stats: => Seq[ColStats],
+      schema: Seq[(String, String)], ts: Long,
+      retires: Seq[(String, Long)]): Unit =
+    if (landed(spark, table, runId, batchId))
+      commitWithMeta(spark, table, runId, batchId, stats, schema, ts, retires)
+    else if (retires.nonEmpty)
+      commitTxn(spark, table, Seq.empty, retires, ts)
 
   /** One small aggregate computing per-column min/max for the marker.
     * All-NULL columns record no stats row (unprunable, conservative). */
@@ -231,13 +250,25 @@ object CommitLog {
     * marker — the transactional building block: data lands first,
     * visibility comes from whatever marker later names the partition
     * ([[commitWithMeta]] for a single batch, [[commitTxn]] for several
-    * at once). */
-  private[sources] def writeDataOnly(df: DataFrame, table: String, runId: String,
-      batchId: Long): Unit =
-    df.withColumn("run_id", lit(runId)).withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
+    * at once). Also the batch-partition write of every
+    * `graft.streaming` operator (`graft.streaming.MicroBatch`);
+    * `leading` partition columns of `df` go before run_id/batch_id
+    * (an ANN index's `cell`). */
+  private[graft] def writeDataOnly(df: DataFrame, table: String, runId: String,
+      batchId: Long, leading: Seq[String] = Seq.empty): Unit = {
+    markerName(runId, batchId) // rejects a run id no marker could name
+    overwritePartitions(
+      df.withColumn("run_id", lit(runId)).withColumn("batch_id", lit(batchId)),
+      table, leading ++ Seq("run_id", "batch_id"))
+  }
+
+  /** Write `df` partitioned by `partCols`, replacing exactly the
+    * partitions it has rows for (dynamic partition overwrite). */
+  private[graft] def overwritePartitions(df: DataFrame, table: String,
+      partCols: Seq[String]): Unit =
+    df.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("run_id", "batch_id")
+      .partitionBy(partCols: _*)
       .parquet(table)
 
   /** [[writeBatch]] recording min/max stats for `statsCols` in the
@@ -248,7 +279,7 @@ object CommitLog {
       retires: Seq[(String, Long)] = Seq.empty): Unit = {
     val pinned = df.localCheckpoint(eager = false)
     writeDataOnly(pinned, table, runId, batchId)
-    commitWithMeta(df.sparkSession, table, runId, batchId,
+    commitLanded(df.sparkSession, table, runId, batchId,
       statsOf(pinned, statsCols), schemaOf(pinned), ts, retires)
   }
 
@@ -1977,17 +2008,12 @@ object CommitLog {
           }
         }
       }
-    // a pure-delete feed (or an empty source) lands no new batch —
-    // an empty parquet write creates no directory, so its add would
-    // dangle and break every future read
-    val hasNewRows = !pinned.isEmpty
+    // a pure-delete feed (or an empty source) lands no new batch
+    writeDataOnly(pinned, table, runId, batchId)
     val newAdd =
-      if (!hasNewRows) Seq.empty
-      else {
-        writeDataOnly(pinned, table, runId, batchId)
-        Seq(TxnAdd(runId, batchId, statsOf(pinned, statsCols),
-          schemaOf(pinned)))
-      }
+      if (!landed(spark, table, runId, batchId)) Seq.empty
+      else Seq(TxnAdd(runId, batchId, statsOf(pinned, statsCols),
+        schemaOf(pinned)))
     val keys = broadcast(
       ops.select(keyCols.map(c => col(c).as(s"__k_$c")): _*).distinct())
     // rewrite ids hashed from the merge identity: a RETRY of the same
@@ -2191,10 +2217,7 @@ object CommitLog {
       }
     val outCols = dataCols.map(col) :+ col("run_id") :+ col("batch_id")
     val pinned = clustered.select(outCols: _*).localCheckpoint(eager = false)
-    pinned.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("run_id", "batch_id")
-      .parquet(table)
+    overwritePartitions(pinned, table, Seq("run_id", "batch_id"))
     // per-rewrite row counts + min/max for the union of the originals'
     // recorded stats columns, in ONE grouped pass over the pinned frame
     val statCols = (specs

@@ -1,9 +1,10 @@
 package graft.streaming
 
 import graft.ops.Ann
+import graft.sources.CommitLog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming ANN index maintenance: the ingest-side of IVF search.
   *
@@ -12,8 +13,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * to its nearest centroid cell (broadcast centroids — a narrow pass)
   * and appended to a parquet index PARTITIONED BY cell, so the index
   * grows append-only and probes read only their cells via partition
-  * pruning. Same (run_id, batch_id) dynamic-overwrite discipline as
-  * [[DedupIngest]] → idempotent under foreachBatch retry.
+  * pruning. Each batch writes only its own (cell, run_id, batch_id)
+  * partitions ([[MicroBatch]]) → idempotent under foreachBatch retry.
   *
   * At 100 TB this is the standard serving shape: the quantizer
   * (centroids, k × dim doubles) is the only coordinated state; cells
@@ -123,12 +124,9 @@ object AnnIngest {
             col("run_id"), col("batch_id")),
           () => Ann.saveCentroids(cents, s"$genPath/_model/flat"))
     }
-    assigned
-      .repartition(col("cell")) // one file per cell, see processBatch
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cell", "run_id", "batch_id")
-      .parquet(genPath)
+    CommitLog.overwritePartitions(
+      assigned.repartition(col("cell")), // one file per cell, see writeCells
+      genPath, Seq("cell", "run_id", "batch_id"))
     saveModel()
     val props = new java.util.Properties()
     props.setProperty("kind", twoLevel.map(_.kind).getOrElse("flat"))
@@ -235,16 +233,10 @@ object AnnIngest {
 
   def start(stream: DataFrame, centroids: DataFrame,
             idCol: String, vecCol: String,
-            indexPath: String, checkpoint: String): StreamingQuery = {
-    val runId = (scala.util.hashing.MurmurHash3.stringHash(checkpoint) & 0x7fffffff).toHexString
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, centroids, idCol, vecCol, indexPath, runId, batchId)
-      }
-      .start()
-  }
+            indexPath: String, checkpoint: String): StreamingQuery =
+    MicroBatch.start(stream, checkpoint) { (batch, runId, batchId) =>
+      processBatch(batch, centroids, idCol, vecCol, indexPath, runId, batchId)
+    }
 
   /** One micro-batch; factored out so tests and the batch index-build
     * path (AnnScaleSmoke) can drive it directly. */
@@ -252,17 +244,19 @@ object AnnIngest {
                                       idCol: String, vecCol: String,
                                       indexPath: String, runId: String,
                                       batchId: Long): Unit =
-    assignCells(batch, centroids, idCol, vecCol)
-      .withColumn("run_id", lit(runId)).withColumn("batch_id", lit(batchId))
-      // co-locate each cell before the partitioned write: one file per
-      // cell per batch instead of one per (cell × task) — without this
-      // a 1024-cell index write sprays cells × tasks tiny files and
-      // file overhead dominates both the build and every probe read
-      .repartition(col("cell"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cell", "run_id", "batch_id")
-      .parquet(currentDataPath(batch.sparkSession, indexPath))
+    writeCells(assignCells(batch, centroids, idCol, vecCol), indexPath,
+      runId, batchId)
+
+  /** Land one batch's (id, vec, cell) rows in the current generation,
+    * co-locating each cell before the partitioned write: one file per
+    * cell per batch instead of one per (cell × task) — without this a
+    * 1024-cell index write sprays cells × tasks tiny files and file
+    * overhead dominates both the build and every probe read. */
+  private def writeCells(assigned: DataFrame, indexPath: String,
+      runId: String, batchId: Long): Unit =
+    CommitLog.writeDataOnly(assigned.repartition(col("cell")),
+      currentDataPath(assigned.sparkSession, indexPath), runId, batchId,
+      leading = Seq("cell"))
 
   /** Two-level variants: same index layout and probe discipline, cells
     * from the hierarchical quantizer ([[Ann.twoLevelCentroids]]) — the
@@ -279,13 +273,8 @@ object AnnIngest {
                                    fine: DataFrame, idCol: String, vecCol: String,
                                    indexPath: String, runId: String,
                                    batchId: Long): Unit =
-    assignCells2(batch, coarse, fine, idCol, vecCol)
-      .withColumn("run_id", lit(runId)).withColumn("batch_id", lit(batchId))
-      .repartition(col("cell")) // one file per cell, see processBatch
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cell", "run_id", "batch_id")
-      .parquet(currentDataPath(batch.sparkSession, indexPath))
+    writeCells(assignCells2(batch, coarse, fine, idCol, vecCol), indexPath,
+      runId, batchId)
 
   /** Probe a two-level index: top `nCoarseProbe` coarse cells per
     * query, top `nprobe` of their fine cells overall, partition-pruned

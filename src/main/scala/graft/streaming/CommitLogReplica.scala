@@ -45,16 +45,11 @@ object CommitLogReplica {
       statsCols: Seq[String] = Seq.empty,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
     require(keyCols.nonEmpty, "replica maintenance needs key columns")
-    val runId = EmbedIngest.runIdOf(checkpoint)
-    spark.readStream.format("graft_commitlog")
-      .option("readChangeFeed", "true").load(source)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        applyEpoch(batch, replica, keyCols, runId, epoch, statsCols)
-      }
-      .start()
+    MicroBatch.start(spark.readStream.format("graft_commitlog")
+        .option("readChangeFeed", "true").load(source),
+      checkpoint, trigger) { (batch, runId, epoch) =>
+      applyEpoch(batch, replica, keyCols, runId, epoch, statsCols)
+    }
   }
 
   /** Apply one epoch's change events to the replica. Exposed for

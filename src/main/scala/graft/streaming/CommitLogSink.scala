@@ -22,34 +22,20 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * sink is exactly where those markers are cheapest (the batch is
   * already in memory).
   *
-  * run_id derives from the checkpoint path (sanitized tail + two
-  * 32-bit hashes, the [[EmbedIngest]] convention): restarts of the
-  * SAME pipeline keep appending to their run with Spark's replayed
-  * epoch ids, while two pipelines with lookalike checkpoint tails
-  * cannot collide into one run's id space. */
+  * Run identity, stream start and the batch-partition write are the
+  * [[MicroBatch]] rule: a restart of the SAME pipeline keeps appending
+  * to its run with Spark's replayed epoch ids, and a micro-batch with
+  * no rows (routine when an upstream filter drops a whole epoch)
+  * commits nothing ([[CommitLog.writeBatch]]). */
 object CommitLogSink {
 
   def start(stream: DataFrame, table: String, checkpoint: String,
       statsCols: Seq[String] = Seq.empty,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    val runId = EmbedIngest.runIdOf(checkpoint)
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // an empty micro-batch (routine when an upstream filter drops
-        // a whole epoch) must commit NOTHING: the dynamic-overwrite
-        // parquet write of an empty frame creates no partition
-        // directory, so a marker would dangle and break every future
-        // read of the table. Skipping both keeps replay exactly-once —
-        // an empty epoch delivered nothing to re-deliver.
-        if (!batch.isEmpty) {
-          if (statsCols.isEmpty)
-            CommitLog.writeBatch(batch, table, runId, batchId)
-          else
-            CommitLog.writeBatchWithStats(batch, table, runId, batchId, statsCols)
-        }
-      }
-      .start()
-  }
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    MicroBatch.start(stream, checkpoint, trigger) { (batch, runId, batchId) =>
+      if (statsCols.isEmpty)
+        CommitLog.writeBatch(batch, table, runId, batchId)
+      else
+        CommitLog.writeBatchWithStats(batch, table, runId, batchId, statsCols)
+    }
 }

@@ -1,9 +1,10 @@
 package graft.streaming
 
 import graft.ops.Similarity
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.CommitLog
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Dedup-on-ingest: the streaming form of corpus near-dedup.
   *
@@ -20,11 +21,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *      signatures append to the index; near-dups land in
   *      `duplicatesPath` with the id of the retained representative.
   *
-  * Exactly-once: all three sinks are (run_id, batch_id)-partitioned
-  * dynamic overwrites, same discipline as
-  * [[EventStreams.validateAndRoute]]. The index grows append-only and
-  * IS the dedup state — no driver memory, no streaming state store,
-  * restart-safe by construction.
+  * Exactly-once: all three sinks follow the [[MicroBatch]] rule (each
+  * batch writes only its own (run_id, batch_id) partition), and the
+  * index is read without the batch's own partition, so a replayed
+  * batch never matches the index entries its first attempt added. The
+  * index grows append-only and IS the dedup state — no driver memory,
+  * no streaming state store, restart-safe by construction.
   *
   * At 100 TB this is the standard shape: the index is a parquet table
   * keyed by (band, bucket); each batch shuffles only its own
@@ -44,17 +46,11 @@ object DedupIngest {
             acceptedPath: String, duplicatesPath: String, indexPath: String,
             checkpoint: String,
             k: Int = 5, numHashes: Int = 32, rowsPerBand: Int = 4,
-            threshold: Double = 0.5): StreamingQuery = {
-    val runId = (scala.util.hashing.MurmurHash3.stringHash(checkpoint) & 0x7fffffff).toHexString
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, idCol, textCol, acceptedPath, duplicatesPath,
-          indexPath, runId, batchId, k, numHashes, rowsPerBand, threshold)
-      }
-      .start()
-  }
+            threshold: Double = 0.5): StreamingQuery =
+    MicroBatch.start(docs, checkpoint) { (batch, runId, batchId) =>
+      processBatch(batch, idCol, textCol, acceptedPath, duplicatesPath,
+        indexPath, runId, batchId, k, numHashes, rowsPerBand, threshold)
+    }
 
   /** One micro-batch; factored out so tests can drive it directly. */
   private[streaming] def processBatch(batch: DataFrame, idCol: String, textCol: String,
@@ -67,24 +63,15 @@ object DedupIngest {
       .cache()
     val banded = bandOf(sigs, numHashes, rowsPerBand).cache()
     try {
-      // existing index (empty on first batch)
-      val index: DataFrame =
-        try spark.read.parquet(indexPath)
-          .select(col("id").as("x_id"), col("sig").as("x_sig"),
-            col("band"), col("bucket"))
-        catch { case _: Exception =>
-          // first batch: no index yet — typed empty frame (band/bucket
-          // are int: posexplode position and hash() output)
-          spark.emptyDataFrame.select(lit(0L).as("x_id"),
-            lit(null).cast("array<bigint>").as("x_sig"),
-            lit(0).as("band"), lit(0).as("bucket")).limit(0)
-        }
-
-      // vs-index candidates: join banded batch against banded index
-      val vsIndex = banded.join(index, Seq("band", "bucket"))
-        .where(round(graft.expr.SigAgreement.sigAgreement(col("sig"), col("x_sig")), 4)
-          >= threshold)
-        .select(col("id"), col("x_id").as("dup_of"))
+      // vs-index candidates: join banded batch against the banded
+      // index of earlier batches (none before the first batch lands)
+      val vsIndex = MicroBatch.prior(spark, indexPath, runId, batchId).map { index =>
+        banded.join(index.select(col("id").as("x_id"), col("sig").as("x_sig"),
+            col("band"), col("bucket")), Seq("band", "bucket"))
+          .where(round(graft.expr.SigAgreement.sigAgreement(col("sig"), col("x_sig")), 4)
+            >= threshold)
+          .select(col("id"), col("x_id").as("dup_of"))
+      }
       // within-batch candidates: smaller id survives
       val within = banded.as("a").join(banded.as("b"),
           col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
@@ -93,7 +80,7 @@ object DedupIngest {
           >= threshold)
         .select(col("a.id").as("id"), col("b.id").as("dup_of"))
 
-      val dups = vsIndex.union(within)
+      val dups = (vsIndex.toSeq :+ within).reduce(_ union _)
         .groupBy("id").agg(min("dup_of").as("dup_of"))
         .cache()
 
@@ -102,20 +89,13 @@ object DedupIngest {
       val rejected = batch.join(dups, batch(idCol) === dups("id"))
         .drop("id")
 
-      def write(df: DataFrame, path: String): Unit =
-        df.withColumn("run_id", lit(runId)).withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("run_id", "batch_id")
-          .parquet(path)
-
-      write(accepted, acceptedPath)
-      write(rejected, duplicatesPath)
+      CommitLog.writeDataOnly(accepted, acceptedPath, runId, batchId)
+      CommitLog.writeDataOnly(rejected, duplicatesPath, runId, batchId)
       // only NOVEL docs enter the index — near-dups of near-dups chain
       // to the earliest representative through their retained match
       val newEntries = banded
         .join(dupIds, banded("id") === dupIds("id"), "left_anti")
-      write(newEntries, indexPath)
+      CommitLog.writeDataOnly(newEntries, indexPath, runId, batchId)
     } finally { sigs.unpersist(); banded.unpersist(); () }
   }
 }

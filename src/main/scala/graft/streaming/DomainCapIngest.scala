@@ -1,9 +1,10 @@
 package graft.streaming
 
+import graft.sources.CommitLog
 import graft.text.UrlOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming per-registered-domain document cap — the continuous form
   * of [[UrlOps.perDomainCap]]: a crawl feed is capped at `cap` docs
@@ -18,11 +19,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *      already_accepted sums the PERSISTED per-batch admission
   *      counts of earlier batches;
   *   3. land admitted rows and this batch's (domain, admitted) counts
-  *      under the same (run_id, batch_id) dynamic-overwrite
-  *      exactly-once discipline as the other ingest indexes.
+  *      in the batch's own (run_id, batch_id) partitions.
   *
-  * Retry safety: the state read EXCLUDES the current (run_id,
-  * batch_id) partition, so a foreachBatch retry that already
+  * Retry safety ([[MicroBatch]]): the state read EXCLUDES the current
+  * (run_id, batch_id) partition, so a foreachBatch retry that already
   * committed its counts re-derives the identical admission set
   * instead of double-subtracting itself — fully idempotent, not just
   * idempotent-if-the-state-commit-never-happened.
@@ -35,17 +35,11 @@ object DomainCapIngest {
 
   def start(docs: DataFrame, idCol: String, urlCol: String,
             acceptedPath: String, statePath: String, checkpoint: String,
-            cap: Int): StreamingQuery = {
-    val runId = (scala.util.hashing.MurmurHash3.stringHash(checkpoint) & 0x7fffffff).toHexString
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, idCol, urlCol, acceptedPath, statePath,
-          runId, batchId, cap)
-      }
-      .start()
-  }
+            cap: Int): StreamingQuery =
+    MicroBatch.start(docs, checkpoint) { (batch, runId, batchId) =>
+      processBatch(batch, idCol, urlCol, acceptedPath, statePath,
+        runId, batchId, cap)
+    }
 
   /** One micro-batch; factored out for tests and batch backfills. */
   private[graft] def processBatch(batch: DataFrame, idCol: String,
@@ -55,16 +49,11 @@ object DomainCapIngest {
     val spark = batch.sparkSession
     val srcCols = batch.columns
 
-    // per-domain counts admitted by EARLIER batches; the current
-    // (run_id, batch_id) partition is excluded so a retry after a
-    // completed state commit reproduces the same admissions
-    val prior: DataFrame =
-      try spark.read.parquet(statePath)
-        .where(!(col("run_id") === runId && col("batch_id") === batchId))
-        .groupBy("domain").agg(sum(col("admitted")).as("_prior"))
-      catch { case _: Exception =>
-        spark.emptyDataFrame
-          .select(lit("").as("domain"), lit(0L).as("_prior")).limit(0) }
+    // per-domain counts admitted by EARLIER batches
+    val prior: DataFrame = MicroBatch.prior(spark, statePath, runId, batchId)
+      .map(_.groupBy("domain").agg(sum(col("admitted")).as("_prior")))
+      .getOrElse(spark.emptyDataFrame
+        .select(lit("").as("domain"), lit(0L).as("_prior")).limit(0))
 
     // bounded-heap rank within the batch: at most cap rows per domain
     // per task cross the shuffle, payload riding along (no join-back)
@@ -87,17 +76,12 @@ object DomainCapIngest {
     admitted.count() // materialize against the pre-commit state
 
     try {
-      def write(df: DataFrame, path: String): Unit =
-        df.withColumn("run_id", lit(runId)).withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("run_id", "batch_id")
-          .parquet(path)
-      write(admitted, acceptedPath)
+      CommitLog.writeDataOnly(admitted, acceptedPath, runId, batchId)
       // state commit LAST: a failure before this point retries against
       // unchanged state; after it, the retry excludes this partition
-      write(admitted.groupBy("domain").agg(count(lit(1)).as("admitted")),
-        statePath)
+      CommitLog.writeDataOnly(
+        admitted.groupBy("domain").agg(count(lit(1)).as("admitted")),
+        statePath, runId, batchId)
     } finally { admitted.unpersist(); () }
   }
 }

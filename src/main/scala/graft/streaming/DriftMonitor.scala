@@ -1,9 +1,10 @@
 package graft.streaming
 
+import graft.sources.CommitLog
 import graft.validate.Drift
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Continuous distribution monitoring over a streaming feed: every
   * micro-batch is compared against a FIXED baseline snapshot (PSI for
@@ -14,26 +15,20 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * across drops goes unseen.
   *
   * The baseline's per-column bins/frequencies are recomputed per batch
-  * against a (typically small, cacheable) baseline table; metric rows
-  * are (run_id, batch_id)-partitioned dynamic overwrites → idempotent
-  * under foreachBatch retries, same discipline as [[DedupIngest]].
+  * against a (typically small, cacheable) baseline table; each batch's
+  * metric rows land in its own (run_id, batch_id) partition → idempotent
+  * under foreachBatch retries ([[MicroBatch]]).
   */
 object DriftMonitor {
 
   def start(stream: DataFrame, baseline: DataFrame,
             numericCols: Seq[String], categoricalCols: Seq[String],
             metricsPath: String, checkpoint: String,
-            bins: Int = 10): StreamingQuery = {
-    val runId = (scala.util.hashing.MurmurHash3.stringHash(checkpoint) & 0x7fffffff).toHexString
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, baseline, numericCols, categoricalCols,
-          metricsPath, runId, batchId, bins)
-      }
-      .start()
-  }
+            bins: Int = 10): StreamingQuery =
+    MicroBatch.start(stream, checkpoint) { (batch, runId, batchId) =>
+      processBatch(batch, baseline, numericCols, categoricalCols,
+        metricsPath, runId, batchId, bins)
+    }
 
   /** One micro-batch; factored out so tests can drive it directly. */
   private[streaming] def processBatch(batch: DataFrame, baseline: DataFrame,
@@ -54,11 +49,7 @@ object DriftMonitor {
       else Some(Drift.categoricalDrift(baseline, batch, categoricalCols)
         .select(col("col_name"), lit("tvd").as("metric"),
           col("tvd").as("value"), col("drifted")))
-    val all = (num.toSeq ++ cat.toSeq).reduce(_ union _)
-    all.withColumn("run_id", lit(runId)).withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("run_id", "batch_id")
-      .parquet(metricsPath)
+    CommitLog.writeDataOnly((num.toSeq ++ cat.toSeq).reduce(_ union _),
+      metricsPath, runId, batchId)
   }
 }

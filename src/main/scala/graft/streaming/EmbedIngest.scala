@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming SEMANTIC-dedup ingest: text → document embedding →
   * growing IVF index, closing the streaming counterpart of the batch
@@ -16,42 +16,21 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * serving discipline), then appends to the cell-partitioned ANN
   * index through [[AnnIngest.processBatch]] — so the index grows
   * append-only, probes partition-prune to their cells, and replayed
-  * batches stay idempotent under the (run_id, batch_id)
-  * dynamic-overwrite discipline.
+  * batches stay idempotent under the [[MicroBatch]] (run_id,
+  * batch_id) rule.
   *
   * At 100 TB the coordinated state is two small broadcast frames
   * (vocabulary-bounded weights + centroids); everything else is
   * narrow per-batch work plus the cell-partitioned append. */
 object EmbedIngest {
 
-  /** run_id for a pipeline, derived from its checkpoint path: the
-    * sanitized path TAIL (human-readable in `run_id=` dirs) plus a
-    * 64-bit hash of the FULL path — two pipelines with distinct
-    * checkpoints appending to the same index can no longer collide on
-    * run_id (a 31-bit hash alone could, and colliding run_ids with
-    * coincident batch ids dynamically overwrite each other's
-    * committed partitions without any error). */
-  private[graft] def runIdOf(checkpoint: String): String = {
-    val tail = checkpoint.takeRight(40)
-      .map(c => if (c.isLetterOrDigit) c else '_')
-    val h1 = scala.util.hashing.MurmurHash3.stringHash(checkpoint, 0x9747b28c)
-    val h2 = scala.util.hashing.MurmurHash3.stringHash(checkpoint, 0x3c6ef372)
-    f"${tail}_$h1%08x$h2%08x"
-  }
-
   def start(stream: DataFrame, idCol: String, textCol: String,
             weightedVecs: DataFrame, centroids: DataFrame,
-            indexPath: String, checkpoint: String): StreamingQuery = {
-    val runId = runIdOf(checkpoint)
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, idCol, textCol, weightedVecs, centroids,
-          indexPath, runId, batchId)
-      }
-      .start()
-  }
+            indexPath: String, checkpoint: String): StreamingQuery =
+    MicroBatch.start(stream, checkpoint) { (batch, runId, batchId) =>
+      processBatch(batch, idCol, textCol, weightedVecs, centroids,
+        indexPath, runId, batchId)
+    }
 
   /** One micro-batch, factored out for tests and batch backfills. */
   private[graft] def processBatch(batch: DataFrame, idCol: String,

@@ -1,10 +1,11 @@
 package graft.streaming
 
 import graft.rules.RuleSet
+import graft.sources.CommitLog
 import graft.validate.Validator
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import java.sql.Timestamp
 
 /** Structured-Streaming operators over the `events` shape
@@ -39,52 +40,20 @@ object EventStreams {
   /** Continuous validate-and-route: the reference's batch loop (file
     * lands → Glue validates → valid/error routing,
     * DM_bankfile_validate_pipeline.py run_full_etl_pipeline_*) as a
-    * streaming pipeline. Each micro-batch is validated once (cached),
-    * the valid slice is written to `validPath`, the invalid slice is
-    * written in the reference's error-file shape to `errorPath`.
-    * Exactly-once: each batch lands in its own
-    * `run_id=<ckpt-hash>/batch_id=<id>` partition via dynamic-partition
-    * overwrite, so a foreachBatch retry (at-least-once delivery)
-    * replaces exactly that batch's partition instead of appending
-    * duplicates. The run discriminator is derived from the checkpoint
-    * location — batch ids restart at 0 whenever a NEW checkpoint is
-    * used, and without the run_id a fresh stream pointed at an old
-    * output path would silently overwrite historical batches (batch
-    * ids are only unique per checkpoint). Works over any streaming
+    * streaming pipeline. Each micro-batch is pinned once, its valid
+    * rows are written to `validPath` and its invalid rows, in the
+    * reference's error-file shape, to `errorPath`, each into the
+    * batch's own `(run_id, batch_id)` partition ([[MicroBatch]]: a
+    * foreachBatch retry replaces that partition instead of appending
+    * duplicates, and a fresh checkpoint is a new run that never
+    * overwrites an old one's batches). Works over any streaming
     * source (file drops included:
     * spark.readStream.schema(...).parquet(dropDir)). */
   def validateAndRoute(stream: DataFrame, rules: RuleSet, keyCol: String,
                        validPath: String, errorPath: String,
-                       checkpoint: String): StreamingQuery = {
-    val runId = (scala.util.hashing.MurmurHash3.stringHash(checkpoint) & 0x7fffffff).toHexString
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val v = Validator.validate(batch, rules).cache()
-        try {
-          v.where(col(Validator.ValidCol))
-            .drop(Validator.ErrorsCol, Validator.ValidCol)
-            .withColumn("run_id", lit(runId))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("run_id", "batch_id")
-            .parquet(validPath)
-          v.where(!col(Validator.ValidCol))
-            .select(lit(s"batch_$batchId").as("FILENAME"),
-              col(keyCol).cast("string").as("PayeeId"),
-              concat_ws(", ", col(Validator.ErrorsCol)).as("ERROR_DESC"),
-              lit(runId).as("run_id"),
-              lit(batchId).as("batch_id"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("run_id", "batch_id")
-            .parquet(errorPath)
-        } finally { v.unpersist(); () }
-      }
-      .start()
-  }
+                       checkpoint: String): StreamingQuery =
+    route(stream, rules, keyCol, validPath, errorPath, checkpoint)(
+      CommitLog.writeDataOnly(_, _, _, _))
 
   /** [[validateAndRoute]] with ATOMIC VISIBILITY: both sinks are
     * graft.sources.CommitLog tables — each batch's partition is
@@ -95,31 +64,24 @@ object EventStreams {
     * reclaims. The valid slice commits BEFORE the error slice: a
     * crash between the two replays the batch (at-least-once
     * foreachBatch) and the dynamic overwrite + idempotent markers
-    * converge both tables. */
+    * converge both tables. A slice with no rows commits nothing. */
   def validateAndRouteCommitted(stream: DataFrame, rules: RuleSet, keyCol: String,
                                 validPath: String, errorPath: String,
-                                checkpoint: String): StreamingQuery = {
-    val runId = (scala.util.hashing.MurmurHash3.stringHash(checkpoint) & 0x7fffffff).toHexString
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val v = Validator.validate(batch, rules).cache()
-        try {
-          graft.sources.CommitLog.writeBatch(
-            v.where(col(Validator.ValidCol))
-              .drop(Validator.ErrorsCol, Validator.ValidCol),
-            validPath, runId, batchId)
-          graft.sources.CommitLog.writeBatch(
-            v.where(!col(Validator.ValidCol))
-              .select(lit(s"batch_$batchId").as("FILENAME"),
-                col(keyCol).cast("string").as("PayeeId"),
-                concat_ws(", ", col(Validator.ErrorsCol)).as("ERROR_DESC")),
-            errorPath, runId, batchId)
-        } finally { v.unpersist(); () }
-      }
-      .start()
-  }
+                                checkpoint: String): StreamingQuery =
+    route(stream, rules, keyCol, validPath, errorPath, checkpoint)(
+      CommitLog.writeBatch(_, _, _, _))
+
+  private def route(stream: DataFrame, rules: RuleSet, keyCol: String,
+      validPath: String, errorPath: String, checkpoint: String)(
+      write: (DataFrame, String, String, Long) => Unit): StreamingQuery =
+    MicroBatch.start(stream, checkpoint) { (batch, runId, batchId) =>
+      val pinned = batch.cache()
+      try {
+        write(Validator.split(pinned, rules)._1, validPath, runId, batchId)
+        write(Validator.errorFile(pinned, rules, keyCol, s"batch_$batchId"),
+          errorPath, runId, batchId)
+      } finally { pinned.unpersist(); () }
+    }
 
   /** Gap-based sessions via Spark's built-in `session_window` — the
     * declarative complement to [[sessionize]]'s explicit

@@ -1,9 +1,10 @@
 package graft.streaming
 
+import graft.sources.CommitLog
 import graft.text.TextAnalysis
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming training-data recipe: the composed quality-gate →
   * exact-dedup → mixture pipeline (the batch `q_recipe_pipeline`
@@ -22,10 +23,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *      makes identical keep decisions), stamp `n_tokens`, and land
   *      in `acceptedPath`.
   *
-  * Exactly-once: every sink (accepted, rejected, fingerprint index)
-  * is a (run_id, batch_id)-partitioned dynamic overwrite — the same
-  * retry discipline as [[EventStreams.validateAndRoute]] and
-  * [[DedupIngest]]. The fingerprint index is the only cross-batch
+  * Exactly-once ([[MicroBatch]]): every sink (accepted, rejected,
+  * fingerprint index) is written into the batch's own (run_id,
+  * batch_id) partition, and every index is read without that
+  * partition, so a retried batch routes as its first attempt did. The
+  * fingerprint index is the only cross-batch
   * state: an append-only parquet of 32-char fingerprints, no
   * streaming state store, restart-safe by construction.
   *
@@ -88,61 +90,50 @@ object RecipeIngest {
             c4Clean: Boolean = false): StreamingQuery = {
     require((urlCol == null) == (urlIndexPath == null),
       "urlCol and urlIndexPath come together")
-    val runId = (scala.util.hashing.MurmurHash3.stringHash(checkpoint) & 0x7fffffff).toHexString
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // indexes are committed only AFTER processBatch consumed the
-        // survivors: committing first would make any lazy
-        // re-evaluation (cache eviction) anti-join the batch against
-        // its own fresh state and drop every row
-        val staged =
-          if (urlCol == null) None
-          else Some(urlDedupBatch(batch, idCol, urlCol, urlIndexPath, runId, batchId))
-        val lined =
-          if (lineIndexPath == null) None
-          else {
-            val in = staged.map(_.drop("_uh")).getOrElse(batch)
-            Some(stripHotLinesBatch(in, idCol, textCol, lineIndexPath, lineMinDf,
-              runId = runId, batchId = batchId))
-          }
-        try {
-          val afterStages0 = lined.map(_._1)
-            .orElse(staged.map(_.drop("_uh"))).getOrElse(batch)
-          // stage 0.75 (optional, stateless): C4 line-level cleanup —
-          // junk lines vanish from the text the gate/fingerprint see;
-          // pages failing the C4 page gate are emptied, so the rule
-          // gate downstream rejects them through the normal routed
-          // sink (one writer per sink per batch — no partition clash)
-          val afterStages =
-            if (!c4Clean) afterStages0
-            else {
-              val cleaned = graft.text.C4Filter.cleanLines(col(textCol))
-              afterStages0.withColumn(textCol,
-                when(graft.text.C4Filter.pageKeep(cleaned), cleaned)
-                  .otherwise(lit("")))
-            }
-          processBatch(afterStages, idCol, textCol, langCol, acceptedPath,
-            rejectedPath, indexPath, runId, batchId, targetWeights, mixSalt,
-            clfModelPath, clfThreshold)
-          def commit(df: DataFrame, path: String): Unit =
-            df.withColumn("run_id", lit(runId)).withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("run_id", "batch_id")
-              .parquet(path)
-          staged.foreach(novel => commit(novel.select("_uh"), urlIndexPath))
-          lined.foreach { case (_, stats) => commit(stats, lineIndexPath) }
-        } finally {
-          staged.foreach { n => n.unpersist(); () }
-          lined.foreach { case (s, _) => s.unpersist(); () }
+    MicroBatch.start(docs, checkpoint) { (batch, runId, batchId) =>
+      // indexes are committed only AFTER processBatch wrote the
+      // batch's outputs from the survivors
+      val staged =
+        if (urlCol == null) None
+        else Some(urlDedupBatch(batch, idCol, urlCol, urlIndexPath, runId, batchId))
+      val lined =
+        if (lineIndexPath == null) None
+        else {
+          val in = staged.map(_.drop("_uh")).getOrElse(batch)
+          Some(stripHotLinesBatch(in, idCol, textCol, lineIndexPath, lineMinDf,
+            runId = runId, batchId = batchId))
         }
-        if (remixEvery > 0 && remixedPath != null && (batchId + 1) % remixEvery == 0)
-          remix(batch.sparkSession, acceptedPath, remixedPath, langCol, idCol,
-            targetWeights, mixSalt)
+      try {
+        val afterStages0 = lined.map(_._1)
+          .orElse(staged.map(_.drop("_uh"))).getOrElse(batch)
+        // stage 0.75 (optional, stateless): C4 line-level cleanup —
+        // junk lines vanish from the text the gate/fingerprint see;
+        // pages failing the C4 page gate are emptied, so the rule
+        // gate downstream rejects them through the normal routed
+        // sink (one writer per sink per batch — no partition clash)
+        val afterStages =
+          if (!c4Clean) afterStages0
+          else {
+            val cleaned = graft.text.C4Filter.cleanLines(col(textCol))
+            afterStages0.withColumn(textCol,
+              when(graft.text.C4Filter.pageKeep(cleaned), cleaned)
+                .otherwise(lit("")))
+          }
+        processBatch(afterStages, idCol, textCol, langCol, acceptedPath,
+          rejectedPath, indexPath, runId, batchId, targetWeights, mixSalt,
+          clfModelPath, clfThreshold)
+        staged.foreach(novel =>
+          CommitLog.writeDataOnly(novel.select("_uh"), urlIndexPath, runId, batchId))
+        lined.foreach { case (_, stats) =>
+          CommitLog.writeDataOnly(stats, lineIndexPath, runId, batchId) }
+      } finally {
+        staged.foreach { n => n.unpersist(); () }
+        lined.foreach { case (s, _) => s.unpersist(); () }
       }
-      .start()
+      if (remixEvery > 0 && remixedPath != null && (batchId + 1) % remixEvery == 0)
+        remix(batch.sparkSession, acceptedPath, remixedPath, langCol, idCol,
+          targetWeights, mixSalt)
+    }
   }
 
   /** Stage 0.5: strip lines hot across the RUN from every doc of one
@@ -167,14 +158,10 @@ object RecipeIngest {
       .withColumn("_key", md5(trim(col("_line"))))
     val batchStats = lines.groupBy("_key")
       .agg(countDistinct(col("_id")).as("_df"))
-    val index: DataFrame =
-      try spark.read.parquet(lineIndexPath)
-        // see urlDedupBatch: retries must not double-count themselves
-        .where(!(col("run_id") === runId && col("batch_id") === batchId))
-        .groupBy("_key").agg(sum(col("_df")).as("_prev"))
-      catch { case _: Exception =>
-        spark.emptyDataFrame
-          .select(lit("").as("_key"), lit(0L).as("_prev")).limit(0) }
+    val index: DataFrame = MicroBatch.prior(spark, lineIndexPath, runId, batchId)
+      .map(_.groupBy("_key").agg(sum(col("_df")).as("_prev")))
+      .getOrElse(spark.emptyDataFrame
+        .select(lit("").as("_key"), lit(0L).as("_prev")).limit(0))
     val hot = batchStats.join(index, Seq("_key"), "left")
       .where(col("_df") + coalesce(col("_prev"), lit(0L)) >= minDf)
       .select("_key")
@@ -207,16 +194,10 @@ object RecipeIngest {
       md5(graft.text.UrlOps.normalizeUrl(col(urlCol))))
     val reps = keyed.groupBy("_uh").agg(min(col(idCol)).as(idCol))
     val batchUnique = keyed.join(reps, Seq("_uh", idCol), "left_semi")
-    // exclude THIS batch's own partition: a foreachBatch retry that
-    // already committed its hashes must not anti-join the batch
-    // against itself (partition pruning makes the filter free)
-    val index: DataFrame =
-      try spark.read.parquet(urlIndexPath)
-        .where(!(col("run_id") === runId && col("batch_id") === batchId))
-        .select(col("_uh"))
-      catch { case _: Exception =>
-        spark.emptyDataFrame.select(lit("").as("_uh")).limit(0) }
-    val novel = batchUnique.join(index, Seq("_uh"), "left_anti").cache()
+    val novel = MicroBatch.prior(spark, urlIndexPath, runId, batchId)
+      .fold(batchUnique)(index =>
+        batchUnique.join(index.select("_uh"), Seq("_uh"), "left_anti"))
+      .cache()
     novel.count() // materialize against the PRE-commit index state
     novel
   }
@@ -242,12 +223,11 @@ object RecipeIngest {
   def remix(spark: SparkSession, acceptedPath: String, remixedPath: String,
             langCol: String, idCol: String,
             targetWeights: Map[String, Double], mixSalt: Long = 0L): Unit = {
-    val accepted =
-      try spark.read.parquet(acceptedPath)
-      catch { case _: Exception => return } // nothing landed yet
-    if (accepted.where(col(langCol).isin(targetWeights.keys.toSeq: _*)).isEmpty) return
-    graft.ops.Sampling.mix(accepted, langCol, idCol, targetWeights, salt = mixSalt)
-      .write.mode("overwrite").parquet(remixedPath)
+    MicroBatch.landed(spark, acceptedPath).foreach { accepted =>
+      if (!accepted.where(col(langCol).isin(targetWeights.keys.toSeq: _*)).isEmpty)
+        graft.ops.Sampling.mix(accepted, langCol, idCol, targetWeights, salt = mixSalt)
+          .write.mode("overwrite").parquet(remixedPath)
+    }
   }
 
   /** One micro-batch; factored out so tests and the scale smoke can
@@ -293,22 +273,10 @@ object RecipeIngest {
 
       // cross-batch dedup: drop fingerprints already in the index
       // (fingerprint column only — ~32 B per corpus doc)
-      val index: DataFrame =
-        try spark.read.parquet(indexPath)
-          // see urlDedupBatch: a retried batch's own committed
-          // fingerprints must not erase its accepted output
-          .where(!(col("run_id") === runId && col("batch_id") === lit(batchId)))
-          .select(col("_fp"))
-        catch { case _: Exception =>
-          spark.emptyDataFrame.select(lit("").as("_fp")).limit(0) }
-      val novel = batchUnique.join(index, Seq("_fp"), "left_anti").cache()
-
-      def write(df: DataFrame, path: String): Unit =
-        df.withColumn("run_id", lit(runId)).withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("run_id", "batch_id")
-          .parquet(path)
+      val novel = MicroBatch.prior(spark, indexPath, runId, batchId)
+        .fold(batchUnique)(index =>
+          batchUnique.join(index.select("_fp"), Seq("_fp"), "left_anti"))
+        .cache()
 
       // per-batch mixture to target proportions; deterministic hash
       // gate ⇒ a retried batch reproduces the identical sample.
@@ -325,9 +293,9 @@ object RecipeIngest {
         else survivors.where(lit(false)))
         .withColumn("n_tokens", TextAnalysis.wsTokenCount(col(textCol)))
 
-      write(mixed, acceptedPath)
-      write(rejected, rejectedPath)
-      write(novel.select("_fp"), indexPath)
+      CommitLog.writeDataOnly(mixed, acceptedPath, runId, batchId)
+      CommitLog.writeDataOnly(rejected, rejectedPath, runId, batchId)
+      CommitLog.writeDataOnly(novel.select("_fp"), indexPath, runId, batchId)
       novel.unpersist()
       ()
     } finally { fp.unpersist(); () }

@@ -32,6 +32,14 @@ class BankRulesSqlSpec extends AnyFunSuite {
     assert(classes.startsWith(target), s"${BankRulesSql.auxDir} is outside $classes's build")
   }
 
+  test("sbt runMain's bg-jobs copy of the classes resolves to the checkout's target/") {
+    // sbt runs `runMain` from a copy under target/bg-jobs/ that it deletes
+    // when the run ends; the oracle reads the dumps after that
+    val copied = Paths.get(
+      "/co/target/bg-jobs/sbt_4f1c2a9e/job-1/target/7d3b0e5a/scala-2.13/classes")
+    assert(BankRulesSql.auxDirOf(copied) === Paths.get("/co/target/oracle_aux").toString)
+  }
+
   test("generated SQL parenthesizes every predicate (safe to OR-join)") {
     BankRulesSql.predicates.foreach { case (n, p) =>
       assert(p.startsWith("(") && p.endsWith(")"), s"$n: $p")

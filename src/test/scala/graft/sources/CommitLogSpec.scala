@@ -634,6 +634,19 @@ class CommitLogSpec extends SparkSpec {
       .where(col("id") === 1L).count() == 1)
   }
 
+  test("a batch with no rows commits no marker; with retires it only retires") {
+    val table = java.nio.file.Files.createTempDirectory("graft-empty").toString + "/t"
+    CommitLog.writeBatch(rows(3, "a"), table, "r1", 0L)
+    CommitLog.writeBatch(rows(0, "b"), table, "r1", 1L)
+    CommitLog.writeBatchWithStats(rows(0, "c"), table, "r1", 2L, Seq("id"))
+    // a marker naming the missing (r1, 1) directory would fail this read
+    assert(CommitLog.readCommitted(spark, table).get.count() == 3)
+    assert(CommitLog.committedBatches(spark, table) == Seq(("r1", 0L)))
+    // an empty rewrite of (r1, 0) retires it and adds nothing
+    CommitLog.writeBatch(rows(0, "d"), table, "r2", 0L, retires = Seq(("r1", 0L)))
+    assert(CommitLog.readCommitted(spark, table).isEmpty)
+  }
+
   test("compactFiles: small files bin-pack copy-on-write; rows, stats and history survive") {
     val table = java.nio.file.Files.createTempDirectory("graft-txopt").toString + "/t"
     // a batch landed as 8 tiny files (the streaming-sink shape)

@@ -42,6 +42,9 @@ class DedupIngestSpec extends SparkSpec {
       "doc_id", "text", acc, dup, idx, "run1", 1L, 5, 32, 4, 0.5)
     assert(spark.read.parquet(acc).count() == 3)
     assert(spark.read.parquet(idx).select("id").distinct().count() == 3)
+    // the replay is not matched against its own index entries
+    assert(spark.read.parquet(dup).select("doc_id", "dup_of")
+      .as[(Long, Long)].collect().toMap == Map(3L -> 1L, 5L -> 4L))
   }
 
   test("streaming end-to-end over file drops") {

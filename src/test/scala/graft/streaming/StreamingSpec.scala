@@ -332,6 +332,27 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(s"$dir/valid").count() == 3) // legacy read sees it
   }
 
+  test("validateAndRouteCommitted: an all-valid drop commits no error batch") {
+    import graft.rules.{Checks, Rule, RuleSet}
+    import graft.sources.CommitLog
+    val dir = java.nio.file.Files.createTempDirectory("graft-route-ok").toString
+    val drop = s"$dir/drop"; new java.io.File(drop).mkdirs()
+    val rules = RuleSet(Seq(
+      Rule("code.digits", Checks.digits(col("code"), 3), "code must be 3 digits")))
+    import spark.implicits._
+    Seq(("P1", "123"), ("P2", "456")).toDF("pid", "code")
+      .write.mode("append").parquet(drop)
+    val q = EventStreams.validateAndRouteCommitted(
+      spark.readStream.schema("pid STRING, code STRING").parquet(drop),
+      rules, "pid", s"$dir/valid", s"$dir/errors", s"$dir/ckpt")
+    try q.awaitTermination(60000) finally q.stop()
+    // the empty error slice wrote no partition, so it must commit no
+    // marker: one naming a missing directory breaks every later read
+    assert(CommitLog.readCommitted(spark, s"$dir/errors").isEmpty)
+    assert(CommitLog.readCommitted(spark, s"$dir/valid").get
+      .select("pid").as[String].collect().toSet == Set("P1", "P2"))
+  }
+
   test("restarted ingest with an added column: committed reads span the evolution") {
     // the long-lived-ingest scenario commit-log schema evolution (r15)
     // exists for: a stream restarts with a widened schema, the table
