@@ -46,9 +46,10 @@ object CcScaleSmoke {
     val results = Seq("local" -> Some(false), "reliable" -> Some(true),
         "auto" -> None).map { case (mode, reliable) =>
       val t0 = System.nanoTime()
-      val (labels, rounds, roundSecs) =
-        graft.ops.ConnectedComponents.componentsInstrumented(
-          edges, maxRounds = 20, reliable = reliable)
+      val (labels, runs) = Smoke.rounds(spark)(
+        graft.ops.ConnectedComponents.components(edges, maxRounds = 20, reliable = reliable))
+      val rounds = runs.last.rounds
+      val roundSecs = runs.last.roundMs.map(_ / 1000)
       val comps = labels.groupBy("component").agg(count(lit(1)).as("sz"))
       val nComps = comps.count()
       val total = (System.nanoTime() - t0) / 1e9

@@ -73,7 +73,8 @@ object GraphScaleSmoke {
 
     // --- KCore --------------------------------------------------- //
     val t1 = System.nanoTime()
-    val (core, rounds) = graft.ops.KCore.coreInstrumented(edges, k = 8)
+    val (core, runs) = Smoke.rounds(spark)(graft.ops.KCore.core(edges, k = 8))
+    val rounds = runs.last.rounds
     val coreN = core.count()
     val coreBad = core.where(col("node") < cliqueBase ||
       col("degree") =!= (cliqueSize - 1)).count()

@@ -1,16 +1,19 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.GraftListenerBridge
+import org.apache.spark.scheduler.SparkListenerEvent
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, LocalRelation, Project, Range}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 
 /** The adaptive-execution policy the operators share, in one place:
-  * driver fold or distributed, local or reliable checkpoints, scan
-  * widening and derived-frame pinning. `checkpoint()` and
-  * `localCheckpoint()` return a frame whose logical root is a
-  * `LogicalRDD` wrapping the RDD that holds the persisted rows.
+  * driver fold or distributed, local or reliable checkpoints, the
+  * round loop of the iterative graph operators, scan widening and
+  * derived-frame pinning. `checkpoint()` and `localCheckpoint()`
+  * return a frame whose logical root is a `LogicalRDD` wrapping the
+  * RDD that holds the persisted rows.
   * Reading that RDD counts the rows exactly (a job, but not a SQL
   * action, so per-round one-SQL-action pins are unaffected), and
   * unpersisting it frees exactly that frame's blocks. */
@@ -31,7 +34,13 @@ private[graft] object Adaptive {
     * checkpointing both FASTER (126 vs 162 s — HDFS-path writes beat
     * block-store churn once the label frame is tens of MB per round)
     * and flatter (round max/min 1.62 vs 4.57), so big graphs default
-    * to it when a checkpoint dir is available. */
+    * to it when a checkpoint dir is available.
+    *
+    * An operator with a driver fold decides the fold first, and the
+    * fold wins: ConnectedComponents folds up to 2,097,152 edges
+    * (`foldRows(ConnectedComponents.FoldBytesPerEdge)`), so a graph of
+    * 2,000,000–2,097,152 edges folds on the driver even with a
+    * checkpoint dir set, and reliable rounds start above the fold cap. */
   val AutoReliableEdges = 2000000L
 
   /** Persisted row count of a checkpointed frame; `None` when the plan
@@ -76,6 +85,99 @@ private[graft] object Adaptive {
       materialized.sparkSession.sparkContext.getCheckpointDir.isDefined &&
         rows.getOrElse(0L) >= threshold
     }
+
+  /** What one iterative operator's rounds did, posted on the listener
+    * bus as the loop ends: `mode` is `fold` (the rounds ran on the
+    * driver), `local` or `reliable` (the checkpoint kind of the
+    * distributed rounds); `roundMs` holds each distributed round's wall
+    * milliseconds. Specs and smokes read rounds from here. */
+  case class RoundsRun(op: String, mode: String, rounds: Int,
+      converged: Boolean, roundMs: Seq[Double]) extends SparkListenerEvent
+
+  def report(spark: SparkSession, run: RoundsRun): Unit =
+    GraftListenerBridge.post(spark.sparkContext, run)
+
+  /** Eager pins of a fixed-round loop come every this many rounds. */
+  val PinEvery = 4
+
+  /** Rounds in the explicit checkpoint mode, local without one: the
+    * mode of an input pin taken before the auto mode can be resolved,
+    * and, with `Some(false)`, of the operators that always run local. */
+  def rounds(explicit: Option[Boolean]): Rounds = new Rounds(explicit.getOrElse(false))
+
+  /** Rounds whose mode `materialized`, the operator's executed input
+    * pin, resolves once ([[resolveReliable]]). */
+  def rounds(materialized: DataFrame, explicit: Option[Boolean]): Rounds =
+    new Rounds(resolveReliable(materialized, explicit))
+
+  /** The round discipline of the iterative graph operators, in one
+    * checkpoint mode. An operator states its step and, for a
+    * converging loop, its change test; the loop owns the pins, the
+    * cadence, the release of the previous round and the stop. */
+  final class Rounds private[Adaptive] (reliable: Boolean) {
+
+    /** Checkpoint now (one job). */
+    def pin(df: DataFrame): DataFrame = checkpoint(df, eager = true)
+
+    /** Checkpoint when the first action over the frame runs. */
+    def pinLazy(df: DataFrame): DataFrame = checkpoint(df, eager = false)
+
+    /** Converging loop: each round pins `step(state)` lazily, and
+      * `changed` — a FULL count over the pinned frame, the round's one
+      * action — materializes it and says whether another round is due
+      * (a limit/isEmpty would truncate lineage over partially computed
+      * blocks). The previous round's blocks are then released: kept,
+      * they overflowed executor storage at 10 M nodes (r7: 910 s vs
+      * 162 s). `init` is released after round 1 too. Stops when
+      * nothing changed or after `maxRounds`, posts [[RoundsRun]] and
+      * returns the last pinned state and whether it converged. */
+    def converge(op: String, init: DataFrame, maxRounds: Int)
+        (step: DataFrame => DataFrame)(changed: DataFrame => Boolean)
+        : (DataFrame, Boolean) = {
+      var state = init
+      var round = 0
+      var converged = false
+      val roundMs = Seq.newBuilder[Double]
+      while (!converged && round < maxRounds) {
+        val t0 = System.nanoTime()
+        val next = pinLazy(step(state))
+        converged = !changed(next)
+        release(state)
+        state = next
+        round += 1
+        roundMs += (System.nanoTime() - t0) / 1e6
+      }
+      report(init.sparkSession, RoundsRun(op, if (reliable) "reliable" else "local",
+        round, converged, roundMs.result()))
+      (state, converged)
+    }
+
+    /** Fixed-round loop: `iters` rounds of `step`, which passes its new
+      * state frames through the `pin` it is given — an eager pin every
+      * [[PinEvery]] rounds that bounds the lineage, never on the last
+      * round (the caller's own action consumes that), the identity
+      * otherwise. */
+    def fixed[S](iters: Int, init: S)(step: (S, DataFrame => DataFrame) => S): S =
+      (1 to iters).foldLeft(init) { (s, i) =>
+        step(s, if (i % PinEvery == 0 && i < iters) pin else identity)
+      }
+
+    /** Spark names a job after its first frame outside Spark, which
+      * for every pin would be this file; the name keeps the operator
+      * line that asked for the pin ("localCheckpoint at KCore.scala:N"),
+      * so job listings still tell the operators apart. */
+    private def checkpoint(df: DataFrame, eager: Boolean): DataFrame = {
+      val sc = df.sparkSession.sparkContext
+      val shortSite = "callSite.short" // the local property SparkContext.setCallSite sets
+      val prev = sc.getLocalProperty(shortSite)
+      Thread.currentThread.getStackTrace.find { f =>
+        f.getClassName.startsWith("graft.") && !f.getClassName.startsWith("graft.ops.Adaptive$")
+      }.foreach { f => sc.setCallSite(
+        s"${if (reliable) "checkpoint" else "localCheckpoint"} at ${f.getFileName}:${f.getLineNumber}") }
+      try if (reliable) df.checkpoint(eager) else df.localCheckpoint(eager)
+      finally sc.setLocalProperty(shortSite, prev)
+    }
+  }
 
   /** Scale-adaptive scan widening (guide §2.5: unsplittable input). A
     * single-row-group parquet file arrives as ONE effective scan task,

@@ -19,11 +19,10 @@ import org.apache.spark.sql.functions._
   * — no driver-side graph, no quadratic blowup, O(log diameter) rounds
   * (dedup graphs: 2-4; a 10^6-hop pathological chain: ~20).
   *
-  * Each round checkpoints to cut the exponentially growing iterative
-  * lineage (the classic iterative-DataFrame hazard): `localCheckpoint`
-  * by default (fast, executor-resident blocks), or reliable
-  * `checkpoint()` with `reliable = true` for executor-loss-safe
-  * production runs.
+  * Rounds run on [[Adaptive.rounds]]: each round's label state is
+  * pinned (local or reliable checkpoint, resolved once) to cut the
+  * exponentially growing iterative lineage, and the previous round is
+  * released.
   */
 object ConnectedComponents {
 
@@ -42,55 +41,31 @@ object ConnectedComponents {
     * columns `src`, `dst`; self-loops are fine (isolated nodes can be
     * passed as self-loops).
     *
-    * `reliable = Some(true)` swaps per-round `localCheckpoint` (fast,
-    * but blocks live on executors — an executor loss mid-computation
-    * kills the job) for reliable `checkpoint()` to the SparkContext's
-    * checkpoint dir — the mode a 1000-executor production run wants.
-    * Caller must have set `spark.sparkContext.setCheckpointDir`.
-    *
-    * The default `None` decides automatically: reliable when a
-    * checkpoint dir is set AND the materialized edge count is at least
-    * [[Adaptive.AutoReliableEdges]] (above that size reliable is also
-    * the faster mode — measured, see threshold doc); the local fast
-    * path otherwise. */
+    * `reliable` picks the checkpoint kind of the rounds
+    * ([[Adaptive.rounds]]): `Some(true)` is the executor-loss-safe mode
+    * a 1000-executor production run wants (the caller must have set
+    * `spark.sparkContext.setCheckpointDir`); an explicit choice always
+    * takes the distributed path. The default `None` folds within the
+    * driver budget and otherwise resolves the mode from the edge count
+    * ([[Adaptive.AutoReliableEdges]]). Rounds taken and per-round
+    * times are reported as [[Adaptive.RoundsRun]] (`op` "cc"). */
   def components(edges: DataFrame, maxRounds: Int = 20,
                  reliable: Option[Boolean] = None): DataFrame =
-    componentsInstrumented(edges, maxRounds, reliable)._1
+    componentsCapped(edges, Adaptive.foldRows(FoldBytesPerEdge), maxRounds, reliable)
 
-  /** [[components]] plus (rounds taken, per-round wall seconds) — the
-    * scale-smoke evidence that rounds ≈ log₂(longest chain) and that
-    * per-round time stays flat (checkpointing truncates the iterative
-    * lineage; without it each round would replan and re-execute every
-    * earlier round's DAG). `autoReliableEdges` overrides the
-    * [[Adaptive.AutoReliableEdges]] decision threshold (tests pin the
-    * switch with a tiny graph). */
-  def componentsInstrumented(edges: DataFrame, maxRounds: Int = 20,
-                 reliable: Option[Boolean] = None,
-                 autoReliableEdges: Long = Adaptive.AutoReliableEdges)
-      : (DataFrame, Int, Seq[Double]) =
-    componentsCapped(edges, Adaptive.foldRows(FoldBytesPerEdge), maxRounds,
-      reliable, autoReliableEdges)
-
-  /** [[componentsInstrumented]] under a given fold cap (0: never fold). */
+  /** [[components]] under a given fold cap (0: never fold);
+    * `autoReliableEdges` overrides the [[Adaptive.AutoReliableEdges]]
+    * threshold (tests pin the switch with a tiny graph). */
   private[graft] def componentsCapped(edges: DataFrame, foldRows: Long,
       maxRounds: Int = 20, reliable: Option[Boolean] = None,
-      autoReliableEdges: Long = Adaptive.AutoReliableEdges): (DataFrame, Int, Seq[Double]) = {
-    var useReliable = reliable.getOrElse(false)
-    def ckpt(df: DataFrame): DataFrame =
-      if (useReliable) df.checkpoint() else df.localCheckpoint()
-    // lazy variant: marks the plan's RDD for checkpointing but defers
-    // materialization to the FIRST action over it — so the per-round
-    // convergence count below is the job that also persists + truncates
-    // the round (one job per round, not checkpoint-then-isEmpty two)
-    def ckptLazy(df: DataFrame): DataFrame =
-      if (useReliable) df.checkpoint(eager = false) else df.localCheckpoint(eager = false)
-
+      autoReliableEdges: Long = Adaptive.AutoReliableEdges): DataFrame = {
     // materialize the edge list FIRST: `und` is referenced by both the
     // symmetric-closure job and the initial-labels job below — without
     // this checkpoint the caller's whole upstream pipeline (e.g. an
     // n-gram Jaccard pair join) executes once per reference, since
     // exchange reuse never spans separate actions
-    val und = ckpt(edges.select(col("src").cast("long"), col("dst").cast("long")))
+    val und = Adaptive.rounds(reliable)
+      .pin(edges.select(col("src").cast("long"), col("dst").cast("long")))
     // auto-mode fold (see [[FoldBytesPerEdge]]), streamed over the
     // persisted partitions: identical min-id components, zero rounds.
     // One count of `und` serves both the fold admission and the auto
@@ -123,38 +98,32 @@ object ConnectedComponents {
       val spark = edges.sparkSession
       import spark.implicits._
       val out = parent.keys.toArray
-      val labels = spark.createDataset(
+      Adaptive.report(spark, Adaptive.RoundsRun("cc", "fold", 0, converged = true, Seq.empty))
+      return spark.createDataset(
         out.toIndexedSeq.map(n => (n, find(n)))).toDF("id", "component")
-      return (labels, 0, Seq.empty)
     }
     // auto mode: the edge frame is now materialized (locally — the
     // decision predates the mode), so its exact size decides the mode
     // for every downstream cut
-    useReliable = Adaptive.resolveReliable(und, reliable,
-      autoReliableEdges, undRows)
+    val rounds = Adaptive.rounds(Some(Adaptive.resolveReliable(und, reliable,
+      autoReliableEdges, undRows)))
     // symmetric closure, checkpointed (not just cached): a cache keeps
     // the upstream logical plan — e.g. a whole near-dup pair pipeline —
     // and every round's join re-runs the optimizer over that subtree;
     // checkpointing truncates it so each round plans against a flat
     // in-memory relation
-    val sym = ckpt(und.union(und.select(col("dst").as("src"), col("src").as("dst")))
+    val sym = rounds.pin(und.union(und.select(col("dst").as("src"), col("src").as("dst")))
       .where(col("src") =!= col("dst")).distinct()
       .select(col("src").as("e_id"), col("dst").as("e_nbr")))
 
-    val labels0 = ckpt(und.select(explode(array(col("src"), col("dst"))).as("id"))
+    val labels0 = rounds.pin(und.select(explode(array(col("src"), col("dst"))).as("id"))
       .distinct().select(col("id"), col("id").as("component")))
-    var labels: DataFrame = labels0
-    // the checkpointed frame holding the CURRENT round's label state
-    var roundCkpt: DataFrame = labels0
     // `und` fed only the symmetric closure and the initial labels,
     // both now materialized — release its full-edge-copy blocks
     Adaptive.release(und)
 
-    var round = 0
-    var converged = false
-    val roundSecs = Seq.newBuilder[Double]
-    while (!converged && round < maxRounds) {
-      val roundT0 = System.nanoTime()
+    val (last, converged) = rounds.converge("cc", labels0, maxRounds) { state =>
+      val labels = state.select("id", "component")
       // neighbor labels flow along edges; merging with the node's own
       // label via a left join (not union+groupBy) keeps the previous
       // label on the row, so convergence is readable off the
@@ -169,26 +138,12 @@ object ConnectedComponents {
       // doubling effective propagation distance per round (a 2^r-hop
       // path resolves in ~r rounds instead of its diameter)
       val ptrs = merged.select(col("id").as("p_id"), col("component").as("p_comp"))
-      val next = ckptLazy(merged.join(ptrs, merged("component") === ptrs("p_id"), "left")
+      merged.join(ptrs, merged("component") === ptrs("p_id"), "left")
         .select(col("id"), col("old_comp"),
-          least(col("component"), coalesce(col("p_comp"), col("component"))).as("component")))
-      // a label only ever decreases → changed ⇔ any strict decrease.
-      // This count is the round's ONLY driver action: computing it
-      // forces the lazily-marked checkpoint above (RDD.doCheckpoint
-      // runs over the action's whole ancestor DAG), so materialization
-      // and convergence detection share one job instead of two.
-      converged = next.where(col("component") < col("old_comp")).count() == 0L
-      labels = next.select("id", "component")
-      // the new round is materialized — free the PREVIOUS round's
-      // localCheckpoint blocks. Without this, every round's full label
-      // frame stays pinned in the block store; at 10 M nodes the
-      // accumulated rounds overflowed executor storage and the
-      // eviction/GC thrash showed up as 20-80x per-round spikes in the
-      // r7 scale smoke (910 s vs 162 s with per-round release).
-      Adaptive.release(roundCkpt)
-      roundCkpt = next
-      round += 1
-      roundSecs += (System.nanoTime() - roundT0) / 1e9
+          least(col("component"), coalesce(col("p_comp"), col("component"))).as("component"))
+    } { next =>
+      // a label only ever decreases → changed ⇔ any strict decrease
+      next.where(col("component") < col("old_comp")).count() > 0L
     }
     // the result depends only on the final round's truncated state —
     // the doubled edge list (the largest persisted object) can go
@@ -198,7 +153,7 @@ object ConnectedComponents {
     if (!converged) throw new IllegalStateException(
       s"ConnectedComponents: not converged after $maxRounds rounds — " +
         "raise maxRounds (rounds needed ≈ log2 of the longest chain)")
-    (labels, round, roundSecs.result())
+    last.select("id", "component")
   }
 
   /** Free the block-store copy backing a frame returned by

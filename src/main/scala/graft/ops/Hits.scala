@@ -44,24 +44,33 @@ object Hits {
     *    hub scores key on src) and pays exactly ONE shuffle — the
     *    joined frame into the aggregate — which is the floor for a
     *    shuffle join. */
-  def scores(edges: DataFrame, iters: Int = 5, checkpointEvery: Int = 4,
+  def scores(edges: DataFrame, iters: Int = 5,
       broadcastNodeLimit: Long = 4000000L): DataFrame =
     scoresCapped(edges, Adaptive.foldRows(FoldBytesPerEdge), iters,
-      checkpointEvery, broadcastNodeLimit)
+      broadcastNodeLimit)
 
-  /** Driver bytes per input edge of [[scoresLocal]]: CC's figure
-    * ([[ConnectedComponents.FoldBytesPerEdge]]), not measured for this
-    * fold. */
+  /** Driver bytes per input edge of [[scoresLocal]], measured on a
+    * 2M-edge, 60k-node string-id bipartite (the `q_hits_purchases`
+    * shape; heap after full GC, 4-core local session): at its peak the
+    * fold holds the partitions' packed edges and node dictionaries, the
+    * global intern and the packed pair array, 24 B/edge, plus at most
+    * the serialized partition results in flight while they are
+    * gathered. The per-node share is what varies: at one fresh string
+    * node per endpoint the same fold held 244 B/edge, so the cap
+    * assumes a graph with far fewer nodes than edges. (A `collect()` of
+    * the edge rows alone held ~250 B/edge on the bipartite.) */
   private[graft] val FoldBytesPerEdge = 32L
 
   /** [[scores]] under a given fold cap (0: never fold). */
   private[graft] def scoresCapped(edges: DataFrame, foldRows: Long,
-      iters: Int = 5, checkpointEvery: Int = 4,
+      iters: Int = 5,
       broadcastNodeLimit: Long = 4000000L): DataFrame = {
     require(iters >= 1, s"iters $iters must be >= 1")
     val dec = "decimal(38,0)"
-    val e = edges.select(col("src"), col("dst"))
-      .localCheckpoint(eager = false)
+    // local checkpoints throughout; the rounds pin on [[Adaptive.rounds]]'
+    // fixed-round cadence
+    val rounds = Adaptive.rounds(Some(false))
+    val e = rounds.pinLazy(edges.select(col("src"), col("dst")))
     // bounded driver fold (r20, the CC tier): every half-step
     // is a graph-sized job; the fold replays the same integer sums and
     // (s·10¹²) div smax normalization (Long sums are exact under the
@@ -74,18 +83,16 @@ object Hits {
       return scoresLocal(e, iters)
     // node set pre-partitioned by node: every round's two left joins
     // land on this exchange instead of re-shuffling the full node set
-    val nodes = e.select(col("src").as("node"))
+    val nodes = rounds.pinLazy(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
-      .repartition(col("node")).localCheckpoint(eager = false)
+      .repartition(col("node")))
     val small = nodes.count() <= broadcastNodeLimit
     // dedupe rides each pin's OWN shuffle instead of a separate
     // distinct() exchange: hash(src) clusters equal (src,dst) pairs,
     // so dropDuplicates after the repartition is partition-local and
     // the pin's partitioning survives for every round's join/agg reuse
-    val bySrc = e.repartition(col("src")).dropDuplicates("src", "dst")
-      .localCheckpoint(eager = false)
-    val byDst = e.repartition(col("dst")).dropDuplicates("src", "dst")
-      .localCheckpoint(eager = false)
+    val bySrc = rounds.pinLazy(e.repartition(col("src")).dropDuplicates("src", "dst"))
+    val byDst = rounds.pinLazy(e.repartition(col("dst")).dropDuplicates("src", "dst"))
     val one = lit(1000000000000L)
     // scores stay SPARSE inside the loop: a node absent from the
     // frame is exactly a zero score, and zeros contribute nothing to
@@ -93,41 +100,34 @@ object Hits {
     // every round (the r15 shape) paid two extra joins per round for
     // rows the next join immediately dropped. Round 1's hub input is
     // the full node set at 1.
-    var hub = nodes.withColumn("h", one)
-    var auth: DataFrame = null
-    for (i <- 1 to iters) {
-      // authority step: a(v) = Σ h(u) over u→v, max-normalized.
-      // Each sum frame is PINNED (localCheckpoint) before use: it
-      // feeds both the max broadcast and the score projection, and
-      // un-pinned those two subtrees each re-execute the edges⋈scores
-      // join+agg — and round N's plan re-executes every prior round's
-      // under each of its broadcasts, the compounding that bent the
-      // 10× scale curve. Pinning is cheap: one row per scored node.
-      val hubBySrc = hub.withColumnRenamed("node", "src")
-      val aSum = (if (small) byDst.join(broadcast(hubBySrc), "src")
-                  else bySrc.join(hubBySrc, "src"))
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("h").cast(dec)).as("s"))
-        .localCheckpoint(eager = false)
-      val aMax = aSum.agg(max("s").as("smax"))
-      auth = aSum.crossJoin(broadcast(aMax))
-        .select(col("node"),
-          expr("(s * 1000000000000) div smax").as("a"))
-      // hub step: h(u) = Σ a(v) over u→v, max-normalized
-      val authByDst = auth.withColumnRenamed("node", "dst")
-      val hSum = (if (small) bySrc.join(broadcast(authByDst), "dst")
-                  else byDst.join(authByDst, "dst"))
-        .groupBy(col("src").as("node"))
-        .agg(sum(col("a").cast(dec)).as("s"))
-        .localCheckpoint(eager = false)
-      val hMax = hSum.agg(max("s").as("smax"))
-      hub = hSum.crossJoin(broadcast(hMax))
-        .select(col("node"),
-          expr("(s * 1000000000000) div smax").as("h"))
-      if (checkpointEvery > 0 && i % checkpointEvery == 0 && i < iters) {
-        hub = hub.localCheckpoint()
-        auth = auth.localCheckpoint()
-      }
+    val (hub, auth) = rounds.fixed(iters, (nodes.withColumn("h", one), null: DataFrame)) {
+      case ((hub, _), pin) =>
+        // authority step: a(v) = Σ h(u) over u→v, max-normalized.
+        // Each sum frame is PINNED before use: it feeds both the max
+        // broadcast and the score projection, and un-pinned those two
+        // subtrees each re-execute the edges⋈scores join+agg — and
+        // round N's plan re-executes every prior round's under each of
+        // its broadcasts, the compounding that bent the 10× scale
+        // curve. Pinning is cheap: one row per scored node.
+        val hubBySrc = hub.withColumnRenamed("node", "src")
+        val aSum = rounds.pinLazy((if (small) byDst.join(broadcast(hubBySrc), "src")
+                    else bySrc.join(hubBySrc, "src"))
+          .groupBy(col("dst").as("node"))
+          .agg(sum(col("h").cast(dec)).as("s")))
+        val aMax = aSum.agg(max("s").as("smax"))
+        val auth = aSum.crossJoin(broadcast(aMax))
+          .select(col("node"),
+            expr("(s * 1000000000000) div smax").as("a"))
+        // hub step: h(u) = Σ a(v) over u→v, max-normalized
+        val authByDst = auth.withColumnRenamed("node", "dst")
+        val hSum = rounds.pinLazy((if (small) bySrc.join(broadcast(authByDst), "dst")
+                    else byDst.join(authByDst, "dst"))
+          .groupBy(col("src").as("node"))
+          .agg(sum(col("a").cast(dec)).as("s")))
+        val hMax = hSum.agg(max("s").as("smax"))
+        (pin(hSum.crossJoin(broadcast(hMax))
+          .select(col("node"),
+            expr("(s * 1000000000000) div smax").as("h"))), pin(auth))
     }
     // densify ONCE: nodes with no out-edges get hub 0, no in-edges
     // authority 0
@@ -153,6 +153,8 @@ object Hits {
     }
     def nullId: Int = { val e = idx.get(null); if (e == null) -1 else e.intValue() }
   }
+
+  private def pack(src: Int, dst: Int): Long = (src.toLong << 32) | (dst & 0xffffffffL)
 
   /** Build the output frame of the driver fold: (node, score...) with
     * the node column keeping the edge frame's type; `scores` maps the
@@ -182,20 +184,39 @@ object Hits {
   private def scoresLocal(e: DataFrame, iters: Int): DataFrame = {
     val spark = e.sparkSession
     val one = 1000000000000L
+    // each partition interns its own endpoints and ships them once,
+    // with its edges as packed (srcId << 32) | dstId local ids: the
+    // driver never holds a Row per edge ([[FoldBytesPerEdge]]).
+    // Interning the partitions' nodes in partition order keeps the
+    // global first-appearance order.
+    val parts = e.rdd.mapPartitions { rows =>
+      val local = new NodeIntern
+      val packed = Array.newBuilder[Long]
+      rows.foreach(r => packed += pack(local.id(r.get(0)), local.id(r.get(1))))
+      Iterator.single((local.values.toArray, packed.result()))
+    }.collect()
     val in = new NodeIntern
-    val dedup = new java.util.LinkedHashSet[Long]() // (srcId << 32) | dstId
-    e.collect().foreach { r =>
-      val s = in.id(r.get(0)); val d = in.id(r.get(1))
-      dedup.add((s.toLong << 32) | (d.toLong & 0xffffffffL))
+    val pairs = new Array[Long](parts.iterator.map(_._2.length).sum)
+    var k = 0
+    parts.foreach { case (values, packed) =>
+      val global = values.map(in.id)
+      packed.foreach { p =>
+        pairs(k) = pack(global((p >>> 32).toInt), global(p.toInt)); k += 1
+      }
+    }
+    // sorted and deduplicated in place: the half-step sums are exact
+    // Long sums, so edge order cannot change a score
+    java.util.Arrays.sort(pairs)
+    var m = 0
+    k = 0
+    while (k < pairs.length) {
+      if (m == 0 || pairs(k) != pairs(m - 1)) { pairs(m) = pairs(k); m += 1 }
+      k += 1
     }
     val n = in.values.length
     val nullId = in.nullId
-    val srcA = new Array[Int](dedup.size)
-    val dstA = new Array[Int](dedup.size)
-    var k = 0
-    dedup.forEach { p =>
-      srcA(k) = (p >>> 32).toInt; dstA(k) = p.toInt; k += 1
-    }
+    val srcA = Array.tabulate(m)(i => (pairs(i) >>> 32).toInt)
+    val dstA = Array.tabulate(m)(i => pairs(i).toInt)
     // sparse scores as (present, value) slot pairs
     var hub = Array.fill(n)(true)
     var hubV = Array.fill(n)(one)

@@ -19,12 +19,10 @@ import org.apache.spark.sql.functions._
   * reports the rounds taken — LPA is a heuristic and is documented
   * as such, unlike CC's exact closure.
   *
-  * Scale shape: the [[ConnectedComponents]] round discipline — edges
-  * symmetric-closed and checkpointed once; each round is one
-  * label-join + one (node, label) count + one per-node argmax (all
-  * map-side-combining aggregates, never a window), lazily
-  * checkpointed so materialization and the convergence count share
-  * one action; previous round's blocks released. */
+  * Scale shape: edges symmetric-closed and pinned once; each round is
+  * one label-join + one (node, label) count + one per-node argmax (all
+  * map-side-combining aggregates, never a window), run on
+  * [[Adaptive.rounds]] with local checkpoints. */
 object LabelPropagation {
 
   /** Driver bytes per input edge of the fold — per-node neighbor sets
@@ -38,24 +36,20 @@ object LabelPropagation {
 
   /** (id, community) for every node in `edges` (two long-castable
     * columns src, dst; self-loops admit isolated nodes, which keep
-    * their own label). Also returns rounds via
-    * [[communitiesInstrumented]]. */
+    * their own label). Rounds taken are reported as
+    * [[Adaptive.RoundsRun]] (`op` "lpa"). */
   def communities(edges: DataFrame, maxRounds: Int = 10): DataFrame =
-    communitiesInstrumented(edges, maxRounds)._1
-
-  def communitiesInstrumented(edges: DataFrame, maxRounds: Int = 10): (DataFrame, Int) =
     communitiesCapped(edges, Adaptive.foldRows(FoldBytesPerEdge), maxRounds)
 
-  /** [[communitiesInstrumented]] under a given fold cap (0: never fold). */
+  /** [[communities]] under a given fold cap (0: never fold). */
   private[graft] def communitiesCapped(edges: DataFrame, foldRows: Long,
-      maxRounds: Int = 10): (DataFrame, Int) = {
+      maxRounds: Int = 10): DataFrame = {
     require(maxRounds >= 1, s"maxRounds: $maxRounds")
-    def ckpt(df: DataFrame): DataFrame = df.localCheckpoint()
-    def ckptLazy(df: DataFrame): DataFrame = df.localCheckpoint(false)
-    val und = ckpt(edges.select(col("src").cast("long"), col("dst").cast("long"))
+    val rounds = Adaptive.rounds(Some(false))
+    val und = rounds.pin(edges.select(col("src").cast("long"), col("dst").cast("long"))
       .where(col("src").isNotNull && col("dst").isNotNull))
     // bounded driver fold: the checkpoint above materialized the edge
-    // list, so its exact size decides the tier (the CC discipline)
+    // list, so its exact size decides the tier (as in CC)
     if (Adaptive.admits(foldRows, Adaptive.rows(und))) {
       val rows = und.collect()
       Adaptive.release(und)
@@ -103,23 +97,20 @@ object LabelPropagation {
       }
       val spark = edges.sparkSession
       import spark.implicits._
-      val out = spark.createDataset(
+      Adaptive.report(spark, Adaptive.RoundsRun("lpa", "fold", round, converged, Seq.empty))
+      return spark.createDataset(
         labels.toSeq.map { case (id, c) => (id, c) })
         .toDF("id", "community")
-      return (out, round)
     }
-    val sym = ckpt(und.union(und.select(col("dst").as("src"), col("src").as("dst")))
+    val sym = rounds.pin(und.union(und.select(col("dst").as("src"), col("src").as("dst")))
       .where(col("src") =!= col("dst")).distinct()
       .select(col("src").as("e_id"), col("dst").as("e_nbr")))
-    val labels0 = ckpt(und.select(explode(array(col("src"), col("dst"))).as("id"))
+    val labels0 = rounds.pin(und.select(explode(array(col("src"), col("dst"))).as("id"))
       .distinct().select(col("id"), col("id").as("community")))
     Adaptive.release(und)
 
-    var labels = labels0
-    var roundCkpt = labels0
-    var round = 0
-    var converged = false
-    while (!converged && round < maxRounds) {
+    val (last, _) = rounds.converge("lpa", labels0, maxRounds) { state =>
+      val labels = state.select("id", "community")
       // neighbor label votes: count per (node, label), argmax by
       // (count desc, label asc) via min(struct(-count, label)) —
       // map-side partials, no window
@@ -129,16 +120,11 @@ object LabelPropagation {
         .groupBy("id")
         .agg(min(struct((-col("n")).as("neg"), col("lbl").as("l"))).as("b"))
         .select(col("id"), col("b.l").as("new_comm"))
-      val next = ckptLazy(labels.join(votes, Seq("id"), "left")
+      labels.join(votes, Seq("id"), "left")
         .select(col("id"), col("community").as("old_comm"),
-          coalesce(col("new_comm"), col("community")).as("community")))
-      converged = next.where(col("community") =!= col("old_comm")).count() == 0L
-      labels = next.select("id", "community")
-      Adaptive.release(roundCkpt)
-      roundCkpt = next
-      round += 1
-    }
+          coalesce(col("new_comm"), col("community")).as("community"))
+    } { next => next.where(col("community") =!= col("old_comm")).count() > 0L }
     Adaptive.release(sym)
-    (labels, round)
+    last.select("id", "community")
   }
 }

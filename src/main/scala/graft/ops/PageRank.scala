@@ -1,14 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Fixed-iteration integer PageRank — link-structure centrality for
   * derived graphs (purchase bipartites, co-occurrence, near-dup pair
   * graphs), the second iterative-graph operator beside
-  * [[ConnectedComponents]] and run with the same discipline: per-round
-  * state is one small (node, rank) frame, lineage is cut by periodic
-  * localCheckpoint, and each round is ONE distributed join+aggregate —
+  * [[ConnectedComponents]]: per-round state is one small (node, rank)
+  * frame, lineage is cut by the periodic pin of [[Adaptive.rounds]]'
+  * fixed-round loop, and each round is ONE distributed join+aggregate —
   * no driver-side graph.
   *
   * All arithmetic is INTEGER: ranks live in 10¹² micro-units, each
@@ -45,61 +45,24 @@ object PageRank {
   /** Ranks after `iters` rounds over directed `(src, dst)` edges.
     * Output: `(node, rank)` — rank in 10¹² micro-units; the initial
     * mass is `10¹² div |V|` per node and `base = (r0·15) div 100` is
-    * re-injected each round. `checkpointEvery` bounds lineage (0
-    * disables; periodic checkpoint otherwise).
-    *
-    * `reliable` mirrors [[ConnectedComponents.components]]: explicit
-    * `Some(true)` checkpoints every cut (edge frame, node frame,
-    * periodic rank state) to the SparkContext checkpoint dir —
-    * executor-loss-safe for long production runs; default `None`
-    * auto-switches the downstream cuts to reliable when a checkpoint
-    * dir is set and the materialized edge count is at least
-    * [[Adaptive.AutoReliableEdges]] (the r7 10 M-edge CC
-    * smoke measured reliable both faster and flatter at that size). */
+    * re-injected each round. Checkpoint kind (`reliable`) and the
+    * periodic pin of the rank state follow [[Adaptive.rounds]]. */
   def ranks(edges: DataFrame, iters: Int = 5,
-      checkpointEvery: Int = 4,
       reliable: Option[Boolean] = None): DataFrame = {
     require(iters >= 1, s"iters $iters must be >= 1")
-    var useReliable = reliable.getOrElse(false)
-    def ckpt(df: DataFrame): DataFrame =
-      if (useReliable) df.checkpoint() else df.localCheckpoint()
     // ONE materialization of the caller's edge pipeline: nodes, degrees
-    // and the per-edge frame below all derive from this checkpoint, so
-    // an expensive upstream (a join+distinct building the graph) runs
+    // and the per-edge frame below all derive from this pin, so an
+    // expensive upstream (a join+distinct building the graph) runs
     // exactly once, not once per derived frame
-    val e = ckpt(edges.select(col("src"), col("dst")))
-    useReliable = Adaptive.resolveReliable(e, reliable)
-    val nodes = ckpt(e.select(col("src").as("node"))
+    val e = Adaptive.rounds(reliable).pin(edges.select(col("src"), col("dst")))
+    val rounds = Adaptive.rounds(e, reliable)
+    val nodes = rounds.pin(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct())
-    val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    // degree rides with every edge once, partitioned on the iteration
-    // join key so every round's edges⋈ranks reuses this src-hash
-    // layout and the big side never re-shuffles. LAZY checkpoint, not
-    // cache(): it still materializes inside the first round's job (no
-    // extra job barrier) and rounds 2..n read the pinned blocks — but
-    // the blocks are ContextCleaner-managed and free when the frame is
-    // GC'd, where a cache() entry would sit in the CacheManager until
-    // an unpersist this API can never issue (the caller owns the last
-    // action). Same discipline as GlobalOrder's ordering pin.
-    val ed = e.join(deg, "src").repartition(col("src"))
-    val edp = if (useReliable) ed.checkpoint(eager = false)
-      else ed.localCheckpoint(eager = false)
+    val ed = byDegree(rounds, e)
     val n = nodes.count()
     require(n > 0, "PageRank on an empty edge frame")
     val r0 = 1000000000000L / n
-    val base = (r0 * 15L) / 100L
-    var ranks = nodes.withColumn("r", lit(r0))
-    for (i <- 1 to iters) {
-      val contrib = edp.join(ranks.withColumnRenamed("node", "src"), "src")
-        .select(col("dst").as("node"),
-          expr("(r * 85) div (100 * deg)").as("c"))
-        .groupBy("node").agg(sum("c").as("m"))
-      ranks = nodes.join(contrib, Seq("node"), "left")
-        .select(col("node"), (lit(base) + coalesce(col("m"), lit(0L))).as("r"))
-      if (checkpointEvery > 0 && i % checkpointEvery == 0 && i < iters)
-        ranks = ckpt(ranks)
-    }
-    ranks.withColumnRenamed("r", "rank")
+    iterate(rounds, ed, nodes, nodes.withColumn("r", lit(r0)), lit((r0 * 15L) / 100L), iters)
   }
 
   /** Personalized PageRank: teleport mass returns ONLY to `sources`
@@ -114,46 +77,53 @@ object PageRank {
     * so the mass denominators use |S ∩ V| — the oracle replays that.
     * Nodes never reached carry rank 0 (they stay in the frame). */
   def personalized(edges: DataFrame, sources: DataFrame, iters: Int = 3,
-      checkpointEvery: Int = 4,
       reliable: Option[Boolean] = None): DataFrame = {
     require(iters >= 1, s"iters $iters must be >= 1")
-    var useReliable = reliable.getOrElse(false)
-    def ckpt(df: DataFrame): DataFrame =
-      if (useReliable) df.checkpoint() else df.localCheckpoint()
-    val e = ckpt(edges.select(col("src"), col("dst")))
-    useReliable = Adaptive.resolveReliable(e, reliable)
+    val e = Adaptive.rounds(reliable).pin(edges.select(col("src"), col("dst")))
+    val rounds = Adaptive.rounds(e, reliable)
     val nodes0 = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
     // nodes carry the is-source flag for the whole run (one frame, one
-    // checkpoint — the per-round base injection is a narrow when())
-    val nodes = ckpt(nodes0.join(
+    // pin — the per-round base injection is a narrow when())
+    val nodes = rounds.pin(nodes0.join(
         sources.select(col("node")).distinct().withColumn("_s", lit(1)),
         Seq("node"), "left")
       .select(col("node"), col("_s").isNotNull.as("is_src")))
-    val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    // lazy-checkpointed like ranks(): pinned across rounds, freed by
-    // the ContextCleaner, no CacheManager residue
-    val ed0 = e.join(deg, "src").repartition(col("src"))
-    val ed = if (useReliable) ed0.checkpoint(eager = false)
-      else ed0.localCheckpoint(eager = false)
+    val ed = byDegree(rounds, e)
     val nSrc = nodes.where(col("is_src")).count()
     require(nSrc > 0, "PageRank.personalized: no source intersects the graph")
     val r0 = 1000000000000L / nSrc
     val base = (1000000000000L * 15L / 100L) / nSrc
-    var ranks = nodes.select(col("node"),
-      when(col("is_src"), lit(r0)).otherwise(lit(0L)).as("r"))
-    for (i <- 1 to iters) {
+    iterate(rounds, ed, nodes,
+      nodes.select(col("node"), when(col("is_src"), lit(r0)).otherwise(lit(0L)).as("r")),
+      when(col("is_src"), lit(base)).otherwise(lit(0L)), iters)
+  }
+
+  /** The edge frame with its source's out-degree on every edge,
+    * partitioned on the iteration join key so every round's
+    * edges⋈ranks reuses this src-hash layout and the big side never
+    * re-shuffles. LAZY pin, not cache(): it still materializes inside
+    * the first round's job (no extra job barrier) and later rounds
+    * read the pinned blocks — but the blocks are ContextCleaner-managed
+    * and free when the frame is GC'd, where a cache() entry would sit
+    * in the CacheManager until an unpersist this API can never issue
+    * (the caller owns the last action). Same discipline as
+    * GlobalOrder's ordering pin. */
+  private def byDegree(rounds: Adaptive.Rounds, e: DataFrame): DataFrame =
+    rounds.pinLazy(e.join(e.groupBy("src").agg(count(lit(1)).as("deg")), "src")
+      .repartition(col("src")))
+
+  /** `iters` rounds from `ranks0`: each node's new rank is `base` (a
+    * column of `nodes`) plus `(r·85) div (100·deg)` from every
+    * in-edge. */
+  private def iterate(rounds: Adaptive.Rounds, ed: DataFrame, nodes: DataFrame,
+      ranks0: DataFrame, base: Column, iters: Int): DataFrame =
+    rounds.fixed(iters, ranks0) { (ranks, pin) =>
       val contrib = ed.join(ranks.withColumnRenamed("node", "src"), "src")
         .select(col("dst").as("node"),
           expr("(r * 85) div (100 * deg)").as("c"))
         .groupBy("node").agg(sum("c").as("m"))
-      ranks = nodes.join(contrib, Seq("node"), "left")
-        .select(col("node"),
-          (when(col("is_src"), lit(base)).otherwise(lit(0L)) +
-            coalesce(col("m"), lit(0L))).as("r"))
-      if (checkpointEvery > 0 && i % checkpointEvery == 0 && i < iters)
-        ranks = ckpt(ranks)
-    }
-    ranks.withColumnRenamed("r", "rank")
-  }
+      pin(nodes.join(contrib, Seq("node"), "left")
+        .select(col("node"), (base + coalesce(col("m"), lit(0L))).as("r")))
+    }.withColumnRenamed("r", "rank")
 }

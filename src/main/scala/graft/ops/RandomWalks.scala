@@ -24,9 +24,9 @@ import org.apache.spark.sql.functions._
   * whole cost. Adjacency rows are max-degree-bounded — cap degrees
   * upstream for power-law graphs whose hottest node's neighbor list
   * would not fit a row (~10⁷ neighbors is still only ~100 MB).
-  * The adjacency is checkpointed once and reused; frontier rows carry
-  * their growing path array (walkLen-bounded); dead-end walks leave
-  * the frontier and keep their shorter path. */
+  * The adjacency is pinned once ([[Adaptive.rounds]]) and reused;
+  * frontier rows carry their growing path array (walkLen-bounded);
+  * dead-end walks leave the frontier and keep their shorter path. */
 object RandomWalks {
 
   /** `walksPerNode` walks of up to `walkLen` hops from every node of
@@ -40,10 +40,10 @@ object RandomWalks {
     // caller's edge frame is already distinct (e.g. Graphs.coOccurrence
     // output) — duplicate edges would bias the sampler, so only assert
     // it when it is a construction-time fact
+    val rounds = Adaptive.rounds(Some(false))
     val e0p = edges.select(col("src").cast("string").as("src"),
       col("dst").cast("string").as("dst"))
-    val e0 = (if (distinctEdges) e0p.distinct() else e0p)
-      .localCheckpoint(eager = false)
+    val e0 = rounds.pinLazy(if (distinctEdges) e0p.distinct() else e0p)
     // sorted neighbor array per node: element_at(nbrs, k+1) is the
     // same node the former rank-indexed row `rank = k` held (rank was
     // row_number() over (partition by src order by dst) - 1), so
@@ -53,37 +53,34 @@ object RandomWalks {
     // explicit repartition(col("src")) re-shuffled the whole adjacency
     // — arrays and all — through a second identical exchange (measured
     // 2.3 s / 40 MB of the sf0.1 co-purchase walk, r20 profile).
-    val adj = e0.groupBy(col("src"))
+    val adj = rounds.pinLazy(e0.groupBy(col("src"))
       .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
-      .withColumn("deg", size(col("nbrs")).cast("long"))
-      .localCheckpoint(eager = false)
+      .withColumn("deg", size(col("nbrs")).cast("long")))
     val nodes = e0.select(col("src").as("node")).distinct()
-    var frontier = nodes
+    var frontier = rounds.pinLazy(nodes
       .select(col("node"),
         explode(sequence(lit(0), lit(walksPerNode - 1))).as("w"))
       .select(concat_ws("#", col("node"), col("w")).as("walk_id"),
-        col("node").as("cur"), array(col("node")).as("path"))
-      .localCheckpoint(eager = false)
+        col("node").as("cur"), array(col("node")).as("path")))
     var done: DataFrame = null
     for (step <- 1 to walkLen) {
       val pick = pmod(xxhash64(lit(seed), col("walk_id"), lit(step)),
         col("deg"))
       val hop = element_at(col("nbrs"), (pick + 1).cast("int"))
-      val stepped = frontier.join(adj, col("cur") === col("src"), "left")
+      // LAZY pin: the eager form scheduled a standalone
+      // materialization job per step; lazy piggybacks on the first
+      // consumer (the ended-filter or the next frontier join) with the
+      // SAME boundary pinning. Bench-neutral at sf0.1 (the per-step
+      // cost is the frontier⋈adjacency join either way — r13 measured
+      // 10.5 vs 10.7 s under load); kept for the saved scheduler round
+      // trip per step, the GlobalOrder r13 discipline.
+      val stepped = rounds.pinLazy(frontier.join(adj, col("cur") === col("src"), "left")
         .select(col("walk_id"),
           hop.as("cur"),
           when(hop.isNotNull,
             concat(col("path"), array(hop)))
             .otherwise(col("path")).as("path"),
-          hop.isNull.as("dead"))
-        // LAZY: the eager form scheduled a standalone materialization
-        // job per step; lazy piggybacks on the first consumer (the
-        // ended-filter or the next frontier join) with the SAME
-        // boundary pinning. Bench-neutral at sf0.1 (the per-step cost
-        // is the frontier⋈adjacency join either way — r13 measured
-        // 10.5 vs 10.7 s under load); kept for the saved scheduler
-        // round trip per step, the GlobalOrder r13 discipline.
-        .localCheckpoint(eager = false)
+          hop.isNull.as("dead")))
       val ended = stepped.where(col("dead") || lit(step == walkLen))
         .select(col("walk_id"), col("path"))
       done = if (done == null) ended else done.union(ended)

@@ -5,12 +5,12 @@ import org.apache.spark.sql.functions._
 
 /** Bounded-hop weighted shortest paths — multi-source Bellman-Ford by
   * frontier relaxation, the third iterative-graph operator beside
-  * [[ConnectedComponents]] and [[PageRank]] and run with the same
-  * discipline: per-round state is one (node, dist) frame no larger than
-  * |V|, lineage is cut per round, and each round is ONE distributed
-  * join+aggregate. Answers reachability-with-cost questions over
-  * derived graphs (co-purchase distance, link-graph hop radius from a
-  * seed crawl, near-dup cluster diameter probes).
+  * [[ConnectedComponents]] and [[PageRank]], on the same
+  * [[Adaptive.rounds]] loop: per-round state is one (node, dist) frame
+  * no larger than |V|, pinned per round, and each round is ONE
+  * distributed join+aggregate. Answers reachability-with-cost
+  * questions over derived graphs (co-purchase distance, link-graph hop
+  * radius from a seed crawl, near-dup cluster diameter probes).
   *
   * Weights are caller-supplied BIGINTs and every distance is an
   * order-independent integer `min` of integer sums, so the result is
@@ -43,60 +43,39 @@ object ShortestPaths {
     * and the oracle's monotone-merge replay both assume relaxation
     * never re-opens a settled node below its hop frontier.
     *
-    * `reliable` mirrors [[PageRank.ranks]]: `Some(true)` checkpoints
-    * every cut to the SparkContext checkpoint dir; default `None`
-    * auto-switches when the materialized edge count is at least
-    * [[Adaptive.AutoReliableEdges]]. */
+    * `reliable` picks the checkpoint kind as in [[Adaptive.rounds]];
+    * hops taken are reported as [[Adaptive.RoundsRun]] (`op` "sssp"). */
   def bounded(edges: DataFrame, sources: DataFrame, maxHops: Int,
       reliable: Option[Boolean] = None): DataFrame = {
     require(maxHops >= 1, s"maxHops $maxHops must be >= 1")
-    var useReliable = reliable.getOrElse(false)
-    def ckpt(df: DataFrame): DataFrame =
-      if (useReliable) df.checkpoint() else df.localCheckpoint()
-    // lazy variant: materialization rides the round's convergence count
-    // (the CC one-action-per-round discipline). The count is FULL, so
-    // the deferred checkpoint never truncates lineage over partially
-    // computed blocks (the limit/isEmpty hazard).
-    def ckptLazy(df: DataFrame): DataFrame =
-      if (useReliable) df.checkpoint(eager = false)
-      else df.localCheckpoint(eager = false)
     val INF = Long.MaxValue
     // one materialization of the caller's edge pipeline (often a
     // join+aggregate building a co-occurrence graph), then pin the
     // src-hash layout every round's join reuses
-    val e0 = ckpt(edges.select(col("src"), col("dst"),
+    val e0 = Adaptive.rounds(reliable).pin(edges.select(col("src"), col("dst"),
       col("w").cast("long").as("w")))
-    useReliable = Adaptive.resolveReliable(e0, reliable)
+    val rounds = Adaptive.rounds(e0, reliable)
     val negs = e0.filter(col("w") < 0).limit(1).count()
     require(negs == 0L, "ShortestPaths.bounded: negative edge weight")
     val e = e0.repartition(col("src")).cache()
-    var state = ckpt(sources.select(col("node")).distinct()
-      .withColumn("dist", lit(0L)))
-    var roundCkpt: DataFrame = null
-    var frontier = state
-    var hop = 0
-    var improving = true
-    while (improving && hop < maxHops) {
-      hop += 1
+    // every source is round 1's frontier; the constant `improved`
+    // folds away in the optimized plan
+    val state0 = rounds.pin(sources.select(col("node")).distinct()
+      .withColumn("dist", lit(0L))).withColumn("improved", lit(true))
+    val (last, _) = rounds.converge("sssp", state0, maxHops) { state =>
+      val frontier = state.filter(col("improved")).select("node", "dist")
       val cand = e.join(frontier.withColumnRenamed("node", "src"), "src")
         .select(col("dst").as("node"), (col("dist") + col("w")).as("nd"))
         .groupBy("node").agg(min("nd").as("nd"))
-      // ONE action per round: the improved-count both materializes the
-      // lazily-checkpointed merge and decides the early exit (was an
-      // eager checkpoint job + a separate isEmpty job, r20)
-      val merged = ckptLazy(state.join(cand, Seq("node"), "full")
+      state.select("node", "dist").join(cand, Seq("node"), "full")
         .select(col("node"),
           least(coalesce(col("dist"), lit(INF)),
             coalesce(col("nd"), lit(INF))).as("dist"),
           (coalesce(col("nd"), lit(INF)) <
-            coalesce(col("dist"), lit(INF))).as("improved")))
-      improving = merged.filter(col("improved")).count() > 0L
-      frontier = merged.filter(col("improved")).select("node", "dist")
-      state = merged.select("node", "dist")
-      if (roundCkpt ne null) Adaptive.release(roundCkpt)
-      roundCkpt = merged
-    }
+            coalesce(col("dist"), lit(INF))).as("improved"))
+    } { merged => merged.filter(col("improved")).count() > 0L }
     e.unpersist()
-    state
+    Adaptive.release(e0)
+    last.select("node", "dist")
   }
 }

@@ -62,6 +62,7 @@ object DedupIngest {
     val sigs = Similarity.minhashSignatures(batch, idCol, textCol, k, numHashes)
       .cache()
     val banded = bandOf(sigs, numHashes, rowsPerBand).cache()
+    var dups: DataFrame = null
     try {
       // vs-index candidates: join banded batch against the banded
       // index of earlier batches (none before the first batch lands)
@@ -80,7 +81,7 @@ object DedupIngest {
           >= threshold)
         .select(col("a.id").as("id"), col("b.id").as("dup_of"))
 
-      val dups = (vsIndex.toSeq :+ within).reduce(_ union _)
+      dups = (vsIndex.toSeq :+ within).reduce(_ union _)
         .groupBy("id").agg(min("dup_of").as("dup_of"))
         .cache()
 
@@ -96,6 +97,6 @@ object DedupIngest {
       val newEntries = banded
         .join(dupIds, banded("id") === dupIds("id"), "left_anti")
       CommitLog.writeDataOnly(newEntries, indexPath, runId, batchId)
-    } finally { sigs.unpersist(); banded.unpersist(); () }
+    } finally { sigs.unpersist(); banded.unpersist(); if (dups != null) dups.unpersist() }
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import graft.ops.Adaptive
+import org.apache.spark.scheduler.SparkListenerEvent
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,6 +14,18 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
   override def afterAll(): Unit = () // session shared across suites
+
+  /** `body`'s result and every listener event posted while it ran, the
+    * listener bus drained first ([[Smoke.events]]). */
+  def events[T](body: => T): (T, Seq[SparkListenerEvent]) = Smoke.events(spark)(body)
+
+  /** `body`'s result and the one [[Adaptive.RoundsRun]] of `op` it posted. */
+  def roundsRun[T](op: String)(body: => T): (T, Adaptive.RoundsRun) = {
+    val (out, runs) = Smoke.rounds(spark)(body)
+    val mine = runs.filter(_.op == op)
+    assert(mine.size == 1, s"$op rounds reports: $runs")
+    (out, mine.head)
+  }
 }
 
 object SparkSpec {

@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.scheduler.SparkListener
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Pins the convergence-fold property: each ConnectedComponents round
@@ -19,30 +18,13 @@ class CcJobCountSpec extends SparkSpec {
   import spark.implicits._
 
   test("each round fuses materialization and convergence into one count action") {
-    val descs = scala.collection.mutable.ArrayBuffer[String]()
-    val counting = new SparkListener {
-      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
-        e match {
-          case s: SparkListenerSQLExecutionStart => synchronized { descs += s.description }
-          case _ => ()
-        }
-    }
     // a single edge converges in exactly 2 rounds: round 1 relabels
     // 2 -> 1, round 2 observes zero changes
     val edges = Seq((1L, 2L)).toDF("src", "dst")
-    spark.sparkContext.addSparkListener(counting)
-    try {
-      val m = ConnectedComponents.componentsCapped(edges, foldRows = 0L)._1
-        .as[(Long, Long)].collect().toMap
-      assert(m === Map(1L -> 1L, 2L -> 1L))
-      // listener events post asynchronously — wait until the stream is
-      // stable (bounded) instead of a fixed flaky sleep
-      val deadline = System.nanoTime() + 10e9.toLong
-      var last = -1
-      while (System.nanoTime() < deadline && descs.size != last) {
-        last = descs.size; Thread.sleep(200)
-      }
-    } finally spark.sparkContext.removeSparkListener(counting)
+    val (m, posted) = events(ConnectedComponents.componentsCapped(edges, foldRows = 0L)
+      .as[(Long, Long)].collect().toMap)
+    assert(m === Map(1L -> 1L, 2L -> 1L))
+    val descs = posted.collect { case s: SparkListenerSQLExecutionStart => s.description }
     val inCc = descs.filter(_.contains("ConnectedComponents.scala"))
     val counts = inCc.count(_.startsWith("count at"))
     val empties = inCc.count(_.startsWith("isEmpty at"))

@@ -12,7 +12,7 @@ class ConnectedComponentsSpec extends SparkSpec {
     val df = edges.toDF("src", "dst")
     val folded = ConnectedComponents.components(df)
       .as[(Long, Long)].collect().toMap
-    val dist = ConnectedComponents.componentsCapped(df, foldRows = 0L)._1
+    val dist = ConnectedComponents.componentsCapped(df, foldRows = 0L)
       .as[(Long, Long)].collect().toMap
     assert(folded === dist, "driver fold and distributed rounds disagree")
     folded
@@ -60,21 +60,35 @@ class ConnectedComponentsSpec extends SparkSpec {
   }
 
   test("only the final round's label blocks stay persisted (bounded storage)") {
-    // a 64-hop path forces ~7 pointer-jump rounds; without the
-    // per-round unpersist every round's localCheckpoint blocks stay
-    // pinned (the r7 10M-edge smoke thrashed the block store, 20-80x
-    // round spikes) — after the run at most one round's state and the
-    // symmetric edge list may remain
-    val before = spark.sparkContext.getPersistentRDDs.size
-    val (labels, _, _) = ConnectedComponents.componentsCapped(
-      (0L until 63L).map(i => (i, i + 1)).toDF("src", "dst"),
-      foldRows = 0L)
-    assert(labels.select(countDistinct("component")).head().getLong(0) == 1L)
-    // only the FINAL round's label state may remain (und, sym, and
-    // every earlier round are released via their LogicalRDD handles)
-    val after = spark.sparkContext.getPersistentRDDs.size
-    assert(after - before <= 1,
-      s"persisted RDDs grew $before -> $after: round blocks are leaking")
+    // without the per-round release every round's checkpoint blocks
+    // stay pinned (the r7 10M-edge smoke thrashed the block store,
+    // 20-80x round spikes) — after a multi-round run of each
+    // iterative operator's distributed path at most its final round's
+    // state may remain (input pins, static frames and every earlier
+    // round are released via their LogicalRDD handles)
+    val path = (0L until 63L).map(i => (i, i + 1)).toDF("src", "dst")
+    def bothWays(pairs: Seq[(Long, Long)]) =
+      (pairs ++ pairs.map(p => (p._2, p._1))).toDF("src", "dst")
+    val cases = Seq[(String, () => org.apache.spark.sql.DataFrame, Long)](
+      // a 64-hop path forces ~7 pointer-jump rounds
+      ("cc", () => ConnectedComponents.componentsCapped(path, foldRows = 0L)
+        .select(countDistinct("component")), 1L),
+      ("lpa", () => LabelPropagation.communitiesCapped(path, foldRows = 0L), 64L),
+      // a triangle with a 13-node tail peels one tail node per round
+      ("kcore", () => KCore.core(bothWays((0L, 2L) +: (0L until 15L).map(i => (i, i + 1))),
+        k = 2), 3L),
+      ("sssp", () => ShortestPaths.bounded(path.withColumn("w", lit(1L)),
+        Seq(0L).toDF("node"), maxHops = 8), 9L))
+    for ((op, run, rows) <- cases) {
+      // new persisted RDD ids, not a count: the ContextCleaner may
+      // free other suites' RDDs meanwhile
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val out = run()
+      assert(out.count() === rows, op)
+      val kept = (spark.sparkContext.getPersistentRDDs -- before).size
+      assert(kept <= 1, s"$op: $kept new persisted RDDs: round blocks are leaking")
+      Adaptive.release(out)
+    }
   }
 
   test("reliable-checkpoint mode produces the same components") {
@@ -90,7 +104,7 @@ class ConnectedComponentsSpec extends SparkSpec {
     val edges = (0L until 63L).map(i => (i, i + 1)).toDF("src", "dst")
     intercept[IllegalStateException] {
       ConnectedComponents.componentsCapped(edges, foldRows = 0L,
-        maxRounds = 2)._1.collect()
+        maxRounds = 2).collect()
     }
   }
 
@@ -109,7 +123,7 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(!Adaptive.resolveReliable(edges, None)) // default 2M
     // end-to-end: auto above threshold produces reliably-checkpointed
     // label state (and the same components)
-    val (labels, _, _) = ConnectedComponents.componentsCapped(
+    val labels = ConnectedComponents.componentsCapped(
       edges, foldRows = 0L, reliable = None, autoReliableEdges = 1L)
     val reliableState = labels.queryExecution.logical.collectFirst {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
@@ -124,30 +138,22 @@ class ConnectedComponentsSpec extends SparkSpec {
   test("auto mode above the fold budget counts the edge checkpoint once") {
     val dir = java.nio.file.Files.createTempDirectory("cc-count-once").toString
     spark.sparkContext.setCheckpointDir(dir)
-    // call site of each job (its result stage's name, "count at X.scala:N")
-    val sites = scala.collection.mutable.ArrayBuffer[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        sites.synchronized { sites += e.stageInfos.maxBy(_.stageId).name }
-    }
     // 3 edges over a budget of 1: the fold is refused, then auto mode
     // reads the same edge count to pick the checkpoint kind
     val edges = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("src", "dst")
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val (labels, rounds, _) = ConnectedComponents.componentsCapped(
+    val (_, posted) = events {
+      val labels = ConnectedComponents.componentsCapped(
         edges, foldRows = 1L, reliable = None)
-      assert(rounds > 0)
       assert(labels.as[(Long, Long)].collect().toMap ===
         Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L))
-      // listener events post asynchronously: wait until they stop
-      val deadline = System.nanoTime() + 10e9.toLong
-      var last = -1
-      while (System.nanoTime() < deadline && sites.synchronized(sites.size) != last) {
-        last = sites.synchronized(sites.size); Thread.sleep(200)
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
-    val counts = sites.synchronized(sites.filter(_.contains("Adaptive.scala")).toList)
+    }
+    val rounds = posted.collect { case r: Adaptive.RoundsRun => r.rounds }.head
+    assert(rounds > 0)
+    // call site of each job (its result stage's name, "count at X.scala:N")
+    val sites = posted.collect {
+      case e: org.apache.spark.scheduler.SparkListenerJobStart => e.stageInfos.maxBy(_.stageId).name
+    }
+    val counts = sites.filter(_.contains("Adaptive.scala")).toList
     assert(counts.size === 1, s"edge checkpoint counts: ${counts.mkString("; ")}")
     new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
   }
@@ -155,18 +161,19 @@ class ConnectedComponentsSpec extends SparkSpec {
   test("auto mode folds small graphs on the driver; explicit mode stays distributed") {
     val edges = Seq((1L, 2L), (2L, 3L), (9L, 9L)).toDF("src", "dst")
     // driver fold: zero distributed rounds, same labels
-    val (lab, rounds, secs) = ConnectedComponents.componentsInstrumented(edges)
+    val (lab, run) = roundsRun("cc")(ConnectedComponents.components(edges))
+    val (rounds, secs) = (run.rounds, run.roundMs)
     assert(rounds === 0 && secs.isEmpty)
     assert(lab.as[(Long, Long)].collect().toMap ===
       Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 9L))
     // an explicit reliable choice (even false) opts into the
     // distributed rounds regardless of size
-    val (_, rounds2, _) = ConnectedComponents.componentsInstrumented(
-      edges, reliable = Some(false))
+    val rounds2 = roundsRun("cc")(ConnectedComponents.components(
+      edges, reliable = Some(false)))._2.rounds
     assert(rounds2 > 0)
     // threshold boundary: 3 edges with threshold 2 goes distributed
-    val (_, rounds3, _) = ConnectedComponents.componentsCapped(
-      edges, foldRows = 2L)
+    val rounds3 = roundsRun("cc")(ConnectedComponents.componentsCapped(
+      edges, foldRows = 2L))._2.rounds
     assert(rounds3 > 0)
   }
 

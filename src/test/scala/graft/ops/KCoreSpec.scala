@@ -23,7 +23,8 @@ class KCoreSpec extends SparkSpec {
     // triangle 1-2-3, node 4 hangs off 3, node 5 off 4: k=2 keeps only
     // the triangle, and 4 only peels AFTER 5 does
     val g = undirected(Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L)))
-    val (core, rounds) = KCore.coreInstrumented(g, k = 2)
+    val (core, run) = roundsRun("kcore")(KCore.core(g, k = 2))
+    val rounds = run.rounds
     assert(core.as[(Long, Long)].collect().toMap.keySet == Set(1L, 2L, 3L))
     assert(rounds >= 2, s"cascade must take >1 round, took $rounds")
   }
@@ -35,7 +36,8 @@ class KCoreSpec extends SparkSpec {
 
   test("already a k-core: one round, nothing peels") {
     val g = undirected(clique(Seq(1L, 2L, 3L, 4L)))
-    val (core, rounds) = KCore.coreInstrumented(g, k = 3)
+    val (core, run) = roundsRun("kcore")(KCore.core(g, k = 3))
+    val rounds = run.rounds
     assert(core.count() == 4 && rounds == 1)
   }
 

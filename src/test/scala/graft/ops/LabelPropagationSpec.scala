@@ -59,7 +59,7 @@ class LabelPropagationSpec extends SparkSpec {
     val fold = LabelPropagation.communities(edges, maxRounds = 6)
       .as[(Long, Long)].collect().toMap
     val dist = LabelPropagation.communitiesCapped(edges, foldRows = 0L,
-        maxRounds = 6)._1
+        maxRounds = 6)
       .as[(Long, Long)].collect().toMap
     assert(fold == dist)
   }
@@ -68,7 +68,8 @@ class LabelPropagationSpec extends SparkSpec {
     // a single edge flips labels every synchronous round (a adopts b,
     // b adopts a) — the loop must terminate and report maxRounds
     val edges = Seq((1L, 2L)).toDF("src", "dst")
-    val (_, rounds) = LabelPropagation.communitiesInstrumented(edges, maxRounds = 4)
+    val (_, run) = roundsRun("lpa")(LabelPropagation.communities(edges, maxRounds = 4))
+    val rounds = run.rounds
     assert(rounds <= 4)
   }
 }

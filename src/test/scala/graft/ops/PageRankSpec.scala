@@ -42,10 +42,21 @@ class PageRankSpec extends SparkSpec {
 
   test("periodic checkpointing bounds the plan, not the result") {
     val g = undirected(("a", "b"), ("b", "c"), ("c", "a"))
-    val checked = PageRank.ranks(g, iters = 6, checkpointEvery = 2)
-    val unchecked = PageRank.ranks(g, iters = 6, checkpointEvery = 0)
-    assert(checked.orderBy("node").collect().toSeq
-      === unchecked.orderBy("node").collect().toSeq)
+    // six rounds: the state is pinned after round 4 of 6
+    val checked = PageRank.ranks(g, iters = 6)
+    // the plain integer recurrence on the triangle: every node has
+    // out-degree 2 and receives from the other two
+    val r0 = 1000000000000L / 3
+    val base = (r0 * 15L) / 100L
+    val ref = (1 to 6).foldLeft(Map("a" -> r0, "b" -> r0, "c" -> r0)) { (r, _) =>
+      r.map { case (v, _) =>
+        v -> (base + r.collect { case (u, ru) if u != v => (ru * 85L) / (100L * 2L) }.sum)
+      }
+    }
+    assert(checked.orderBy("node").collect().map(x => x.getString(0) -> x.getLong(1)).toSeq
+      === ref.toSeq.sorted)
+    // three rounds and no pin: a longer plan than six rounds' last two
+    val unchecked = PageRank.ranks(g, iters = 3)
     def planSize(df: org.apache.spark.sql.DataFrame) =
       df.queryExecution.logical.collect { case n => n }.size
     assert(planSize(checked) < planSize(unchecked),

@@ -47,6 +47,21 @@ class DedupIngestSpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap == Map(3L -> 1L, 5L -> 4L))
   }
 
+  test("processBatch leaves no cached frame behind, batch after batch") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ingest-cache").toString
+    val (acc, dup, idx) = (s"$dir/accepted", s"$dir/dups", s"$dir/index")
+    val text = "the quick brown fox jumps over the lazy dog in the quiet morning sun"
+    // new persisted RDD ids, not a count: the ContextCleaner may free
+    // other suites' RDDs meanwhile
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    for (b <- 0L to 1L)
+      DedupIngest.processBatch(Seq((10L * b, text), (10L * b + 1, text)).toDF("doc_id", "text"),
+        "doc_id", "text", acc, dup, idx, "run1", b, 5, 32, 4, 0.5)
+    assert(spark.read.parquet(dup).count() == 3)
+    val kept = spark.sparkContext.getPersistentRDDs -- before
+    assert(kept.isEmpty, s"still persisted after two batches: ${kept.values.map(_.name)}")
+  }
+
   test("streaming end-to-end over file drops") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ingest-s").toString
     val drop = s"$dir/drop"; new java.io.File(drop).mkdirs()
