@@ -100,21 +100,34 @@ private[graft] object Adaptive {
   /** Eager pins of a fixed-round loop come every this many rounds. */
   val PinEvery = 4
 
-  /** Rounds in the explicit checkpoint mode, local without one: the
-    * mode of an input pin taken before the auto mode can be resolved,
-    * and, with `Some(false)`, of the operators that always run local. */
-  def rounds(explicit: Option[Boolean]): Rounds = new Rounds(explicit.getOrElse(false))
+  /** Rounds that always pin locally (LPA, HITS, RandomWalks). */
+  def localRounds: Rounds = new Rounds(None, Some(false), 0L)
 
-  /** Rounds whose mode `materialized`, the operator's executed input
-    * pin, resolves once ([[resolveReliable]]). */
-  def rounds(materialized: DataFrame, explicit: Option[Boolean]): Rounds =
-    new Rounds(resolveReliable(materialized, explicit))
+  /** Pin `input`, the operator's one materialization of its caller's
+    * pipeline, now: in the explicit mode, local without one (the auto
+    * mode needs the pin's size). Returns the pin and the rounds whose
+    * mode it resolves ([[resolveReliable]] against `threshold`) at
+    * the first use that needs the mode, so a driver fold decided in
+    * between shares the one count ([[Rounds.inputRows]]). */
+  def rounds(input: DataFrame, explicit: Option[Boolean],
+      threshold: Long = AutoReliableEdges): (DataFrame, Rounds) = {
+    val pinned = new Rounds(None, explicit, threshold).pin(input)
+    (pinned, new Rounds(Some(pinned), explicit, threshold))
+  }
 
   /** The round discipline of the iterative graph operators, in one
     * checkpoint mode. An operator states its step and, for a
     * converging loop, its change test; the loop owns the pins, the
     * cadence, the release of the previous round and the stop. */
-  final class Rounds private[Adaptive] (reliable: Boolean) {
+  final class Rounds private[Adaptive] (input: Option[DataFrame],
+      explicit: Option[Boolean], threshold: Long) {
+
+    /** Row count of the pinned input (`None` for [[localRounds]]),
+      * counted at most once. */
+    lazy val inputRows: Option[Long] = input.flatMap(rows)
+
+    private lazy val reliable: Boolean = input.fold(explicit.getOrElse(false))(
+      resolveReliable(_, explicit, threshold, inputRows))
 
     /** Checkpoint now (one job). */
     def pin(df: DataFrame): DataFrame = checkpoint(df, eager = true)
@@ -167,15 +180,13 @@ private[graft] object Adaptive {
       * line that asked for the pin ("localCheckpoint at KCore.scala:N"),
       * so job listings still tell the operators apart. */
     private def checkpoint(df: DataFrame, eager: Boolean): DataFrame = {
-      val sc = df.sparkSession.sparkContext
-      val shortSite = "callSite.short" // the local property SparkContext.setCallSite sets
-      val prev = sc.getLocalProperty(shortSite)
+      def run = if (reliable) df.checkpoint(eager) else df.localCheckpoint(eager)
       Thread.currentThread.getStackTrace.find { f =>
         f.getClassName.startsWith("graft.") && !f.getClassName.startsWith("graft.ops.Adaptive$")
-      }.foreach { f => sc.setCallSite(
-        s"${if (reliable) "checkpoint" else "localCheckpoint"} at ${f.getFileName}:${f.getLineNumber}") }
-      try if (reliable) df.checkpoint(eager) else df.localCheckpoint(eager)
-      finally sc.setLocalProperty(shortSite, prev)
+      }.fold(run) { f =>
+        GraftListenerBridge.withCallSite(df.sparkSession.sparkContext,
+          s"${if (reliable) "checkpoint" else "localCheckpoint"} at ${f.getFileName}:${f.getLineNumber}")(run)
+      }
     }
   }
 

@@ -64,14 +64,13 @@ object ConnectedComponents {
     // this checkpoint the caller's whole upstream pipeline (e.g. an
     // n-gram Jaccard pair join) executes once per reference, since
     // exchange reuse never spans separate actions
-    val und = Adaptive.rounds(reliable)
-      .pin(edges.select(col("src").cast("long"), col("dst").cast("long")))
+    val (und, rounds) = Adaptive.rounds(
+      edges.select(col("src").cast("long"), col("dst").cast("long")), reliable, autoReliableEdges)
     // auto-mode fold (see [[FoldBytesPerEdge]]), streamed over the
     // persisted partitions: identical min-id components, zero rounds.
     // One count of `und` serves both the fold admission and the auto
-    // mode below; lazy, so neither runs it when it cannot matter
-    lazy val undRows = Adaptive.rows(und)
-    if (reliable.isEmpty && Adaptive.admits(foldRows, undRows)) {
+    // mode below; neither runs it when it cannot matter
+    if (reliable.isEmpty && Adaptive.admits(foldRows, rounds.inputRows)) {
       // union-find, min-id representative: union hangs the larger
       // root under the smaller, so every tree root is its
       // component's minimum — order-independent, deterministic
@@ -103,10 +102,8 @@ object ConnectedComponents {
         out.toIndexedSeq.map(n => (n, find(n)))).toDF("id", "component")
     }
     // auto mode: the edge frame is now materialized (locally — the
-    // decision predates the mode), so its exact size decides the mode
-    // for every downstream cut
-    val rounds = Adaptive.rounds(Some(Adaptive.resolveReliable(und, reliable,
-      autoReliableEdges, undRows)))
+    // decision predates the mode), so `rounds` resolves the mode of
+    // every downstream cut from its exact size at the first pin below
     // symmetric closure, checkpointed (not just cached): a cache keeps
     // the upstream logical plan — e.g. a whole near-dup pair pipeline —
     // and every round's join re-runs the optimizer over that subtree;

@@ -67,9 +67,9 @@ object Hits {
       broadcastNodeLimit: Long = 4000000L): DataFrame = {
     require(iters >= 1, s"iters $iters must be >= 1")
     val dec = "decimal(38,0)"
-    // local checkpoints throughout; the rounds pin on [[Adaptive.rounds]]'
-    // fixed-round cadence
-    val rounds = Adaptive.rounds(Some(false))
+    // local checkpoints throughout; the rounds pin on the fixed-round
+    // cadence of [[Adaptive.Rounds]]
+    val rounds = Adaptive.localRounds
     val e = rounds.pinLazy(edges.select(col("src"), col("dst")))
     // bounded driver fold (r20, the CC tier): every half-step
     // is a graph-sized job; the fold replays the same integer sums and

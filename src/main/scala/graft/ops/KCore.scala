@@ -37,10 +37,10 @@ object KCore {
   def core(edges: DataFrame, k: Int, maxRounds: Int = 100,
       reliable: Option[Boolean] = None): DataFrame = {
     require(k >= 1, s"k $k must be >= 1")
-    val e = Adaptive.rounds(reliable).pin(edges.select(col("src"), col("dst"))
-      .where(col("src") =!= col("dst")))
+    val (e, rounds) = Adaptive.rounds(edges.select(col("src"), col("dst"))
+      .where(col("src") =!= col("dst")), reliable)
     def degrees(e: DataFrame) = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val (last, _) = Adaptive.rounds(e, reliable).converge("kcore", e, maxRounds) { e =>
+    val (last, _) = rounds.converge("kcore", e, maxRounds) { e =>
       val survivors = degrees(e).where(col("deg") >= k).select(col("src").as("node"))
       e.join(survivors.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
         .join(survivors.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")

@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   * Scale shape: edges symmetric-closed and pinned once; each round is
   * one label-join + one (node, label) count + one per-node argmax (all
   * map-side-combining aggregates, never a window), run on
-  * [[Adaptive.rounds]] with local checkpoints. */
+  * [[Adaptive.localRounds]]. */
 object LabelPropagation {
 
   /** Driver bytes per input edge of the fold — per-node neighbor sets
@@ -45,7 +45,7 @@ object LabelPropagation {
   private[graft] def communitiesCapped(edges: DataFrame, foldRows: Long,
       maxRounds: Int = 10): DataFrame = {
     require(maxRounds >= 1, s"maxRounds: $maxRounds")
-    val rounds = Adaptive.rounds(Some(false))
+    val rounds = Adaptive.localRounds
     val und = rounds.pin(edges.select(col("src").cast("long"), col("dst").cast("long"))
       .where(col("src").isNotNull && col("dst").isNotNull))
     // bounded driver fold: the checkpoint above materialized the edge

@@ -54,8 +54,7 @@ object PageRank {
     // and the per-edge frame below all derive from this pin, so an
     // expensive upstream (a join+distinct building the graph) runs
     // exactly once, not once per derived frame
-    val e = Adaptive.rounds(reliable).pin(edges.select(col("src"), col("dst")))
-    val rounds = Adaptive.rounds(e, reliable)
+    val (e, rounds) = Adaptive.rounds(edges.select(col("src"), col("dst")), reliable)
     val nodes = rounds.pin(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct())
     val ed = byDegree(rounds, e)
@@ -79,8 +78,7 @@ object PageRank {
   def personalized(edges: DataFrame, sources: DataFrame, iters: Int = 3,
       reliable: Option[Boolean] = None): DataFrame = {
     require(iters >= 1, s"iters $iters must be >= 1")
-    val e = Adaptive.rounds(reliable).pin(edges.select(col("src"), col("dst")))
-    val rounds = Adaptive.rounds(e, reliable)
+    val (e, rounds) = Adaptive.rounds(edges.select(col("src"), col("dst")), reliable)
     val nodes0 = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
     // nodes carry the is-source flag for the whole run (one frame, one

@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * whole cost. Adjacency rows are max-degree-bounded — cap degrees
   * upstream for power-law graphs whose hottest node's neighbor list
   * would not fit a row (~10⁷ neighbors is still only ~100 MB).
-  * The adjacency is pinned once ([[Adaptive.rounds]]) and reused;
+  * The adjacency is pinned once ([[Adaptive.localRounds]]) and reused;
   * frontier rows carry their growing path array (walkLen-bounded);
   * dead-end walks leave the frontier and keep their shorter path. */
 object RandomWalks {
@@ -40,7 +40,7 @@ object RandomWalks {
     // caller's edge frame is already distinct (e.g. Graphs.coOccurrence
     // output) — duplicate edges would bias the sampler, so only assert
     // it when it is a construction-time fact
-    val rounds = Adaptive.rounds(Some(false))
+    val rounds = Adaptive.localRounds
     val e0p = edges.select(col("src").cast("string").as("src"),
       col("dst").cast("string").as("dst"))
     val e0 = rounds.pinLazy(if (distinctEdges) e0p.distinct() else e0p)

@@ -52,9 +52,8 @@ object ShortestPaths {
     // one materialization of the caller's edge pipeline (often a
     // join+aggregate building a co-occurrence graph), then pin the
     // src-hash layout every round's join reuses
-    val e0 = Adaptive.rounds(reliable).pin(edges.select(col("src"), col("dst"),
-      col("w").cast("long").as("w")))
-    val rounds = Adaptive.rounds(e0, reliable)
+    val (e0, rounds) = Adaptive.rounds(edges.select(col("src"), col("dst"),
+      col("w").cast("long").as("w")), reliable)
     val negs = e0.filter(col("w") < 0).limit(1).count()
     require(negs == 0L, "ShortestPaths.bounded: negative edge weight")
     val e = e0.repartition(col("src")).cache()

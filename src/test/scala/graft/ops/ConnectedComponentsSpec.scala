@@ -69,22 +69,28 @@ class ConnectedComponentsSpec extends SparkSpec {
     val path = (0L until 63L).map(i => (i, i + 1)).toDF("src", "dst")
     def bothWays(pairs: Seq[(Long, Long)]) =
       (pairs ++ pairs.map(p => (p._2, p._1))).toDF("src", "dst")
-    val cases = Seq[(String, () => org.apache.spark.sql.DataFrame, Long)](
-      // a 64-hop path forces ~7 pointer-jump rounds
-      ("cc", () => ConnectedComponents.componentsCapped(path, foldRows = 0L)
-        .select(countDistinct("component")), 1L),
-      ("lpa", () => LabelPropagation.communitiesCapped(path, foldRows = 0L), 64L),
-      // a triangle with a 13-node tail peels one tail node per round
+    // each operator with the exact result it must return
+    val cases = Seq[(String, () => org.apache.spark.sql.DataFrame, Set[(Long, Long)])](
+      // a 64-hop path forces ~7 pointer-jump rounds; one component, 0
+      ("cc", () => ConnectedComponents.componentsCapped(path, foldRows = 0L),
+        (0L to 63L).map(i => (i, 0L)).toSet),
+      // LPA's labels on a path depend on its tie-breaks: only its node
+      // set is checked
+      ("lpa", () => LabelPropagation.communitiesCapped(path, foldRows = 0L)
+        .select(col("id"), lit(0L)), (0L to 63L).map(i => (i, 0L)).toSet),
+      // a triangle with a 13-node tail peels one tail node per round;
+      // the 2-core is the triangle, each node of degree 2
       ("kcore", () => KCore.core(bothWays((0L, 2L) +: (0L until 15L).map(i => (i, i + 1))),
-        k = 2), 3L),
+        k = 2), Set((0L, 2L), (1L, 2L), (2L, 2L))),
+      // unit weights: node i is i hops from 0, up to the 8-hop bound
       ("sssp", () => ShortestPaths.bounded(path.withColumn("w", lit(1L)),
-        Seq(0L).toDF("node"), maxHops = 8), 9L))
-    for ((op, run, rows) <- cases) {
+        Seq(0L).toDF("node"), maxHops = 8), (0L to 8L).map(i => (i, i)).toSet))
+    for ((op, run, expected) <- cases) {
       // new persisted RDD ids, not a count: the ContextCleaner may
       // free other suites' RDDs meanwhile
       val before = spark.sparkContext.getPersistentRDDs.keySet
       val out = run()
-      assert(out.count() === rows, op)
+      assert(out.as[(Long, Long)].collect().toSet === expected, op)
       val kept = (spark.sparkContext.getPersistentRDDs -- before).size
       assert(kept <= 1, s"$op: $kept new persisted RDDs: round blocks are leaking")
       Adaptive.release(out)
