@@ -26,7 +26,7 @@ import org.apache.spark.sql.SparkSession
   *
   * [[local]] is the one place a local session's conf is decided. Its
   * users: the test suite (`SparkSpec`, pinned at 4 cores), the
-  * `perfbench` benchmark, the tools under `graft.tools`, `ScaleProbe` and every `*ScaleSmoke` main (sized by
+  * `perfbench` benchmark, the tools under `graft.tools` and the scale cases' `ScaleCases` main (sized by
   * [[defaultCores]]). `Bench` and `Verify` are the measurement harness
   * and build their own session, kept unchanged so their timings and
   * outputs stay comparable across rounds.

@@ -6,12 +6,9 @@ import org.apache.spark.scheduler.SparkListenerEvent
 import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
 
-/** Shared plumbing of the `*ScaleSmoke` mains (and the specs):
-  * wall-clock timing, the listener events a run posted, fixed-digit
-  * JSON numbers and the one-line artifact each smoke writes. Artifacts
-  * land in the CURRENT directory, so run smokes from a scratch
-  * checkout when the committed `BENCH_SCALE_*.json` files must stay as
-  * captured. */
+/** Shared plumbing of the scale cases ([[ScaleCases]]) and the specs:
+  * wall-clock timing, scratch directories and the listener events a
+  * run posted. */
 object Smoke {
 
   /** `f`'s result and its wall time in seconds. */
@@ -24,6 +21,14 @@ object Smoke {
   def warmMin(f: => Any): Double = {
     f
     (1 to 2).map(_ => time(f)._2).min
+  }
+
+  /** `f` over a fresh scratch directory, deleted afterwards whether `f`
+    * returns or throws: generated inputs are gigabytes at scale. */
+  def withTempDir[T](prefix: String)(f: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try f(dir.toString)
+    finally new scala.reflect.io.Directory(dir.toFile).deleteRecursively()
   }
 
   /** `f`'s result and every listener event posted while it ran. The
@@ -42,19 +47,5 @@ object Smoke {
   def rounds[T](spark: SparkSession)(f: => T): (T, Seq[Adaptive.RoundsRun]) = {
     val (out, posted) = events(spark)(f)
     (out, posted.collect { case r: Adaptive.RoundsRun => r })
-  }
-
-  /** `v` with `digits` decimals. Locale.ROOT: a comma-decimal default
-    * locale would render 77,70 and break the JSON artifact. */
-  def fmt(v: Double, digits: Int): String =
-    String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(v))
-  def fmt2(v: Double): String = fmt(v, 2)
-  def fmt3(v: Double): String = fmt(v, 3)
-
-  /** Print the artifact's JSON line and write it to `file` in the
-    * current directory. */
-  def artifact(file: String, json: String): Unit = {
-    println(json)
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(file), json)
   }
 }

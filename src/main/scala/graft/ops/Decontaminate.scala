@@ -64,7 +64,7 @@ object Decontaminate {
     * undersizing only raises the false-positive rate (more survivors
     * reach the verify join), never changes the answer.
     *
-    * Scale pin (r18, `SqlScaleSmoke decontam 10`, BENCH_SCALE_DECONTAM
+    * Scale pin (r18, scale case `decontam`, BENCH_SCALE_DECONTAM
     * .json): at 10x corpus the Bloom BUILD is scale-flat (0.30 → 0.16
     * s — probe-set-sized by design), the corpus gram stream is the
     * linear part (0.30 → 1.65 s, 5.5x on 10x data — sublinear), and

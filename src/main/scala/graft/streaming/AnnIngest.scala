@@ -239,7 +239,7 @@ object AnnIngest {
     }
 
   /** One micro-batch; factored out so tests and the batch index-build
-    * path (AnnScaleSmoke) can drive it directly. */
+    * path (the `ann*` scale cases) can drive it directly. */
   private[graft] def processBatch(batch: DataFrame, centroids: DataFrame,
                                       idCol: String, vecCol: String,
                                       indexPath: String, runId: String,

@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming SEMANTIC-dedup ingest: text → document embedding →
   * growing IVF index, closing the streaming counterpart of the batch
-  * text→SGNS→docEmbeddings→ANN path ([[graft.TextVecScaleSmoke]]).
+  * text→SGNS→docEmbeddings→ANN path (the `text2vec` scale case, [[graft.scale.AnnScale.textVec]]).
   *
   * Each arriving micro-batch of (id, text) embeds against a FROZEN
   * (word, embedding, idf-weight) frame

@@ -6,7 +6,8 @@ import scala.jdk.CollectionConverters._
 
 /** Keeps GraftSession.local the one session factory: no main outside
   * the harness (Bench, Verify) builds its own SparkSession, and no spec
-  * builds one or swaps the process-wide default session. A spec that
+  * builds one or swaps the process-wide default session. Keeps the
+  * mains to the harness, two tools and the scale-case runner. A spec that
   * needs its own SQL conf or function registry uses `spark.newSession()`.
   * Source scan only — no Spark. */
 class SessionFactorySpec extends AnyFunSuite {
@@ -33,6 +34,13 @@ class SessionFactorySpec extends AnyFunSuite {
     val allowed = Set("graft/GraftSession.scala", "graft/Bench.scala", "graft/Verify.scala")
     val found = offenders("src/main/scala", Seq(builderCall)).filterNot(allowed)
     assert(found.isEmpty, s"build the session with GraftSession.local instead: $found")
+  }
+
+  test("src/main has five mains: Bench, Verify, PlanDump, Prof and ScaleCases") {
+    val allowed = Set("graft/Bench.scala", "graft/Verify.scala", "graft/tools/PlanDump.scala",
+      "graft/tools/Prof.scala", "graft/ScaleCases.scala")
+    val found = offenders("src/main/scala", Seq("def " + "main(")).filterNot(allowed)
+    assert(found.isEmpty, s"add a scale case to graft.ScaleCases instead of a main: $found")
   }
 
   test("specs neither build a SparkSession nor swap the default session") {
